@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — driver contract: ONE JSON line
@@ -216,7 +218,7 @@ object Bench {
           all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             -1.0
         } finally {
@@ -270,7 +272,7 @@ object Bench {
     // process emits. BenchContractSpec bounds the line at <1.8 KB.
     System.err.println(s"""[bench-diag] {"runs":$runs,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"}""")
     System.err.flush()
-    try spark.stop() catch { case _: Throwable => () }
+    try spark.stop() catch { case NonFatal(_) => () }
     // exit-side external-load sample: mid-run any system-wide measure
     // reads the bench itself, but post-stop this JVM is quiescent
     // again, so a high reading here means external load ran INTO the
@@ -346,7 +348,7 @@ object Bench {
           val bytes =
             try java.nio.file.Files.readAllBytes(f.toPath)
             catch {
-              case scala.util.control.NonFatal(e) =>
+              case NonFatal(e) =>
                 System.err.println(
                   s"[bench-diag] adjudication medians artifact $f unreadable " +
                     s"(${e.getClass.getSimpleName}) — adjudication disarmed")
@@ -359,7 +361,7 @@ object Bench {
               s"(${parsed.size} queries${if (parsed.isEmpty) " — sf mismatch or unparsable, adjudication disarmed" else ""})")
           parsed
       }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
   /** `{"queries":{name:{"med":x,…},…},…}` → name → med, provided the
     * artifact's "sf" matches this run's (empty otherwise). Jackson
@@ -380,7 +382,7 @@ object Bench {
         if (med > 0) out(e.getKey) = med
       }
       out.toMap
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
 
   private def fmt(d: Double): String =
@@ -472,7 +474,7 @@ object Bench {
         if (dt <= 0) -1.0 else 1.0 - (i1 - i0) / dt
       }
       fracs.max
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** First three fields of /proc/loadavg (1/5/15-min), or "" off-Linux.
     * Sampled before and after the run so a grading artifact recorded
@@ -483,5 +485,5 @@ object Bench {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split("\\s+").take(3).mkString(" ")
       finally src.close()
-    } catch { case _: Throwable => "" }
+    } catch { case NonFatal(_) => "" }
 }

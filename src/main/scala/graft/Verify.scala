@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -35,18 +36,19 @@ object Verify {
     // spent 40 of its 331 s on q_recommend_charts alone; front-loading
     // the known-expensive names means any future dump-budget squeeze
     // truncates only the cheap tail, never the queries that cost the
-    // most to re-dump. Order within each class is the declaration
-    // order (stable), so the manifest stays comparable.
+    // most to re-dump. The order is (dumpFirst index, name):
+    // SparkEntry.queries is a hash map, so its own iteration order is
+    // not a specification.
     val dumpFirst = Seq("q_recommend_charts", "q_coret_umap", "q_coret_tsne",
       "q_coret_lda", "q_scagnostics", "q_coret_dbscan")
     val ordered = attempted.toSeq.sortBy { case (name, _) =>
-      val i = dumpFirst.indexOf(name); if (i >= 0) i else dumpFirst.size
+      val i = dumpFirst.indexOf(name); (if (i >= 0) i else dumpFirst.size, name)
     }
     ordered.foreach { case (name, fn) =>
       val tq = System.nanoTime()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

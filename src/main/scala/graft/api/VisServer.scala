@@ -25,7 +25,9 @@ import scala.jdk.CollectionConverters._
   *    sheet (the reference's global `sheet`, main.py:25,48 — here an
   *    AtomicReference so the shim is at least swap-safe).
   *  - POST /vis/search {charts?:[…], beautify?:bool} → recommended
-  *    charts with scores, channel lineage ids, and data (main.py:76-109).
+  *    charts with scores, channel lineage ids, and data (main.py:76-109),
+  *    plus the search's wall ms per phase ("phases") and its count of
+  *    failed tpath executions ("failed_tpaths").
   *  - POST /vis/addT   {lineage:"…", t:{op,…}} → new lineage id +
   *    preview rows (main.py:111-124).
   *  - POST /vis/addV   {lineage:"…", coret:"…"} → terminal transform
@@ -133,6 +135,9 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
       }
     }
     out.set[JsonNode]("graph", mapper.readTree(rec.graphJson))
+    val phases = out.putObject("phases")
+    rec.phasesMs.foreach { case (p, ms) => phases.put(p, ms) }
+    out.put("failed_tpaths", rec.failedTpaths)
     out
   }
 

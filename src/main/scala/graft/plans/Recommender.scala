@@ -27,7 +27,12 @@ final case class ChartRec(
     dedupKey: String,
     data: Seq[Map[String, Any]])
 
-final case class Recommendation(visList: Seq[ChartRec], graphJson: String)
+/** @param phasesMs    wall milliseconds per search phase, in pipeline
+  *                    order ([[Recommender.Phases]]); a phase's time
+  *                    excludes the phases nested inside it
+  * @param failedTpaths tpath executions that threw and were dropped */
+final case class Recommendation(visList: Seq[ChartRec], graphJson: String,
+                                phasesMs: Seq[(String, Double)], failedTpaths: Int)
 
 /** The five-phase search pipeline (SURVEY §3.2): presearch (tpath
   * enumeration per core transform), stree channel matching,
@@ -41,8 +46,11 @@ final case class Recommendation(visList: Seq[ChartRec], graphJson: String)
   *    search.py:293-298);
   *  - the reference's per-core-T OS processes (search.py:55-63)
   *    disappear: Spark's scheduler is the parallelism substrate;
-  *  - chart data is bounded (`maxChartRows`) before driver-side
-  *    scoring, so scoring cost is independent of table size.
+  *  - scoring collects only the columns it scores, bounded by
+  *    `maxChartRows`, so scoring cost is independent of table size;
+  *  - chart data (the joined channel frames) is built only for the
+  *    charts that survive dedup and top-k — never for the candidates
+  *    the ranking drops.
   */
 object Recommender {
 
@@ -83,6 +91,28 @@ object Recommender {
       val derived = tpath.steps.flatMap(_.outName).toSet
       outCols.filter(derived.contains) ++ outCols.filterNot(derived.contains)
     }
+  }
+
+  /** The search phases [[Recommendation.phasesMs]] reports:
+    *  - enumerate: tpath pools and per-channel candidate selection;
+    *  - execute: time blocked on tpath executions;
+    *  - score: candidate collects plus scagnostics / significance;
+    *  - render: chart data of the top-k survivors;
+    *  - rank: dedup, top-k and the provenance graph. */
+  val Phases: Seq[String] = Seq("enumerate", "execute", "score", "render", "rank")
+
+  /** A scored candidate chart: everything but its data, which only
+    * the top-k survivors get ([[render]]). */
+  private final case class Scored(chartType: String, chans: Map[String, Executed], score: Double) {
+    def signature: String = chartType + "::" + chans.toSeq.sortBy(_._1)
+      .map { case (ch, ex) => s"$ch=${ex.coreT}:${ex.tpath.fingerprint}" }.mkString("|")
+    /** The reference's duplicate-removal key: op names only, per
+      * channel (search.py:1286-1290 joins t["t"]/t["name"], never the
+      * columns). */
+    def dedupKey: String = chartType + "::" + chans.toSeq.sortBy(_._1)
+      .map { case (ch, ex) =>
+        s"$ch=${(ex.tpath.steps.map(_.op) :+ ex.coreT).mkString(" ")}"
+      }.mkString("|")
   }
 
   /** Dimension-reduction / clustering core Ts: shared tpath enumeration
@@ -149,9 +179,25 @@ object Recommender {
     // the source frame feeds every (coreT, tpath) execution — keep it hot
     df.persist()
 
+    // exclusive wall time per phase: entering a nested phase pauses the
+    // enclosing one (candidate selection runs inside the score loops)
+    val phaseNs = mutable.Map(Phases.map(_ -> 0L): _*)
+    var open = List.empty[String]
+    var since = System.nanoTime()
+    def phase[A](name: String)(body: => A): A = {
+      def switchTo(next: List[String]): Unit = {
+        val now = System.nanoTime()
+        open.headOption.foreach(p => phaseNs(p) += now - since)
+        since = now
+        open = next
+      }
+      switchTo(name :: open)
+      try body finally switchTo(open.tail)
+    }
+
     // ── presearch: enumerate pools, shared across DM core Ts
     //    (threadsharing, T.py:192-199) ─────────────────────────────────
-    val dmShared = Enumerator.dedupe(Enumerator.enumerate(profile, "pca", cfg))
+    val dmShared = phase("enumerate")(Enumerator.dedupe(Enumerator.enumerate(profile, "pca", cfg)))
     def pool(t: String): Seq[TPathCandidate] =
       if (dmTs.contains(t)) dmShared
       else Enumerator.dedupe(Enumerator.enumerate(profile, t, cfg))
@@ -175,6 +221,7 @@ object Recommender {
     // failed tpath and moves on) but never silent: the FIRST failure
     // per core T reaches `onExecutionFailure` (default: slf4j warn)
     val failureReported = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val failures = new java.util.concurrent.atomic.AtomicInteger()
     def executeF(coreT: String, tp: TPathCandidate): Future[Option[Executed]] =
       memo.synchronized {
         memo.getOrElseUpdate(s"$coreT :: ${tp.fingerprint}", Future {
@@ -187,6 +234,7 @@ object Recommender {
             Executed(coreT, tp, out, outCols)
           } catch {
             case e: Exception =>
+              failures.incrementAndGet()
               if (failureReported.add(coreT)) onExecutionFailure(coreT, tp.fingerprint, e)
               None
           }
@@ -263,7 +311,7 @@ object Recommender {
       candCache.getOrElseUpdate((dim, ctype), candidatesUncached(dim, ctype))
     def candidatesUncached(dim: Option[Int], ctype: String): Seq[Executed] = {
       val ts = if (ctype == "num") Enumerator.numTl else Enumerator.catTl
-      val work: Seq[(String, TPathCandidate)] =
+      val work: Seq[(String, TPathCandidate)] = phase("enumerate") {
         ts.filter(t => allowedTs.forall(_.contains(t)))
           .filter(t => embedOk || (t != "tsne" && t != "umap")).flatMap { t =>
           val perT = if (dmTs.contains(t)) 3 else maxCandidatesPerChannel
@@ -272,8 +320,9 @@ object Recommender {
             .filter(tp => predictedDim(t, tp).forall(d => dim.forall(_ == d)))
             .take(perT).map(t -> _)
         }
-      val gathered = Await.result(
-        Future.sequence(work.map { case (t, tp) => executeF(t, tp) }), cfg.searchTimeout)
+      }
+      val gathered = phase("execute")(Await.result(
+        Future.sequence(work.map { case (t, tp) => executeF(t, tp) }), cfg.searchTimeout))
       val ok = gathered.flatten.filter { ex =>
         dim.forall(_ == ex.outCols.size) && ex.outCols.nonEmpty
       }
@@ -299,12 +348,12 @@ object Recommender {
         .na.drop().limit(maxChartRows).collect()
         .map(r => (r.getDouble(0), r.getDouble(1)))
 
-    val recs = mutable.ArrayBuffer[ChartRec]()
+    val scored = mutable.ArrayBuffer[Scored]()
 
     val enabledTypes = charts.flatMap(chartFamilies(cfg.catLine).getOrElse(_, Nil))
 
     try {
-
+    phase("score") {
     // ── scatter families ─────────────────────────────────────────────
     if (enabledTypes.contains("num_scatter") || enabledTypes.contains("cat_scatter")) {
       val xys = candidates(Some(2), "num")
@@ -329,10 +378,10 @@ object Recommender {
           ).collect { case (n, v) if enabled(n) => v() }
           if (enabledTypes.contains("num_scatter")) {
             for (c <- numColors.filter(aligned(xy, _)).take(3)) {
-              recs += chartRec("num_scatter", Map("xy" -> xy, "color" -> c), meanOf(base), maxChartRows, key)
+              scored += Scored("num_scatter", Map("xy" -> xy, "color" -> c), meanOf(base))
             }
             if (numColors.isEmpty)
-              recs += chartRec("num_scatter", Map("xy" -> xy), meanOf(base), maxChartRows, key)
+              scored += Scored("num_scatter", Map("xy" -> xy), meanOf(base))
           }
           if (enabledTypes.contains("cat_scatter")) {
             for (c <- catColors.filter(aligned(xy, _)).take(3)) {
@@ -357,8 +406,7 @@ object Recommender {
                   }
                 val withCdm =
                   if (enabled("sca_cdm")) base :+ Scagnostics.cdm(pts2, labels) else base
-                recs += chartRec("cat_scatter", Map("xy" -> xy, "color" -> c),
-                  meanOf(withCdm), maxChartRows, key)
+                scored += Scored("cat_scatter", Map("xy" -> xy, "color" -> c), meanOf(withCdm))
               }
             }
           }
@@ -377,8 +425,7 @@ object Recommender {
         if (rows.length >= 3) {
           val cols = series.indices.map(i => rows.map(_.getDouble(i)).toArray).toArray
           if (enabledTypes.contains("ord_line")) {
-            recs += chartRec("ord_line", Map("y" -> y),
-              lineScore(cols.toSeq), maxChartRows, key)
+            scored += Scored("ord_line", Map("y" -> y), lineScore(cols.toSeq))
           }
         }
       }
@@ -395,8 +442,7 @@ object Recommender {
           if (joined.length >= 3) {
             val ySeries = (1 until joined.head.length)
               .map(i => joined.map(_.getDouble(i)).toArray).toSeq
-            recs += chartRec("rel_line", Map("x" -> x, "y" -> y),
-              lineScore(ySeries), maxChartRows, key)
+            scored += Scored("rel_line", Map("x" -> x, "y" -> y), lineScore(ySeries))
           }
         }
       }
@@ -418,8 +464,7 @@ object Recommender {
           val labels = y.df.select(col(y.outCols.head).cast("string"))
             .na.drop().limit(maxChartRows).collect().map(_.getString(0))
           if (labels.length >= 3) {
-            recs += chartRec("ord_cat_line", Map("y" -> y),
-              catLineScore(codesOf(labels)), maxChartRows, key)
+            scored += Scored("ord_cat_line", Map("y" -> y), catLineScore(codesOf(labels)))
           }
         }
         if (enabledTypes.contains("rel_cat_line")) {
@@ -429,8 +474,8 @@ object Recommender {
               .select(col(y.outCols.head).cast("string"))
               .limit(maxChartRows).collect().map(_.getString(0))
             if (joined.length >= 3) {
-              recs += chartRec("rel_cat_line", Map("x" -> x, "y" -> y),
-                catLineScore(codesOf(joined)), maxChartRows, key)
+              scored += Scored("rel_cat_line", Map("x" -> x, "y" -> y),
+                catLineScore(codesOf(joined)))
             }
           }
         }
@@ -459,8 +504,7 @@ object Recommender {
             if (agg.length >= 2) {
               val sums = series.indices.map(i =>
                 agg.map(r => Option(r.get(i + 1)).map(_.toString.toDouble).getOrElse(0.0)).toArray)
-              recs += chartRec("sum_bar", Map("x" -> x, "y" -> y),
-                lineScore(sums), maxChartRows, key)
+              scored += Scored("sum_bar", Map("x" -> x, "y" -> y), lineScore(sums))
             }
           }
         }
@@ -469,12 +513,12 @@ object Recommender {
             .orderBy(col(xCol)).limit(maxChartRows).collect()
           if (agg.length >= 2) {
             val counts = agg.map(_.getLong(1).toDouble)
-            recs += chartRec("count_bar", Map("x" -> x),
-              lineScore(Seq(counts)), maxChartRows, key)
+            scored += Scored("count_bar", Map("x" -> x), lineScore(Seq(counts)))
           }
         }
       }
     }
+    } // score
 
     // ── sort, dedup, top-k per FAMILY buffer (search.py:1261-1299):
     //    the reference pools num+cat scatter into ONE "scatter" buffer
@@ -490,16 +534,20 @@ object Recommender {
       "cat_line" -> cfg.maxCatLine, "sum_bar" -> cfg.maxSumBar,
       "count_bar" -> cfg.maxCountBar)
     val seen = mutable.Set[String]()
-    val topk = recs.toSeq.groupBy(c => family.getOrElse(c.chartType, c.chartType))
-      .toSeq.sortBy(_._1).flatMap { case (fam, group) =>
-        // first-wins on the coarse dedupKey (higher score survives —
-        // the buffer is sorted before removal, search.py:1267-1272)
-        val deduped = group.sortBy(-_.score).filter(r => seen.add(r.dedupKey))
-        deduped.take(math.min((deduped.size * cfg.recommendPct).toInt + 1,
-          famCaps.getOrElse(fam, 3)))
-      }
+    val survivors = phase("rank") {
+      scored.toSeq.groupBy(c => family.getOrElse(c.chartType, c.chartType))
+        .toSeq.sortBy(_._1).flatMap { case (fam, group) =>
+          // first-wins on the coarse dedupKey (higher score survives —
+          // the buffer is sorted before removal, search.py:1267-1272)
+          val deduped = group.sortBy(-_.score).filter(r => seen.add(r.dedupKey))
+          deduped.take(math.min((deduped.size * cfg.recommendPct).toInt + 1,
+            famCaps.getOrElse(fam, 3)))
+        }
+    }
+    val topk = phase("render")(survivors.map(render(_, maxChartRows, key)))
+    val graph = phase("rank")(ProvenanceGraph.render(topk))
 
-    Recommendation(topk, ProvenanceGraph.render(topk))
+    Recommendation(topk, graph, Phases.map(p => p -> phaseNs(p) / 1e6), failures.get)
     } finally {
       // always release resources — a failed assembly must not leak the
       // persisted source frame or the executor pool
@@ -508,36 +556,24 @@ object Recommender {
     }
   }
 
-  private def chartRec(chartType: String, chans: Map[String, Executed],
-                       score: Double, maxRows: Int, key: Seq[String]): ChartRec = {
-    val channels = chans.map { case (ch, ex) => ch -> s"${ex.coreT} | ${ex.tpath.fingerprint}" }
-    val columns = chans.map { case (ch, ex) => ch -> ex.outCols }
-    val sig = chartType + "::" + chans.toSeq.sortBy(_._1)
-      .map { case (ch, ex) => s"$ch=${ex.coreT}:${ex.tpath.fingerprint}" }.mkString("|")
-    // the reference's duplicate-removal key: op names only, per channel
-    // (search.py:1286-1290 joins t["t"]/t["name"], never the columns)
-    val dedupKey = chartType + "::" + chans.toSeq.sortBy(_._1)
-      .map { case (ch, ex) =>
-        s"$ch=${(ex.tpath.steps.map(_.op) :+ ex.coreT).mkString(" ")}"
-      }.mkString("|")
-    // data = the JOINED all-channels frame (key + every channel's
-    // output columns, right-side collisions renamed `__y` like
-    // Engine.buildChart), capped at maxRows — previously this was 20
-    // raw rows of the FIRST channel only (no y values for a bar/line
-    // chart) and the maxRows argument was dead, so ChartRec.data
-    // could not render the chart it described
-    val chanSeq = chans.toSeq
+  /** A survivor's chart data: the JOINED all-channels frame (key +
+    * every channel's output columns, right-side collisions renamed
+    * `__y` like Engine.buildChart), capped at maxRows. */
+  private def render(c: Scored, maxRows: Int, key: Seq[String]): ChartRec = {
+    val channels = c.chans.map { case (ch, ex) => ch -> s"${ex.coreT} | ${ex.tpath.fingerprint}" }
+    val columns = c.chans.map { case (ch, ex) => ch -> ex.outCols }
+    val chanSeq = c.chans.toSeq
     val (joined, dataCols) = chanSeq.tail.foldLeft(
         (chanSeq.head._2.df, chanSeq.head._2.outCols)) { case ((l, acc), (_, ex)) =>
       val (j, rc) = joinOnKey(key)(l, ex.df, ex.outCols)
       (j, acc ++ rc)
     }
     val sample = joined
-      .select((key ++ dataCols).distinct.map(org.apache.spark.sql.functions.col): _*)
+      .select((key ++ dataCols).distinct.map(col): _*)
       .limit(maxRows).collect().map { r =>
         r.schema.fieldNames.zip(r.toSeq).toMap
       }.toSeq
-    ChartRec(chartType, channels, columns, score, sig, dedupKey, sample)
+    ChartRec(c.chartType, channels, columns, c.score, c.signature, c.dedupKey, sample)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
-import graft.plans.Recommender
+import graft.operators.TStep
+import graft.plans.{Lineage, Recommender}
 import graft.profiler.Profiler
 
 /** Round-5 search-pipeline guarantees: tsne/umap participate in the
@@ -110,5 +111,48 @@ class RecommenderSearchSpec extends SparkSpec {
     // at most one report per core T (log flooding guard)
     val perT = reported.groupBy(_._1).values.map(_.length)
     assert(perT.forall(_ == 1), reported.mkString(", "))
+    // but the result counts every failed execution
+    assert(rec.failedTpaths >= reported.length, s"${rec.failedTpaths} < ${reported.length}")
   }
+
+  test("survivor data equals the key-join of the replayed channels, capped at maxChartRows") {
+    val (pdf, profile) = Profiler.profile(fixture)
+    val maxChartRows = 4000
+    val rec = Recommender.recommend(pdf, profile, spark, maxChartRows = maxChartRows)
+    assert(rec.visList.map(_.chartType.split("_").last).toSet == Set("scatter", "line", "bar"),
+      rec.visList.map(_.chartType).toString)
+    assert(rec.failedTpaths == 0)
+    val engine = new Engine(spark)
+    val key = profile.keyColumn.toSeq
+    def rowSet(rows: Seq[Map[String, Any]]): Set[Seq[(String, Any)]] =
+      rows.map(_.toSeq.sortBy(_._1)).toSet
+    rec.visList.foreach { c =>
+      assert(c.data.nonEmpty, s"${c.signature}: no data")
+      // each channel replayed from its "coreT | fingerprint" description
+      val frames = c.channels.toSeq.map { case (ch, desc) =>
+        val Array(coreT, fp) = desc.split(" \\| ", 2)
+        val frame = engine.addVisualization(pdf, Lineage.toJson(stepsOf(fp)), coreT,
+          profiled = Some((pdf, profile))).getOrElse(fail(s"${c.signature}: $ch did not replay"))
+        (frame, c.columns(ch))
+      }
+      val (joined, cols) = frames.tail.foldLeft(frames.head) { case ((l, acc), (r, rc)) =>
+        val (j, renamed) = Recommender.joinOnKey(key)(l, r, rc)
+        (j, acc ++ renamed)
+      }
+      val expected = joined.select((key ++ cols).distinct.map(joined.col): _*)
+        .limit(maxChartRows).collect().map(r => r.schema.fieldNames.zip(r.toSeq).toMap).toSeq
+      assert(c.data.size <= maxChartRows)
+      assert(rowSet(c.data) == rowSet(expected), s"${c.signature}: data differs from the replay")
+    }
+  }
+
+  /** Inverse of TPathCandidate.fingerprint: steps
+    * `op#inType#inCols#outMode#outName` joined by " - ". */
+  private def stepsOf(fp: String): Seq[TStep] =
+    if (fp.isEmpty) Nil
+    else fp.split(" - ").toSeq.map { s =>
+      val Array(op, inType, inCols, outMode, outName) = s.split("#", -1)
+      TStep(op, inType, inCols.split(",").toSeq.filter(_.nonEmpty), outMode,
+        Some(outName).filter(_.nonEmpty))
+    }
 }

@@ -3,6 +3,8 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** In-process drive of the four HTTP endpoints (SURVEY §3.1-3.3 /
@@ -52,6 +54,13 @@ class VisServerSpec extends SparkSpec {
     val first = r.get("vislist").get(0)
     assert(first.has("type") && first.has("score") && first.get("data").size() > 0)
     assert(r.get("graph").isObject || r.get("graph").isArray)
+    // the search explains itself: wall ms per phase, tpath failures
+    val phases = r.get("phases")
+    val names = phases.fieldNames().asScala.toSeq
+    assert(names == graft.plans.Recommender.Phases, phases.toString)
+    assert(names.forall(p => phases.get(p).isNumber && phases.get(p).asDouble() >= 0), phases.toString)
+    assert(phases.get("score").asDouble() > 0, phases.toString)
+    assert(r.get("failed_tpaths").isInt && r.get("failed_tpaths").asInt() >= 0, r.toString)
   }
 
   test("POST /vis/search honors tlist restriction and cluster overrides (main.py:91-99)") {
