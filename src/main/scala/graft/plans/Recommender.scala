@@ -1,9 +1,11 @@
 package graft.plans
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.{EngineConfig, TableProfile}
 import graft.operators.{ChartAssembly, CoreT, TStep}
@@ -48,6 +50,14 @@ final case class Recommendation(visList: Seq[ChartRec], graphJson: String,
   *    disappear: Spark's scheduler is the parallelism substrate;
   *  - scoring collects only the columns it scores, bounded by
   *    `maxChartRows`, so scoring cost is independent of table size;
+  *  - each scatter xy candidate is read once (key + both columns, the
+  *    first `maxChartRows` complete rows) and each categorical color
+  *    once, for the keys of the xy samples that pick it (at most
+  *    #xys × `maxChartRows` rows). CDM is a driver-side key lookup over
+  *    the xy sample: it scores the labelled subset of the points
+  *    scagnostics scored. When an xy's complete rows fit in
+  *    `maxChartRows`, that subset is exactly the xy ⋈ color join;
+  *    above it, CDM sees the sample's points, not a different N;
   *  - chart data (the joined channel frames) is built only for the
   *    charts that survive dedup and top-k — never for the candidates
   *    the ranking drops.
@@ -343,10 +353,36 @@ object Recommender {
         a.tpath.fingerprint == b.tpath.fingerprint
       else true
 
-    def collect2(ex: Executed, cols: Seq[String]): Array[(Double, Double)] =
-      ex.df.select(cols.map(c => col(c).cast("double")): _*)
-        .na.drop().limit(maxChartRows).collect()
-        .map(r => (r.getDouble(0), r.getDouble(1)))
+    /** One bounded read per xy candidate: the key plus the two xy
+      * columns as doubles, complete in those two columns, first
+      * `maxChartRows` rows. The points feed scagnostics; the keys let
+      * cat_scatter CDM label the same points by lookup. */
+    final case class XySample(keys: Array[Row], pts: Array[(Double, Double)])
+    def keyOf(r: Row): Row = Row.fromSeq(key.indices.map(r.get))
+    def sampleXy(xy: Executed): XySample = {
+      val rows = xy.df.select(key.map(col) ++ Seq(
+          col(xy.outCols(0)).cast("double").as("__x"),
+          col(xy.outCols(1)).cast("double").as("__y")): _*)
+        .na.drop(Seq("__x", "__y")).limit(maxChartRows).collect()
+      XySample(rows.map(keyOf),
+        rows.map(r => (r.getDouble(key.size), r.getDouble(key.size + 1))))
+    }
+
+    /** One read per cat color: (key → labels as strings), non-null
+      * labels only, restricted by a broadcast left-semi join to `keys`
+      * (the samples of the xys that pick this color), so it returns at
+      * most #xys × `maxChartRows` rows. A multimap, so a non-unique key
+      * labels a point once per match, like an inner join would. */
+    def readLabels(c: Executed, keys: Seq[Row]): Map[Row, Seq[String]] = {
+      val label = c.outCols.head
+      val wanted = spark.createDataFrame(keys.filterNot(_.anyNull).asJava,
+        StructType(key.map(c.df.schema(_))))
+      c.df.select(key.map(col) :+ col(label): _*).na.drop()
+        .join(broadcast(wanted), key, "left_semi")
+        .select(key.map(col) :+ col(label).cast("string"): _*)
+        .collect().toSeq
+        .groupMap(keyOf)(_.getString(key.size))
+    }
 
     val scored = mutable.ArrayBuffer[Scored]()
 
@@ -359,56 +395,48 @@ object Recommender {
       val xys = candidates(Some(2), "num")
       val numColors = candidates(Some(1), "num")
       val catColors = candidates(Some(1), "cat")
-      for (xy <- xys) {
-        val pts = collect2(xy, xy.outCols)
-        if (pts.length >= Scagnostics.DotNumLimit) {
-          val g = new Scagnostics.Graph(pts)
-          // per-flag metric selection (search.py:763-792); striated is
-          // in the reference's default slist (score.py:21), so it is
-          // default-enabled here too (round-6 parity fix — the golden
-          // pin was regenerated with it)
-          val base = Seq(
-            "sca_outlying" -> (() => g.outlying),
-            "sca_skewed" -> (() => 100 - g.skewed),
-            "sca_striated" -> (() => g.striated),
-            "sca_stringy" -> (() => g.stringy),
-            "sca_straight" -> (() => g.straight),
-            "sca_clumpy" -> (() => 100 - g.clumpy),
-            "sca_monotonic" -> (() => g.monotonic)
-          ).collect { case (n, v) if enabled(n) => v() }
-          if (enabledTypes.contains("num_scatter")) {
-            for (c <- numColors.filter(aligned(xy, _)).take(3)) {
-              scored += Scored("num_scatter", Map("xy" -> xy, "color" -> c), meanOf(base))
-            }
-            if (numColors.isEmpty)
-              scored += Scored("num_scatter", Map("xy" -> xy), meanOf(base))
+      val samples = xys.map(xy => xy -> sampleXy(xy))
+        .filter(_._2.pts.length >= Scagnostics.DotNumLimit)
+      def catPicks(xy: Executed): Seq[Executed] =
+        if (enabledTypes.contains("cat_scatter")) catColors.filter(aligned(xy, _)).take(3)
+        else Nil
+      // each picked color is read once, for the union of its xys' keys
+      val labelsOf = samples.flatMap { case (xy, s) => catPicks(xy).map(_ -> s.keys) }
+        .groupMap(_._1)(_._2).map { case (c, ks) => c -> readLabels(c, ks.flatten.distinct) }
+      for ((xy, s) <- samples) {
+        val g = new Scagnostics.Graph(s.pts)
+        // per-flag metric selection (search.py:763-792); striated is
+        // in the reference's default slist (score.py:21), so it is
+        // default-enabled here too (round-6 parity fix — the golden
+        // pin was regenerated with it)
+        val base = Seq(
+          "sca_outlying" -> (() => g.outlying),
+          "sca_skewed" -> (() => 100 - g.skewed),
+          "sca_striated" -> (() => g.striated),
+          "sca_stringy" -> (() => g.stringy),
+          "sca_straight" -> (() => g.straight),
+          "sca_clumpy" -> (() => 100 - g.clumpy),
+          "sca_monotonic" -> (() => g.monotonic)
+        ).collect { case (n, v) if enabled(n) => v() }
+        if (enabledTypes.contains("num_scatter")) {
+          for (c <- numColors.filter(aligned(xy, _)).take(3)) {
+            scored += Scored("num_scatter", Map("xy" -> xy, "color" -> c), meanOf(base))
           }
-          if (enabledTypes.contains("cat_scatter")) {
-            for (c <- catColors.filter(aligned(xy, _)).take(3)) {
-              // CDM needs the label column joined on the key
-              val joined = xy.df.join(c.df, key).na.drop()
-                .select((xy.outCols.map(cc => col(cc).cast("double")) :+
-                  col(c.outCols.head).cast("string")): _*)
-                .limit(maxChartRows).collect()
-              if (joined.nonEmpty) {
-                val pts2 = joined.map(r => (r.getDouble(0), r.getDouble(1)))
-                val labelStrs = joined.map(_.getString(2))
-                // numeric labels (kmeans/dbscan) keep their values so
-                // DBSCAN's -1 outliers stay negative and are skipped by
-                // the CDM histograms (score.py:61-70 convention);
-                // string categories get sorted-distinct codes
-                val labels: Array[Long] =
-                  if (labelStrs.forall(s => scala.util.Try(s.toLong).isSuccess))
-                    labelStrs.map(_.toLong)
-                  else {
-                    val codes = labelStrs.distinct.sorted.zipWithIndex.toMap
-                    labelStrs.map(s => codes(s).toLong)
-                  }
-                val withCdm =
-                  if (enabled("sca_cdm")) base :+ Scagnostics.cdm(pts2, labels) else base
-                scored += Scored("cat_scatter", Map("xy" -> xy, "color" -> c), meanOf(withCdm))
-              }
-            }
+          if (numColors.isEmpty)
+            scored += Scored("num_scatter", Map("xy" -> xy), meanOf(base))
+        }
+        for (c <- catPicks(xy)) {
+          // CDM scores the labelled subset of the points scagnostics
+          // scored: each sample point once per label of its key
+          val byKey = labelsOf(c)
+          val labelled = s.keys.indices.flatMap(i =>
+            byKey.getOrElse(s.keys(i), Nil).map(s.pts(i) -> _))
+          if (labelled.nonEmpty) {
+            val withCdm =
+              if (enabled("sca_cdm"))
+                base :+ cdmOf(labelled.map(_._1).toArray, labelled.map(_._2).toArray)
+              else base
+            scored += Scored("cat_scatter", Map("xy" -> xy, "color" -> c), meanOf(withCdm))
           }
         }
       }
@@ -554,6 +582,20 @@ object Recommender {
       execPool.shutdown()
       df.unpersist()
     }
+  }
+
+  /** CDM of labelled points (score.py:61-70). Numeric labels
+    * (kmeans/dbscan) keep their values, so DBSCAN's -1 outliers stay
+    * negative and the CDM histograms skip them; string categories get
+    * sorted-distinct codes. */
+  private[graft] def cdmOf(pts: Array[(Double, Double)], labelStrs: Array[String]): Double = {
+    val labels: Array[Long] =
+      if (labelStrs.forall(s => scala.util.Try(s.toLong).isSuccess)) labelStrs.map(_.toLong)
+      else {
+        val codes = labelStrs.distinct.sorted.zipWithIndex.toMap
+        labelStrs.map(s => codes(s).toLong)
+      }
+    Scagnostics.cdm(pts, labels)
   }
 
   /** A survivor's chart data: the JOINED all-channels frame (key +

@@ -74,17 +74,23 @@ object Tables {
     * filters/pruning still push through a repartition to the scan.
     *
     * The scan-partition probe (`df.rdd.getNumPartitions`) eagerly
-    * builds the physical scan plan, so its result is memoized per
-    * (path, parallelism) for the session's lifetime (round-15 advice):
-    * it is a fact about the INPUT file layout — the same class of
-    * metadata Spark's own file-index cache holds — never a computed
-    * result, and it cannot change under a fixed path within a run.
+    * builds the physical scan plan, so its result is memoized: it is a
+    * fact about the INPUT file layout — the same class of metadata
+    * Spark's own file-index cache holds — never a computed result. The
+    * memo key is the layout itself (path, file count, total length,
+    * latest modification time) plus the parallelism, read with one
+    * listing per load, so a file rewritten at the same path is probed
+    * again.
     */
   private val scanParts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def spreadScan(spark: SparkSession, df: DataFrame,
                          path: String, key: String): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val parts = scanParts.computeIfAbsent(s"$path|$target",
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+    val layout = s"${files.length}|${files.map(_.getLen).sum}|" +
+      files.map(_.getModificationTime).maxOption.getOrElse(0L)
+    val parts = scanParts.computeIfAbsent(s"$path|$layout|$target",
       _ => Integer.valueOf(df.rdd.getNumPartitions)).intValue()
     if (parts >= target) df
     else df.repartition(target, col(key))

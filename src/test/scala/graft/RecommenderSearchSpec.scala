@@ -1,5 +1,13 @@
 package graft
 
+import org.apache.spark.SpecBus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.operators.TStep
 import graft.plans.{Lineage, Recommender}
 import graft.profiler.Profiler
@@ -128,12 +136,8 @@ class RecommenderSearchSpec extends SparkSpec {
       rows.map(_.toSeq.sortBy(_._1)).toSet
     rec.visList.foreach { c =>
       assert(c.data.nonEmpty, s"${c.signature}: no data")
-      // each channel replayed from its "coreT | fingerprint" description
       val frames = c.channels.toSeq.map { case (ch, desc) =>
-        val Array(coreT, fp) = desc.split(" \\| ", 2)
-        val frame = engine.addVisualization(pdf, Lineage.toJson(stepsOf(fp)), coreT,
-          profiled = Some((pdf, profile))).getOrElse(fail(s"${c.signature}: $ch did not replay"))
-        (frame, c.columns(ch))
+        (replay(engine, pdf, profile, desc), c.columns(ch))
       }
       val (joined, cols) = frames.tail.foldLeft(frames.head) { case ((l, acc), (r, rc)) =>
         val (j, renamed) = Recommender.joinOnKey(key)(l, r, rc)
@@ -144,6 +148,118 @@ class RecommenderSearchSpec extends SparkSpec {
       assert(c.data.size <= maxChartRows)
       assert(rowSet(c.data) == rowSet(expected), s"${c.signature}: data differs from the replay")
     }
+  }
+
+  /** [[fixture]] plus three nominal columns, so cat_scatter colors come
+    * from the passthroughs as well as kmeans, dbscan and lda. */
+  private def nominalFixture = (1 to 60).map { i =>
+    (s"id$i", i * 1.0, math.sin(i * 0.5) * 20 + 30, 120.0 - 2.0 * i,
+      Seq("red", "green", "blue")(i % 3), if (i % 4 < 2) "lo" else "hi",
+      Seq("x", "y", "z")(i * 7 / 5 % 3))
+  }.toDF("name", "a v", "b v", "c v", "tint", "band", "grade")
+
+  /** A channel's frame, replayed from its "coreT | fingerprint" description. */
+  private def replay(engine: Engine, pdf: DataFrame, profile: TableProfile,
+                     desc: String): DataFrame = {
+    val Array(coreT, fp) = desc.split(" \\| ", 2)
+    engine.addVisualization(pdf, Lineage.toJson(stepsOf(fp)), coreT,
+      profiled = Some((pdf, profile))).getOrElse(fail(s"$desc did not replay"))
+  }
+
+  test("cat_scatter CDM: the xy ⋈ color join when rows fit, the labelled xy sample above") {
+    val (pdf, profile) = Profiler.profile(nominalFixture)
+    val key = profile.keyColumn.toSeq
+    val engine = new Engine(spark)
+    // with only sca_cdm enabled a cat_scatter's score IS its CDM; a wide
+    // family cap keeps every deduplicated candidate in the result. The
+    // default tlist colors by kmeans/dbscan/lda (the first three cat
+    // candidates); tlist = pca leaves the nominal passthroughs.
+    def cdmScatters(maxChartRows: Int) = Seq(None, Some(Set("pca"))).flatMap(tlist =>
+      Recommender.recommend(pdf, profile, spark, EngineConfig(maxScatter = 1000),
+        charts = Seq("scatter"), maxChartRows = maxChartRows, tlist = tlist,
+        slist = Some(Set("sca_cdm"))).visList.filter(_.chartType == "cat_scatter"))
+    def frames(c: graft.plans.ChartRec) = {
+      val Seq(x, y) = c.columns("xy")
+      (replay(engine, pdf, profile, c.channels("xy")), x, y,
+        replay(engine, pdf, profile, c.channels("color")), c.columns("color").head)
+    }
+
+    // every row fits: CDM over the inner join, as a Spark join computes it
+    val full = cdmScatters(4000)
+    assert(Set("kmeans", "dbscan", "lda", "null_nom1").subsetOf(
+      full.map(_.channels("color").split(" ")(0)).toSet), full.map(_.channels("color")))
+    full.foreach { c =>
+      val (xy, x, y, color, label) = frames(c)
+      val joined = xy.join(color, key).na.drop()
+        .select(col(x).cast("double"), col(y).cast("double"), col(label).cast("string"))
+        .limit(4000).collect()
+      assert(joined.nonEmpty)
+      val expected = Recommender.cdmOf(
+        joined.map(r => (r.getDouble(0), r.getDouble(1))), joined.map(_.getString(2)))
+      assert(c.score == expected, c.signature)
+    }
+
+    // 25 of 60 rows: the xy's first 25 complete rows, each labelled by
+    // every non-null label of its key
+    val capped = cdmScatters(25)
+    assert(capped.nonEmpty)
+    capped.foreach { c =>
+      val (xy, x, y, color, label) = frames(c)
+      val sample = xy.select(col(key.head), col(x).cast("double"), col(y).cast("double"))
+        .collect().toSeq
+        .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+        .map(r => (r.get(0), r.getDouble(1), r.getDouble(2)))
+        .filterNot { case (_, a, b) => a.isNaN || b.isNaN }
+        .take(25)
+      val labels = color.select(col(key.head), col(label).cast("string")).collect()
+        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        .groupMap(_.get(0))(_.getString(1))
+      val labelled = sample.flatMap { case (k, a, b) =>
+        labels.getOrElse(k, Array.empty[String]).map(l => ((a, b), l)) }
+      val expected = Recommender.cdmOf(labelled.map(_._1).toArray, labelled.map(_._2).toArray)
+      assert(c.score == expected, c.signature)
+    }
+  }
+
+  test("scatter scoring reads each cat color once instead of joining it to every xy") {
+    val (pdf, profile) = Profiler.profile(nominalFixture)
+    val labelCols = Set("tint", "band", "grade",
+      "Category by KMeans", "Category by DBSCAN", "Category by LDA")
+    def carriesLabel(p: LogicalPlan) = p.output.exists(a => labelCols(a.name))
+    // joins with a color frame on exactly one side
+    def colorJoins(p: LogicalPlan): Seq[Join] = p.collect {
+      case j: Join if carriesLabel(j.left) != carriesLabel(j.right) => j
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val rec = try {
+      Recommender.recommend(pdf, profile, spark, EngineConfig(maxScatter = 1000),
+        charts = Seq("scatter"))
+    } finally {
+      SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val joins = plans.toArray(Array.empty[LogicalPlan]).toSeq.map(colorJoins).filter(_.nonEmpty)
+    val catScatters = rec.visList.filter(_.chartType == "cat_scatter")
+    assert(catScatters.map(_.channels("xy")).distinct.size >= 2,
+      "the guard needs several xys that share colors")
+    // the only xy ⋈ color joins are the survivors' chart data (render)
+    val pairJoins = joins.count(_.exists(_.joinType == Inner))
+    assert(pairJoins <= catScatters.size,
+      s"$pairJoins xy ⋈ color joins for ${catScatters.size} rendered cat_scatters")
+    // scoring reads each color once: a semi join to the xys' keys, one
+    // per distinct color frame
+    val labelReads = joins.filter(_.exists(_.joinType == LeftSemi)).map { js =>
+      js.flatMap(j => Seq(j.left, j.right).filter(carriesLabel)).map(_.canonicalized)
+    }
+    assert(labelReads.nonEmpty)
+    assert(labelReads.distinct.size == labelReads.size,
+      s"${labelReads.size} label reads of ${labelReads.distinct.size} color frames")
   }
 
   /** Inverse of TPathCandidate.fingerprint: steps
