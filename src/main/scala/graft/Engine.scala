@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.TStep
 import graft.plans.{Beautify, Lineage, Recommendation, Recommender}
+import graft.plans.Recommendation.ChannelFrames
 import graft.profiler.Profiler
 
 /** The user-facing API surface — the library analogue of the
@@ -17,6 +18,15 @@ import graft.profiler.Profiler
   * A user of the reference switches by calling these with a DataFrame
   * instead of POSTing a table; an HTTP shim over this object is
   * deployment plumbing, not engine semantics.
+  *
+  * Refines reuse the search's work the way the reference's /vis/addV
+  * works on the search's memoised lineage nodes (search.py:293-298,
+  * main.py:126-138): pass a search's [[Recommendation.frames]] to
+  * [[addVisualization]] / [[buildChart]] and the returned charts'
+  * channels are served from the frames the search executed (fit
+  * included) instead of being replayed and fitted again. The caller
+  * decides how long they live — [[graft.api.VisServer]] keeps them
+  * until the next /vis/search or /vis/csv.
   */
 final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default) {
 
@@ -97,14 +107,33 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
   private def embedSampleAbove: Long =
     if (cfg.searchEmbedTs && cfg.searchEmbedSampleFit) cfg.searchEmbedMaxRows else 0L
 
-  /** Interactive terminal transform on a replayed lineage (§3.3). */
+  /** The channel frame for (lineage, core T): the search's executed
+    * frame when `frames` holds that exact (core T, steps) pair, else a
+    * replay of the lineage and a fresh core-T fit. */
+  private def channelFrame(pdf: DataFrame, prof: TableProfile, lineageJson: String,
+                           coreT: String,
+                           frames: ChannelFrames): Option[DataFrame] =
+    frames.get((coreT, Lineage.fromJson(lineageJson))).orElse(
+      Lineage.addCoreT(pdf, lineageJson, coreT, prof.keyColumn.toSeq, cfg.notCalcuDmT,
+        approxRows = prof.rows, embedSampleAbove = embedSampleAbove,
+        windowRankMaxRows = cfg.windowRankMaxRows,
+        distincts = prof.distinctCounts))
+
+  /** Interactive terminal transform on a replayed lineage (§3.3).
+    *
+    * @param frames a search's [[Recommendation.frames]]: a (core T,
+    *               lineage) pair the search executed for a returned
+    *               chart is served from its frame — the same plan a
+    *               replay builds, without repeating the fit. They are
+    *               only valid for the `source` and profile that search
+    *               ran on; every other lineage (one extended by
+    *               [[addTransform]], say) replays. Empty = always
+    *               replay. */
   def addVisualization(source: DataFrame, lineageJson: String, coreT: String,
-                       profiled: Option[(DataFrame, TableProfile)] = None): Option[DataFrame] = {
+                       profiled: Option[(DataFrame, TableProfile)] = None,
+                       frames: ChannelFrames = Map.empty): Option[DataFrame] = {
     val (pdf, prof) = profileOr(source, profiled)
-    Lineage.addCoreT(pdf, lineageJson, coreT, prof.keyColumn.toSeq, cfg.notCalcuDmT,
-      approxRows = prof.rows, embedSampleAbove = embedSampleAbove,
-      windowRankMaxRows = cfg.windowRankMaxRows,
-      distincts = prof.distinctCounts)
+    channelFrame(pdf, prof, lineageJson, coreT, frames)
   }
 
   /** Build a chart's data frame from user-chosen channel lineages —
@@ -116,23 +145,24 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
     * @param channels channel name → (lineage JSON, core transform);
     *                 expected channels per chart type follow V.py:
     *                 scatter: xy+color, lines: x?/y, bars: x(+y)
+    * @param frames   a search's executed channel frames, reused per
+    *                 channel exactly as in [[addVisualization]]; the key
+    *                 join between channels always runs
     */
   def buildChart(source: DataFrame, chartType: String,
                  channels: Map[String, (String, String)],
-                 profiled: Option[(DataFrame, TableProfile)] = None): Option[DataFrame] = {
+                 profiled: Option[(DataFrame, TableProfile)] = None,
+                 frames: ChannelFrames = Map.empty): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
     val (pdf, prof) = profileOr(source, profiled)
     val key = prof.keyColumn.toSeq
     val executed = channels.map { case (ch, (json, coreT)) =>
-      ch -> Lineage.addCoreT(pdf, json, coreT, key, cfg.notCalcuDmT,
-        approxRows = prof.rows, embedSampleAbove = embedSampleAbove,
-        windowRankMaxRows = cfg.windowRankMaxRows,
-        distincts = prof.distinctCounts)
+      ch -> channelFrame(pdf, prof, json, coreT, frames)
     }
     if (executed.values.exists(_.isEmpty)) return None
-    val frames = executed.view.mapValues(_.get).toMap
+    val chFrames = executed.view.mapValues(_.get).toMap
     def outCols(ch: String): Seq[String] =
-      frames(ch).columns.filterNot(key.contains).toSeq
+      chFrames(ch).columns.filterNot(key.contains).toSeq
 
     // user-chosen lineages can produce overlapping column names; the
     // collision-renaming key join is the search pipeline's spelling
@@ -143,21 +173,21 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
 
     chartType match {
       case "sum_bar" =>
-        val (joined, yCols) = joinOn(frames("x"), frames("y"), outCols("y"))
+        val (joined, yCols) = joinOn(chFrames("x"), chFrames("y"), outCols("y"))
         Some(graft.operators.ChartAssembly.sumBar(joined, outCols("x").head,
           yCols.take(cfg.maxBarNumInChart)))
       case "count_bar" =>
-        Some(graft.operators.ChartAssembly.countBar(frames("x"), outCols("x").head))
+        Some(graft.operators.ChartAssembly.countBar(chFrames("x"), outCols("x").head))
       case "num_scatter" | "cat_scatter" =>
-        val base = frames("xy")
-        val withColor = frames.get("color")
+        val base = chFrames("xy")
+        val withColor = chFrames.get("color")
           .map(c => joinOn(base, c, outCols("color"))._1).getOrElse(base)
         Some(withColor)
       case "rel_line" | "rel_cat_line" =>
-        val (joined, _) = joinOn(frames("x"), frames("y"), outCols("y"))
+        val (joined, _) = joinOn(chFrames("x"), chFrames("y"), outCols("y"))
         Some(joined.orderBy(col(outCols("x").head)))
       case "ord_line" | "ord_cat_line" =>
-        Some(frames("y"))
+        Some(chFrames("y"))
       case other =>
         throw new IllegalArgumentException(s"unknown chart type: $other")
     }

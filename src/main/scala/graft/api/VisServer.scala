@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 
 import graft.{Engine, EngineConfig}
 import graft.operators.TStep
+import graft.plans.Recommendation.ChannelFrames
 import scala.jdk.CollectionConverters._
 
 /** Thin HTTP shim mirroring the reference's four endpoints
@@ -25,13 +26,24 @@ import scala.jdk.CollectionConverters._
   *    sheet (the reference's global `sheet`, main.py:25,48 — here an
   *    AtomicReference so the shim is at least swap-safe).
   *  - POST /vis/search {charts?:[…], beautify?:bool} → recommended
-  *    charts with scores, channel lineage ids, and data (main.py:76-109),
-  *    plus the search's wall ms per phase ("phases") and its count of
-  *    failed tpath executions ("failed_tpaths").
+  *    charts with scores, channel descriptions ("channels"), each
+  *    channel's lineage JSON ("lineages", the exact steps the search
+  *    ran, to send back to /vis/addT and /vis/addV), and data
+  *    (main.py:76-109), plus the search's wall ms per phase ("phases")
+  *    and its count of failed tpath executions ("failed_tpaths").
   *  - POST /vis/addT   {lineage:"…", t:{op,…}} → new lineage id +
   *    preview rows (main.py:111-124).
   *  - POST /vis/addV   {lineage:"…", coret:"…"} → terminal transform
   *    preview rows (main.py:126-138).
+  *
+  * The session is one immutable [[Session]] value: the sheet, its
+  * profile and the last search's executed channel frames
+  * ([[graft.plans.Recommendation.frames]] — only the returned charts'
+  * channels). /vis/csv replaces the whole value with no frames,
+  * /vis/search replaces the frames, and both /vis/addV forms serve a
+  * returned (lineage, core T) pair from its frame instead of
+  * replaying and re-fitting it. Frames live until the next
+  * /vis/search or /vis/csv.
   *
   * Numbers arrive as JSON doubles and strings stay strings — the
   * profiler's type sniffing decides logical types, same as the
@@ -44,7 +56,10 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
   private val mapper = new ObjectMapper()
   // the profiled pair is cached at ingest: search/addT/addV reuse it
   // instead of re-scanning the identical sheet per request
-  private val sheet = new AtomicReference[Option[(DataFrame, graft.TableProfile)]](None)
+  private val session = new AtomicReference[Option[Session]](None)
+
+  private def current(): Session =
+    session.get().getOrElse(throw new IllegalStateException("POST /vis/csv first"))
 
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/vis/csv", handler(csv))
@@ -77,7 +92,7 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
     }))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
     val (pdf, prof) = engine.profile(df)
-    sheet.set(Some((pdf, prof)))
+    session.set(Some(Session(pdf, prof)))
     val out = mapper.createObjectNode()
     val cols = out.putArray("columns")
     prof.columns.foreach { c =>
@@ -98,8 +113,8 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
   }
 
   private def search(req: JsonNode): JsonNode = {
-    val pair = sheet.get().getOrElse(throw new IllegalStateException("POST /vis/csv first"))
-    val df = pair._1
+    val held = session.get()
+    val s = held.getOrElse(throw new IllegalStateException("POST /vis/csv first"))
     val charts = field(req, "charts")
       .map(_.elements().asScala.map(_.asText()).toSeq)
       .getOrElse(Seq("scatter", "line", "bar"))
@@ -118,9 +133,11 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
         case e if e.getValue.asBoolean(false) => e.getKey
       }.toSet
     }
-    val rec = engine.search(df, charts, beautify, tlist,
+    val rec = engine.search(s.sheet, charts, beautify, tlist,
       clusters("dim_clusters"), clusters("sem_clusters"), slist,
-      profiled = Some(pair))
+      profiled = Some(s.profiled))
+    // a /vis/csv that landed meanwhile wins: its sheet has no frames
+    session.compareAndSet(held, Some(s.copy(frames = rec.frames)))
     val out = mapper.createObjectNode()
     val vis = out.putArray("vislist")
     rec.visList.foreach { c =>
@@ -128,6 +145,8 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
       v.put("type", c.chartType).put("score", c.score).put("signature", c.signature)
       val ch = v.putObject("channels")
       c.channels.foreach { case (k, l) => ch.put(k, l) }
+      val lin = v.putObject("lineages")
+      c.lineages.foreach { case (k, l) => lin.put(k, l) }
       val data = v.putArray("data")
       c.data.foreach { row =>
         val o = data.addObject()
@@ -142,8 +161,7 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
   }
 
   private def addT(req: JsonNode): JsonNode = {
-    val pair = sheet.get().getOrElse(throw new IllegalStateException("POST /vis/csv first"))
-    val df = pair._1
+    val s = current()
     val t = req.get("t")
     val step = TStep(
       op = t.get("op").asText(),
@@ -152,7 +170,8 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
       outMode = field(t, "outmode").map(_.asText()).getOrElse("append"),
       outName = field(t, "outname").map(_.asText()),
       castTo = field(t, "castto").map(_.asText()))
-    val (frame, lineage) = engine.addTransform(df, lineageOf(req), step, profiled = Some(pair))
+    val (frame, lineage) = engine.addTransform(s.sheet, lineageOf(req), step,
+      profiled = Some(s.profiled))
     val out = mapper.createObjectNode()
     out.put("lineage", lineage)
     putPreview(out, frame)
@@ -160,8 +179,7 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
   }
 
   private def addV(req: JsonNode): JsonNode = {
-    val pair = sheet.get().getOrElse(throw new IllegalStateException("POST /vis/csv first"))
-    val df = pair._1
+    val s = current()
     // the reference's addV form (main.py:132-134): vtype + channel map
     // → assemble a full chart (search.py:1495-1794 ≙ Engine.buildChart).
     // The single-(lineage, coret) preview form stays supported below.
@@ -172,7 +190,8 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
         val coreT = field(e.getValue, "coret").map(_.asText()).getOrElse("null_num")
         e.getKey -> (lineage, coreT)
       }.toMap
-      return engine.buildChart(df, vtype, channels, profiled = Some(pair)) match {
+      return engine.buildChart(s.sheet, vtype, channels, profiled = Some(s.profiled),
+          frames = s.frames) match {
         case Some(frame) =>
           val out = mapper.createObjectNode()
           out.put("ok", true).put("vtype", vtype)
@@ -182,7 +201,8 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
       }
     }
     val coreT = req.get("coret").asText()
-    engine.addVisualization(df, lineageOf(req), coreT, profiled = Some(pair)) match {
+    engine.addVisualization(s.sheet, lineageOf(req), coreT, profiled = Some(s.profiled),
+        frames = s.frames) match {
       case Some(frame) =>
         val out = mapper.createObjectNode()
         out.put("ok", true)
@@ -258,4 +278,11 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
     ex.getResponseBody.write(bytes)
     ex.close()
   }
+}
+
+/** One client session: the ingested sheet, its profile, and the last
+  * search's executed channel frames (empty until a search ran). */
+private final case class Session(sheet: DataFrame, profile: graft.TableProfile,
+                                 frames: ChannelFrames = Map.empty) {
+  def profiled: (DataFrame, graft.TableProfile) = (sheet, profile)
 }

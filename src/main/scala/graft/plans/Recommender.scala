@@ -19,7 +19,11 @@ import graft.score.{Scagnostics, Significance}
   * duplicate-removal identity — chart type + per-channel OPERATOR-NAME
   * sequence with the column lists ignored (search.py:1280-1299 keys on
   * `t["t"]`/`t["name"]` only), so two same-shaped derivations over
-  * different column sets count as one chart. */
+  * different column sets count as one chart.
+  *
+  * `lineages` holds each channel's tpath as [[Lineage.toJson]] — the
+  * exact steps the search ran, `castTo` included, which the
+  * fingerprint in `channels` does not carry. */
 final case class ChartRec(
     chartType: String,
     channels: Map[String, String], // channel → "coreT | tpath fingerprint"
@@ -27,14 +31,29 @@ final case class ChartRec(
     score: Double,
     signature: String,
     dedupKey: String,
-    data: Seq[Map[String, Any]])
+    data: Seq[Map[String, Any]],
+    lineages: Map[String, String]) // channel → lineage JSON
 
 /** @param phasesMs    wall milliseconds per search phase, in pipeline
   *                    order ([[Recommender.Phases]]); a phase's time
   *                    excludes the phases nested inside it
-  * @param failedTpaths tpath executions that threw and were dropped */
+  * @param failedTpaths tpath executions that threw and were dropped
+  * @param frames      the executed frame of every channel of `visList`,
+  *                    keyed by (core T, tpath steps) and compared on the
+  *                    full [[TStep]]: the plans the search built, fits
+  *                    done. Only the returned charts' channels, never
+  *                    the whole execution memo. A frame reads the
+  *                    search's source lazily, so it is only valid for
+  *                    refines of that same source and profile; see
+  *                    [[graft.Engine.addVisualization]]. */
 final case class Recommendation(visList: Seq[ChartRec], graphJson: String,
-                                phasesMs: Seq[(String, Double)], failedTpaths: Int)
+                                phasesMs: Seq[(String, Double)], failedTpaths: Int,
+                                frames: Recommendation.ChannelFrames)
+
+object Recommendation {
+  /** (core T, tpath steps) → the executed channel frame. */
+  type ChannelFrames = Map[(String, Seq[TStep]), DataFrame]
+}
 
 /** The five-phase search pipeline (SURVEY §3.2): presearch (tpath
   * enumeration per core transform), stree channel matching,
@@ -186,8 +205,10 @@ object Recommender {
       meanOf(cs.result())
     }
     val key = profile.keyColumn.toSeq
-    // the source frame feeds every (coreT, tpath) execution — keep it hot
-    df.persist()
+    // the source frame feeds every (coreT, tpath) execution — keep it
+    // hot, but a cache the caller set up is the caller's to release
+    val cachedByCaller = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    if (!cachedByCaller) df.persist()
 
     // exclusive wall time per phase: entering a nested phase pauses the
     // enclosing one (candidate selection runs inside the score loops)
@@ -574,13 +595,15 @@ object Recommender {
     }
     val topk = phase("render")(survivors.map(render(_, maxChartRows, key)))
     val graph = phase("rank")(ProvenanceGraph.render(topk))
+    val frames: Recommendation.ChannelFrames = survivors.flatMap(_.chans.values)
+      .map(ex => (ex.coreT, ex.tpath.steps) -> ex.df).toMap
 
-    Recommendation(topk, graph, Phases.map(p => p -> phaseNs(p) / 1e6), failures.get)
+    Recommendation(topk, graph, Phases.map(p => p -> phaseNs(p) / 1e6), failures.get, frames)
     } finally {
       // always release resources — a failed assembly must not leak the
       // persisted source frame or the executor pool
       execPool.shutdown()
-      df.unpersist()
+      if (!cachedByCaller) df.unpersist()
     }
   }
 
@@ -604,6 +627,7 @@ object Recommender {
   private def render(c: Scored, maxRows: Int, key: Seq[String]): ChartRec = {
     val channels = c.chans.map { case (ch, ex) => ch -> s"${ex.coreT} | ${ex.tpath.fingerprint}" }
     val columns = c.chans.map { case (ch, ex) => ch -> ex.outCols }
+    val lineages = c.chans.map { case (ch, ex) => ch -> Lineage.toJson(ex.tpath.steps) }
     val chanSeq = c.chans.toSeq
     val (joined, dataCols) = chanSeq.tail.foldLeft(
         (chanSeq.head._2.df, chanSeq.head._2.outCols)) { case ((l, acc), (_, ex)) =>
@@ -615,7 +639,7 @@ object Recommender {
       .limit(maxRows).collect().map { r =>
         r.schema.fieldNames.zip(r.toSeq).toMap
       }.toSeq
-    ChartRec(c.chartType, channels, columns, c.score, c.signature, c.dedupKey, sample)
+    ChartRec(c.chartType, channels, columns, c.score, c.signature, c.dedupKey, sample, lineages)
   }
 }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.TStep
 import graft.plans.{Lineage, Recommender}
@@ -164,6 +165,25 @@ class RecommenderSearchSpec extends SparkSpec {
     val Array(coreT, fp) = desc.split(" \\| ", 2)
     engine.addVisualization(pdf, Lineage.toJson(stepsOf(fp)), coreT,
       profiled = Some((pdf, profile))).getOrElse(fail(s"$desc did not replay"))
+  }
+
+  test("a search keeps the caller's cache and carries only the returned charts' channel frames") {
+    val (pdf, profile) = Profiler.profile(fixture)
+    def search(df: DataFrame) = Recommender.recommend(df, profile, spark,
+      EngineConfig(searchEmbedTs = false), charts = Seq("bar"))
+    val before = pdf.storageLevel
+    search(pdf)
+    assert(pdf.storageLevel == before, "the search changed the source's storage level")
+    val cached = pdf.persist()
+    try {
+      val rec = search(cached)
+      assert(cached.storageLevel != StorageLevel.NONE, "the search unpersisted the caller's cache")
+      val returned = rec.visList.flatMap(c => c.channels.keys.map { ch =>
+        (c.channels(ch).split(" \\| ", 2)(0), Lineage.fromJson(c.lineages(ch)): Seq[TStep])
+      }).toSet
+      assert(returned.nonEmpty)
+      assert(rec.frames.keySet == returned)
+    } finally cached.unpersist()
   }
 
   test("cat_scatter CDM: the xy ⋈ color join when rows fit, the labelled xy sample above") {

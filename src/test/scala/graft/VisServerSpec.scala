@@ -5,7 +5,14 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.SpecBus
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.operators.TStep
+import graft.plans.{Lineage, Load, TPathCandidate}
 
 /** In-process drive of the four HTTP endpoints (SURVEY §3.1-3.3 /
   * main.py:40-138 parity): csv ingest+profile → search → addT → addV,
@@ -17,21 +24,24 @@ class VisServerSpec extends SparkSpec {
   private lazy val port = server.start()
   private lazy val http = HttpClient.newHttpClient()
 
-  private def post(path: String, body: String) = {
-    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+  private def post(path: String, body: String): (Int, JsonNode) = postTo(port, path, body)
+
+  private def postTo(p: Int, path: String, body: String): (Int, JsonNode) = {
+    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path"))
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body)).build()
     val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), mapper.readTree(resp.body()))
   }
 
-  private val csvBody = {
+  /** A 40-row sheet with the columns name, price, cost and size. */
+  private def csvOf(row: Int => String): String = {
     val headers = """["name","price","cost","size"]"""
-    val rows = (1 to 40).map { i =>
-      s"""["item$i", ${i * 10.0}, ${i * 7.0 + 3}, ${(i % 5) * 1.0}]"""
-    }.mkString("[", ",", "]")
+    val rows = (1 to 40).map(i => s"""["item$i", ${row(i)}]""").mkString("[", ",", "]")
     s"""{"headers": $headers, "body": $rows}"""
   }
+
+  private val csvBody = csvOf(i => s"${i * 10.0}, ${i * 7.0 + 3}, ${(i % 5) * 1.0}")
 
   test("POST /vis/csv profiles and installs the sheet") {
     val (code, r) = post("/vis/csv", csvBody)
@@ -184,5 +194,159 @@ class VisServerSpec extends SparkSpec {
       assert(resp.statusCode() == 400)
       assert(mapper.readTree(resp.body()).get("error").asText().contains("/vis/csv"))
     } finally fresh.stop()
+  }
+
+  // ---- refines of returned charts: served from the search's frames ----
+
+  /** Runs `body` against a second server that has only seen /vis/csv of
+    * `csv`, so every refine it serves replays its lineage. */
+  private def withReplayServer[A](csv: String)(body: ((String, String) => JsonNode) => A): A = {
+    val fresh = new graft.api.VisServer(spark)
+    val p = fresh.start()
+    try {
+      val (code, r) = postTo(p, "/vis/csv", csv)
+      assert(code == 200, r.toString)
+      body { (path, b) =>
+        val (c, resp) = postTo(p, path, b)
+        assert(c == 200, resp.toString)
+        resp
+      }
+    } finally fresh.stop()
+  }
+
+  private def postOk(path: String, body: String): JsonNode = {
+    val (code, r) = post(path, body)
+    assert(code == 200, r.toString)
+    r
+  }
+
+  /** A preview's rows as canonical strings, order-insensitive. */
+  private def rowSet(data: JsonNode): Seq[String] =
+    data.elements().asScalaAll.map { o =>
+      o.fieldNames().asScala.toSeq.sorted.map(k => s"$k=${o.get(k)}").mkString("|")
+    }.sorted
+
+  /** Every returned channel as (chart, channel, core T, lineage JSON). */
+  private def returnedChannels(search: JsonNode): Seq[(JsonNode, String, String, String)] =
+    search.get("vislist").elements().asScalaAll.flatMap { c =>
+      c.get("channels").fieldNames().asScala.toSeq.map { ch =>
+        (c, ch, c.get("channels").get(ch).asText().split(" \\| ", 2)(0),
+          c.get("lineages").get(ch).asText())
+      }
+    }
+
+  private def addVBody(lineage: String, coreT: String): String =
+    s"""{"lineage": ${mapper.writeValueAsString(lineage)}, "coret": "$coreT"}"""
+
+  private def rebuildBody(chart: JsonNode): String = {
+    val chans = chart.get("channels").fieldNames().asScala.toSeq.map { ch =>
+      val coreT = chart.get("channels").get(ch).asText().split(" \\| ", 2)(0)
+      s""""$ch": {"lineage": ${mapper.writeValueAsString(chart.get("lineages").get(ch).asText())},
+         | "coret": "$coreT"}""".stripMargin
+    }
+    s"""{"vtype": "${chart.get("type").asText()}", "channels": {${chans.mkString(",")}}}"""
+  }
+
+  private val rebuildable = Set("num_scatter", "cat_scatter", "ord_line", "rel_line")
+
+  test("refines of returned charts equal a replay on a server that never searched") {
+    postOk("/vis/csv", csvBody)
+    val search = postOk("/vis/search", "{}")
+    val chans = returnedChannels(search)
+    assert(search.get("failed_tpaths").asInt() == 0)
+    assert(chans.map(_._3).distinct.size >= 3, chans.map(_._3).toString)
+    // "lineages" holds the exact steps behind each channel's fingerprint
+    chans.foreach { case (c, ch, coreT, lineage) =>
+      assert(c.get("lineages").fieldNames().asScala.toSet ==
+        c.get("channels").fieldNames().asScala.toSet, c.toString)
+      val steps = Lineage.fromJson(lineage)
+      assert(Lineage.toJson(steps) == lineage)
+      assert(c.get("channels").get(ch).asText() ==
+        s"$coreT | ${TPathCandidate(Load(0, 0, 0), steps).fingerprint}", lineage)
+    }
+    val served = chans.map { case (_, _, coreT, lineage) => (coreT, lineage) }.distinct
+      .map { case (coreT, lineage) =>
+        val r = postOk("/vis/addV", addVBody(lineage, coreT))
+        assert(r.get("ok").asBoolean(), s"$coreT $lineage")
+        (coreT, lineage) -> rowSet(r.get("data"))
+      }
+    val charts = search.get("vislist").elements().asScalaAll
+      .filter(c => rebuildable.contains(c.get("type").asText()))
+    assert(charts.nonEmpty)
+    charts.foreach { c =>
+      val r = postOk("/vis/addV", rebuildBody(c))
+      assert(rowSet(r.get("data")) == rowSet(c.get("data")),
+        s"rebuilding ${c.get("signature").asText()} gave other rows than the search returned")
+    }
+    withReplayServer(csvBody) { replay =>
+      served.foreach { case ((coreT, lineage), rows) =>
+        assert(rowSet(replay("/vis/addV", addVBody(lineage, coreT)).get("data")) == rows,
+          s"$coreT $lineage: the reused frame differs from the replay")
+      }
+    }
+  }
+
+  /** Logical plans of every query execution `body` runs. */
+  private def plansOf(body: => Unit): Seq[LogicalPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body finally {
+      SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    plans.toArray(Array.empty[LogicalPlan]).toSeq
+  }
+
+  private def hasAggregate(p: LogicalPlan): Boolean = p.exists(_.isInstanceOf[Aggregate])
+
+  test("a refine of a returned PCA channel runs no fit; a replay of it does") {
+    postOk("/vis/csv", csvBody)
+    val search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""")
+    val (_, _, coreT, lineage) = returnedChannels(search).find(_._3 == "pca")
+      .getOrElse(fail("the search returned no PCA channel"))
+    var rows = Seq.empty[String]
+    val reused = plansOf { rows = rowSet(postOk("/vis/addV", addVBody(lineage, coreT)).get("data")) }
+    assert(rows.size == 40)
+    assert(reused.nonEmpty, "the preview ran no query")
+    assert(!reused.exists(hasAggregate), s"a reused frame ran a fit:\n${reused.mkString("\n")}")
+    withReplayServer(csvBody) { replay =>
+      var replayed = Seq.empty[String]
+      val fitted = plansOf { replayed = rowSet(replay("/vis/addV", addVBody(lineage, coreT)).get("data")) }
+      assert(fitted.exists(hasAggregate), "the replay path ran no fit: the guard cannot fail")
+      assert(replayed == rows)
+    }
+  }
+
+  test("after a new /vis/csv, returned lineages replay on the new sheet; addT extensions replay") {
+    val csv2 = csvOf(i => s"${i * i * 0.5}, ${100.0 - i * 1.5}, ${(i % 3) * 2.0}")
+    postOk("/vis/csv", csvBody)
+    val first = returnedChannels(postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}"""))
+    val (_, _, coreT, lineage) = first.find(_._3 == "pca")
+      .getOrElse(fail("the search returned no PCA channel"))
+    val before = rowSet(postOk("/vis/addV", addVBody(lineage, coreT)).get("data"))
+    postOk("/vis/csv", csv2)
+    val after = rowSet(postOk("/vis/addV", addVBody(lineage, coreT)).get("data"))
+    assert(after != before, "the new sheet was served the first sheet's frame")
+    // a search on the new sheet, then a returned lineage extended by one
+    // step: the extension is no returned pair, so it replays
+    val second = returnedChannels(postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}"""))
+    val (_, _, _, base) = second.find { case (_, _, _, l) =>
+      Lineage.fromJson(l).lastOption.exists(s => s.op == "select" && s.inCols.size >= 2)
+    }.getOrElse(fail("the search returned no lineage closing in a select of two columns"))
+    val sel = Lineage.fromJson(base).last.inCols.take(2)
+    val tBody = s"""{"lineage": ${mapper.writeValueAsString(base)},
+                   | "t": {"op": "sum", "incols": ${mapper.writeValueAsString(sel.asJava)}}}""".stripMargin
+    val extended = postOk("/vis/addT", tBody).get("lineage").asText()
+    assert(Lineage.fromJson(extended) == Lineage.fromJson(base) :+ TStep("sum", inCols = sel))
+    val served = rowSet(postOk("/vis/addV", addVBody(extended, "null_num")).get("data"))
+    withReplayServer(csv2) { replay =>
+      assert(rowSet(replay("/vis/addV", addVBody(lineage, coreT)).get("data")) == after)
+      assert(rowSet(replay("/vis/addV", addVBody(extended, "null_num")).get("data")) == served)
+    }
   }
 }
