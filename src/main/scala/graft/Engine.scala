@@ -35,7 +35,7 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
   def profile(df: DataFrame): (DataFrame, TableProfile) = Profiler.profile(df, cfg)
 
   /** Reuse a profile the caller already computed (every entry point
-    * accepts one): profiling is a full-table scan + quantile pass, and
+    * accepts one): profiling is a full-table aggregation, and
     * a serving flow that profiled at ingest (/vis/csv) must not
     * re-scan the identical sheet on every /vis/search, /vis/addT,
     * /vis/addV. None → profile now. */

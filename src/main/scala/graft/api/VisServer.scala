@@ -48,6 +48,13 @@ import scala.jdk.CollectionConverters._
   * Numbers arrive as JSON doubles and strings stay strings — the
   * profiler's type sniffing decides logical types, same as the
   * reference re-sniffing its csv body.
+  *
+  * The sheet is a local relation: the rows are already on the driver,
+  * so Catalyst gets the sheet's true size, converts the rows to its
+  * internal form once, and folds plans that only project, filter or
+  * limit the sheet on the driver — a refine of such a lineage runs
+  * almost no Spark job. An RDD of external rows would be stat-less and
+  * re-converted by every job.
   */
 final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.default,
                       port: Int = 0) {
@@ -90,7 +97,7 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
       else if (numeric(c)) v.asDouble()
       else v.asText()
     }))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    val df = spark.createDataFrame(rows.asJava, schema)
     val (pdf, prof) = engine.profile(df)
     session.set(Some(Session(pdf, prof)))
     val out = mapper.createObjectNode()

@@ -82,44 +82,6 @@ object SketchProfile {
     pivotToRows(one, cols, pcts)
   }
 
-  /** Per-column quantile signatures in ONE declarative aggregation —
-    * the consumer-facing twin of [[sketchProfile]]'s GK path, used by
-    * the profiler's Wasserstein-1 matrix (W1(A,B) ≈ mean |q_i^A −
-    * q_i^B| over a shared prob grid; reference computes the exact
-    * integral on raw values, `utils.py:137-163`). One scan and one
-    * few-KB sketch-state exchange for ALL columns, inside codegen'd
-    * aggregation — unlike `DataFrame.stat.approxQuantile`, which runs
-    * the same GK summaries as an opaque RDD aggregate outside the
-    * declarative plan (no codegen, no reuse with other aggregates).
-    * `accuracy = 1000` matches the reference profiler's former
-    * relativeError 0.001. A column with no non-null values yields an
-    * empty signature (the stat.approxQuantile convention).
-    *
-    * NaN values are filtered BEFORE the sketch: `percentile_approx`,
-    * unlike the `stat.approxQuantile` it replaced, would otherwise
-    * rank NaN above every double in the GK summary, turning the upper
-    * quantiles of any NaN-bearing column into NaN and poisoning every
-    * W1 distance that touches it. NaN→null here (nulls are ignored by
-    * the aggregate) pins the old ignore-NaN semantics.
-    */
-  def quantileSignatures(df: DataFrame, cols: Seq[String],
-                         probs: Seq[Double], accuracy: Int = 1000)
-      : Map[String, Array[Double]] = {
-    require(cols.nonEmpty, "quantileSignatures needs at least one column")
-    require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
-      s"probabilities must be in [0,1], got $probs")
-    val pArr = array(probs.map(lit): _*)
-    val aggs = cols.zipWithIndex.map { case (c, i) =>
-      val d = col(c).cast("double")
-      percentile_approx(when(!isnan(d), d), pArr, lit(accuracy)).as(s"__q$i")
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cols.zipWithIndex.map { case (c, i) =>
-      c -> (if (row.isNullAt(i)) Array.empty[Double]
-            else row.getSeq[Double](i).toArray)
-    }.toMap
-  }
-
   private def pivotToRows(one: DataFrame, cols: Seq[String],
                           pcts: Seq[Int]): DataFrame = {
     // pivot the single sketch row into one row per column — constant

@@ -11,26 +11,37 @@ import graft.operators.Rank
 /** Table profiler — the Spark port of the reference's `parsedata`
   * (spreadsheet.py:46-282).
   *
-  * One distributed agg pass collects every per-column stat (count,
-  * exact distinct for key detection, nulls, min/max, a sampled value
-  * for date sniffing); one `approxQuantile` pass collects K-bucket
-  * quantile signatures for the numeric columns. Everything downstream
-  * — type rules, key precedence, Wasserstein distances, DBSCAN column
-  * clustering, name clustering — is driver-side math over column-level
-  * facts, which stays O(#columns), independent of row count. That is
-  * the 100 TB path: the data is touched by exactly two scans.
+  * One aggregation collects every per-column stat: row count, exact
+  * distinct for key detection, nulls, min/max, a sampled value for
+  * date sniffing and the K-bucket quantile signature. Each row is
+  * exploded into one cell per column and the cells are grouped by
+  * column index, so the query holds ONE distinct group (the typed cell
+  * value) whatever the width. Spark plans a single distinct group
+  * directly; several `countDistinct`s would go through
+  * `RewriteDistinctAggregates`, whose `Expand` orders its groups by
+  * hashing expressions that carry fresh expression ids — every new
+  * frame of the same shape then got a new projection order and new
+  * generated code. One group keeps the plan, and so the compiled
+  * classes, the same for every table of one shape.
+  *
+  * Everything downstream — type rules, key precedence, Wasserstein
+  * distances, DBSCAN column clustering, name clustering — is
+  * driver-side math over column-level facts, which stays O(#columns),
+  * independent of row count. That is the 100 TB path: the data is
+  * touched by one scan (plus, on the approx route, one re-count of the
+  * columns near a decision boundary).
   */
 object Profiler {
 
-  /** Inferred per-column facts from the single agg pass. */
-  private final case class RawStats(
+  /** Per-column facts from the aggregation: `min`/`max` and
+    * `quantiles` are over the numeric view (empty quantiles when the
+    * column has no non-NaN value), `sample` is one non-null value cast
+    * to string, for the date sniffer. */
+  private[graft] final case class RawStats(
       name: String, dt: DataType, distinct: Long, nulls: Long,
-      min: Option[Double], max: Option[Double], sample: Option[String])
+      min: Option[Double], max: Option[Double], sample: Option[String],
+      quantiles: Array[Double])
 
-  /** Profile a table. Returns the (possibly augmented) DataFrame — a
-    * synthetic `defaultindex` key column is appended when no natural
-    * key exists (spreadsheet.py:168-177) — plus the TableProfile.
-    */
   /** Column reference by LITERAL name: bare `col(name)` parses dots as
     * nested-field access, so a table with a column literally named
     * "No." or "price.usd" (dotted names are anticipated —
@@ -74,85 +85,119 @@ object Profiler {
         plan.stats.sizeInBytes > BigInt(cfg.approxDistinctAboveBytes))
   }
 
+  /** Profile a table. Returns the (possibly augmented) DataFrame — a
+    * synthetic `defaultindex` key column is appended when no natural
+    * key exists (spreadsheet.py:168-177) — plus the TableProfile.
+    */
   def profile(df0: DataFrame, cfg: EngineConfig = EngineConfig.default): (DataFrame, TableProfile) = {
     val df = cfg.maxSourceRows.fold(df0)(df0.limit)
+    // a zero-column table has no cell to group: count its rows alone
+    val (rows, raw) = if (df.schema.isEmpty) (df.count(), Nil) else columnStats(df, cfg)
+    fromStats(df, rows, raw, cfg)
+  }
+
+  /** The row count and every column's [[RawStats]] of a table with at
+    * least one column, from one aggregation (plus the approx route's
+    * boundary re-count). */
+  private[graft] def columnStats(df: DataFrame, cfg: EngineConfig): (Long, Seq[RawStats]) = {
     val fields = df.schema.fields.toSeq
 
-    // scale auto-route: the exact multi-column countDistinct below is
-    // an expand-based plan (scan × #columns) — fine at fixture scale,
-    // catastrophic on a large ingest. When Catalyst's size estimate
-    // says the input is big, take the HLL + boundary-re-count path
-    // regardless of the flag; decisions stay exact either way.
-    // Stat-LESS sources (LogicalRDD, many V2 relations) report
-    // spark.sql.defaultSizeInBytes = Long.MaxValue as a conservative
-    // placeholder, and joins multiply it further — an estimate at or
-    // past that sentinel means UNKNOWN, not huge, so it must not flip
-    // a 100-row RDD-backed frame onto HLL counts. Unknown keeps the
-    // exact path (slow-but-correct is the right failure direction for
-    // a size the planner cannot see).
+    // scale auto-route: exact distinct counts shuffle every distinct
+    // (column, value) cell — fine at fixture scale, costly on a large
+    // ingest. When Catalyst's size estimate says the input is big,
+    // take the HLL + boundary-re-count path regardless of the flag;
+    // decisions stay exact either way. Stat-LESS sources (LogicalRDD,
+    // many V2 relations) report spark.sql.defaultSizeInBytes =
+    // Long.MaxValue as a conservative placeholder, and joins multiply
+    // it further — an estimate at or past that sentinel means UNKNOWN,
+    // not huge, so it must not flip a 100-row RDD-backed frame onto
+    // HLL counts. Unknown keeps the exact path (slow-but-correct is
+    // the right failure direction for a size the planner cannot see).
     val useApprox = shouldApproxDistinct(df, cfg)
 
-    // ── pass 1: one agg over everything. At scale (cfg.approxDistinct)
-    //    distinct counts use HLL sketches; exact multi-column
-    //    countDistinct is an expand-based plan that multiplies the scan
-    //    by #columns — the approx pass keeps it one linear scan ──────
-    val aggs: Seq[Column] = count(lit(1)).as("__rows") +: fields.flatMap { f =>
+    // ── one cell per (row, column): struct(i, v, d, s) ───────────────
+    //   v — the value, typed: one slot per distinct Spark type in the
+    //       schema, only column i's slot set, null when the value is.
+    //       countDistinct(v) is countDistinct(column): same equality,
+    //       same null handling, same float normalisation
+    //   d — the numeric view feeding min/max and the quantiles
+    //   s — the string cast the date sniffer samples
+    // Field names are fixed (no column names), so the generated code
+    // depends on the schema's shape only.
+    val types = fields.map(_.dataType).distinct
+    val cell = fields.zipWithIndex.map { case (f, i) =>
       val c = qcol(f.name)
       val numish = f.dataType match {
-        case _: NumericType => Some(c.cast(DoubleType))
-        case DateType       => Some(datediff(c, lit("1970-01-01")).cast(DoubleType))
-        case TimestampType  => Some(unix_timestamp(c).cast(DoubleType))
+        case _: NumericType => c.cast(DoubleType)
+        case DateType       => datediff(c, lit("1970-01-01")).cast(DoubleType)
+        case TimestampType  => unix_timestamp(c).cast(DoubleType)
         // NTZ wall-clock → epoch seconds via TZ-FREE arithmetic (the
         // eventsRawNanos precedent): casting through TimestampType
         // would shift the stats by the caller session's timezone
-        case TimestampNTZType => Some(expr(
+        case TimestampNTZType => expr(
           s"timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ${quotedSql(f.name)})")
-          .cast(DoubleType))
-        case _              => None
+          .cast(DoubleType)
+        case _              => lit(null).cast(DoubleType)
       }
-      val nd = if (useApprox) approx_count_distinct(c, 0.01) else countDistinct(c)
-      Seq(
-        nd.as(s"__nd_${f.name}"),
-        sum(when(c.isNull, 1L).otherwise(0L)).as(s"__nn_${f.name}"),
-        numish.map(n => min(n)).getOrElse(lit(null).cast(DoubleType)).as(s"__min_${f.name}"),
-        numish.map(n => max(n)).getOrElse(lit(null).cast(DoubleType)).as(s"__max_${f.name}"),
-        first(c.cast(StringType), ignoreNulls = true).as(s"__fv_${f.name}"))
+      val slots = types.zipWithIndex.map { case (t, j) =>
+        (if (t == f.dataType) c else lit(null).cast(t)).as(s"t$j")
+      }
+      struct(lit(i).as("i"), when(c.isNotNull, struct(slots: _*)).as("v"),
+        numish.as("d"), c.cast(StringType).as("s"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val rows = row.getAs[Long]("__rows")
+    val cells = df.select(explode(array(cell: _*)).as("c")).select("c.*")
 
-    // pass 1b (approx mode only): exact re-count for columns whose
-    // approximate count is near a decision boundary — key detection
-    // (distinct == rows) or the nominal threshold (distinct ≤ 5%·rows).
-    // Typically a handful of columns, one cheap agg.
-    val exactNd: Map[String, Long] =
+    // ── the aggregation: one row per column, one distinct group ──────
+    val probs = (0 until cfg.quantileBuckets)
+      .map(i => lit(i.toDouble / (cfg.quantileBuckets - 1)))
+    val d = col("d")
+    val stats = cells.groupBy("i").agg(
+      count(lit(1)),
+      if (useApprox) approx_count_distinct(col("v"), 0.01) else countDistinct(col("v")),
+      count(lit(1)) - count(col("v")),
+      min(d), max(d),
+      first(col("s"), ignoreNulls = true),
+      // GK signatures (accuracy 1000 = relative error 0.001) over the
+      // non-NaN values: percentile_approx ranks NaN above every
+      // double, which would turn a NaN-bearing column's upper
+      // quantiles — and every W1 distance touching it — into NaN
+      percentile_approx(when(!isnan(d), d), array(probs: _*), lit(1000)))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    // no groups: a zero-row table
+    val rows = stats.headOption.fold(0L)(_._2.getLong(1))
+
+    // approx route only: exact re-count for columns whose approximate
+    // count is near a decision boundary — key detection (distinct ==
+    // rows) or the nominal threshold (distinct ≤ 5%·rows). Typically a
+    // handful of columns, one cheap agg over the same cells.
+    val exactNd: Map[Int, Long] =
       if (!useApprox || rows == 0) Map.empty
       else {
-        val boundary = fields.filter { f =>
-          val approx = row.getAs[Long](s"__nd_${f.name}")
-          val nearKey = approx >= rows * 0.95
-          val nomThresh = rows * cfg.nominalStd
-          val nearNominal = approx >= nomThresh * 0.8 && approx <= nomThresh * 1.2
-          nearKey || nearNominal
-        }
+        val nomThresh = rows * cfg.nominalStd
+        def nearBoundary(approx: Long): Boolean = approx >= rows * 0.95 ||
+          (approx >= nomThresh * 0.8 && approx <= nomThresh * 1.2)
+        val boundary = stats.collect { case (i, r) if nearBoundary(r.getLong(2)) => i }.toSeq
         if (boundary.isEmpty) Map.empty
-        else {
-          val exactAggs = boundary.map(f => countDistinct(qcol(f.name)).as(s"__xnd_${f.name}"))
-          val r2 = df.agg(exactAggs.head, exactAggs.tail: _*).head()
-          boundary.map(f => f.name -> r2.getAs[Long](s"__xnd_${f.name}")).toMap
-        }
+        else cells.filter(col("i").isin(boundary: _*)).groupBy("i")
+          .agg(countDistinct(col("v"))).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
       }
 
-    val raw = fields.map { f =>
-      def opt(prefix: String): Option[Double] =
-        Option(row.getAs[Any](s"${prefix}_${f.name}")).map(_.asInstanceOf[Double])
-      RawStats(f.name, f.dataType,
-        exactNd.getOrElse(f.name, row.getAs[Long](s"__nd_${f.name}")),
-        row.getAs[Long](s"__nn_${f.name}"),
-        opt("__min"), opt("__max"),
-        Option(row.getAs[String](s"__fv_${f.name}")))
+    val raw = fields.zipWithIndex.map { case (f, i) =>
+      stats.get(i).fold(RawStats(f.name, f.dataType, 0L, 0L, None, None, None, Array.empty)) { r =>
+        def opt(j: Int): Option[Double] = if (r.isNullAt(j)) None else Some(r.getDouble(j))
+        RawStats(f.name, f.dataType, exactNd.getOrElse(i, r.getLong(2)), r.getLong(3),
+          opt(4), opt(5), Option(r.getString(6)),
+          if (r.isNullAt(7)) Array.empty else r.getSeq[Double](7).toArray)
+      }
     }
+    (rows, raw)
+  }
 
+  /** The profile of `df` from its column facts: type and key rules,
+    * the synthetic key, distances and clusters — driver-side only. */
+  private[graft] def fromStats(df: DataFrame, rows: Long, raw: Seq[RawStats],
+                               cfg: EngineConfig): (DataFrame, TableProfile) = {
     // ── type + key rules in column order (spreadsheet.py:60-166) ─────
     // mutable view mirroring the reference's in-place demotion logic
     final case class St(var ltype: LogicalType, var isKey: Boolean)
@@ -215,28 +260,9 @@ object Profiler {
       key = Some("defaultindex")
     }
 
-    val numericCols = raw.filter(r => st(r.name).ltype == LogicalType.Int || st(r.name).ltype == LogicalType.Real)
-      .map(_.name)
-
-    // ── pass 2: quantile signatures for numeric cols ─────────────────
-    val probs = (0 until cfg.quantileBuckets)
-      .map(i => i.toDouble / (cfg.quantileBuckets - 1)).toArray
-    val quantiles: Map[String, Array[Double]] =
-      if (numericCols.isEmpty || rows == 0) Map.empty
-      else {
-        // sanitized aliases: the GK agg resolves its column names
-        // through the same dot-ambiguous path as col(). One
-        // declarative percentile_approx pass over ALL columns
-        // (SketchProfile.quantileSignatures, accuracy 1000 = the
-        // former stat.approxQuantile relativeError 0.001) — same GK
-        // summaries, but inside codegen'd aggregation instead of an
-        // opaque RDD aggregate.
-        val safe = numericCols.zipWithIndex.map { case (c, i) => c -> s"__q$i" }.toMap
-        val casted = out.select(numericCols.map(c => qcol(c).cast(DoubleType).as(safe(c))): _*)
-        val sigs = graft.operators.SketchProfile.quantileSignatures(
-          casted, numericCols.map(safe), probs.toSeq)
-        numericCols.map(c => c -> sigs(safe(c))).toMap
-      }
+    val numeric = raw.filter(r => st(r.name).ltype == LogicalType.Int || st(r.name).ltype == LogicalType.Real)
+    val numericCols = numeric.map(_.name)
+    val quantiles: Map[String, Array[Double]] = numeric.map(r => r.name -> r.quantiles).toMap
 
     // Wasserstein-1 via quantile signatures: W1(A,B) = ∫|F_A⁻¹-F_B⁻¹|
     // ≈ mean |q_i^A − q_i^B| (spreadsheet.py:187-190, utils.py:137-163

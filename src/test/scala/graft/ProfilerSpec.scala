@@ -1,6 +1,18 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import java.sql.{Date, Timestamp}
+import java.time.LocalDateTime
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SpecBus
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.{DBSCAN, DateSniffer}
 import graft.profiler.{Profiler, SemClusters}
@@ -215,5 +227,195 @@ class ProfilerSpec extends SparkSpec {
     assert(prof.columns.map(_.name).toSet == Set("No.", "price.usd", "qty.ordered"))
     val priceCol = prof.columns.find(_.name == "price.usd").get
     assert(priceCol.max.contains(60.0), s"numeric stats must profile: $priceCol")
+  }
+
+  // ---- the one-pass profile against the former two-pass formulation ----
+
+  private val wideSchema = StructType(Seq(
+    StructField("name", StringType), StructField("tag", StringType),
+    StructField("qty", IntegerType), StructField("big", LongType),
+    StructField("amount", DecimalType(10, 2)), StructField("x", DoubleType),
+    StructField("day", DateType), StructField("at", TimestampType),
+    StructField("wall", TimestampNTZType), StructField("price.usd", DoubleType),
+    StructField("empty", DoubleType)))
+
+  /** 60 rows over every profiled type: `x` holds NaN, −0.0, 0.0 and
+    * nulls, `empty` is all null, `name` is the natural key. `shift`
+    * moves every value, for a second table of the same shape. */
+  private def wideTable(shift: Int = 0, n: Int = 60): DataFrame = {
+    val rows = (0 until n).map { i =>
+      val j = i + shift
+      val x: Any = i match {
+        case 0 | 3 => Double.NaN
+        case 1 => -0.0
+        case 2 => 0.0
+        case _ if i % 7 == 0 => null
+        case _ => j * 0.5
+      }
+      Row(s"row$j", s"t${i % 3}", i % 9 + shift, j.toLong * j,
+        if (i % 11 == 0) null else new java.math.BigDecimal(j * 1.25).setScale(2),
+        x, Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(j.toLong * 3)),
+        if (i % 13 == 0) null else new Timestamp(1577836800000L + j * 3600000L),
+        LocalDateTime.of(2021, 6, 1, 0, 0).plusMinutes(j.toLong * j),
+        (i % 10) * 2.5 + shift, null)
+    }
+    spark.createDataFrame(rows.asJava, wideSchema)
+  }
+
+  /** The former two-aggregation formulation, kept as the reference:
+    * pass 1 is one `agg` with a `countDistinct` per column, pass 2 one
+    * `percentile_approx` per numeric column over its non-NaN values. */
+  private def twoPassStats(df: DataFrame): (Long, Seq[Profiler.RawStats]) = {
+    val fields = df.schema.fields.toSeq
+    val buckets = EngineConfig.default.quantileBuckets
+    def q(name: String): Column = col("`" + name.replace("`", "``") + "`")
+    def numish(f: StructField): Option[Column] = f.dataType match {
+      case _: NumericType => Some(q(f.name).cast(DoubleType))
+      case DateType => Some(datediff(q(f.name), lit("1970-01-01")).cast(DoubleType))
+      case TimestampType => Some(unix_timestamp(q(f.name)).cast(DoubleType))
+      case TimestampNTZType => Some(expr(
+        s"timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', `${f.name}`)").cast(DoubleType))
+      case _ => None
+    }
+    val aggs = count(lit(1)) +: fields.flatMap { f =>
+      val c = q(f.name)
+      Seq(countDistinct(c), sum(when(c.isNull, 1L).otherwise(0L)),
+        numish(f).map(min(_)).getOrElse(lit(null).cast(DoubleType)),
+        numish(f).map(max(_)).getOrElse(lit(null).cast(DoubleType)),
+        first(c.cast(StringType), ignoreNulls = true))
+    }
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    val numeric = fields.filter(_.dataType.isInstanceOf[NumericType])
+    val probs = array((0 until buckets).map(i => lit(i.toDouble / (buckets - 1))): _*)
+    val sigs = if (numeric.isEmpty) Map.empty[String, Array[Double]] else {
+      val qs = numeric.map { f =>
+        val d = q(f.name).cast(DoubleType)
+        percentile_approx(when(!isnan(d), d), probs, lit(1000))
+      }
+      val row = df.agg(qs.head, qs.tail: _*).head()
+      numeric.indices.map(i => numeric(i).name ->
+        (if (row.isNullAt(i)) Array.empty[Double] else row.getSeq[Double](i).toArray)).toMap
+    }
+    def opt(j: Int): Option[Double] = Option(r.get(j)).map(_.asInstanceOf[Double])
+    (r.getLong(0), fields.zipWithIndex.map { case (f, i) =>
+      val o = 1 + 5 * i
+      Profiler.RawStats(f.name, f.dataType, r.getLong(o),
+        if (r.isNullAt(o + 1)) 0L else r.getLong(o + 1), opt(o + 2), opt(o + 3),
+        Option(r.getString(o + 4)), sigs.getOrElse(f.name, Array.empty))
+    })
+  }
+
+  /** The doubles of a column profile as bits, so NaN equals NaN and
+    * −0.0 differs from 0.0. */
+  private def bits(c: ColumnProfile): Seq[Option[Seq[Long]]] =
+    Seq(c.min.map(Array(_)), c.max.map(Array(_)), c.quantiles)
+      .map(_.map(_.toSeq.map(java.lang.Double.doubleToLongBits)))
+
+  /** Every ColumnProfile field equal — the doubles bit for bit — and
+    * the rest of the profile equal. */
+  private def assertSameProfile(got: TableProfile, want: TableProfile): Unit = {
+    assert(got.rows == want.rows)
+    assert(got.keyColumn == want.keyColumn)
+    assert(got.columns.size == want.columns.size)
+    got.columns.zip(want.columns).foreach { case (g, w) =>
+      def rest(c: ColumnProfile) = c.copy(min = None, max = None, quantiles = None)
+      assert(rest(g) == rest(w), g.name)
+      assert(bits(g) == bits(w), g.name)
+    }
+    assert(got.distanceMatrix == want.distanceMatrix)
+    assert((got.dimClusters, got.unitClusters, got.nameClusters) ==
+      (want.dimClusters, want.unitClusters, want.nameClusters))
+  }
+
+  private def twoPassProfile(df: DataFrame): TableProfile = {
+    val (rows, raw) = twoPassStats(df)
+    Profiler.fromStats(df, rows, raw, EngineConfig.default)._2
+  }
+
+  test("one-pass profile equals the two-pass formulation on every type") {
+    val df = wideTable()
+    val got = Profiler.profile(df)._2
+    assertSameProfile(got, twoPassProfile(df))
+    // the fixture reaches the cases it is for
+    val c = got.columns.map(c => c.name -> c).toMap
+    assert(got.keyColumn.contains("name"))
+    // 2 NaNs, −0.0 and 0.0, 8 nulls, 48 other values
+    assert(c("x").distinctCount == 50, "NaNs are one value and −0.0 is 0.0")
+    assert(c("x").nullCount == 8 && c("x").max.exists(_.isNaN))
+    assert(c("x").quantiles.exists(q => q.length == 64 && q.forall(!_.isNaN)))
+    assert(c("empty").distinctCount == 0 && c("empty").nullCount == 60)
+    assert(c("price.usd").quantiles.isDefined)
+    assert(Seq("day", "at", "wall").forall(n => c(n).logicalType == LogicalType.Date && c(n).min.isDefined))
+    assert(c("tag").logicalType == LogicalType.Nominal && c("qty").logicalType == LogicalType.Int)
+  }
+
+  test("zero-row and zero-column tables: defaultindex key, every non-date column nominal") {
+    val df = wideTable(n = 0)
+    val got = Profiler.profile(df)._2
+    assertSameProfile(got, twoPassProfile(df))
+    assert(got.rows == 0 && got.keyColumn.contains("defaultindex"))
+    assert(got.columns.filter(_.logicalType != LogicalType.Date).map(_.name) ==
+      Seq("name", "tag", "qty", "big", "amount", "x", "price.usd", "empty", "defaultindex"))
+    assert(got.columns.forall(c => c.logicalType == LogicalType.Date || c.logicalType == LogicalType.Nominal))
+    val approx = Profiler.profile(df, EngineConfig(approxDistinct = true))._2
+    assertSameProfile(approx, got)
+    // and a zero-column table still counts its rows
+    val (out, bare) = Profiler.profile(spark.range(3).select())
+    assert(bare.rows == 3 && bare.keyColumn.contains("defaultindex"))
+    assert(out.count() == 3)
+  }
+
+  test("approx route on every type: the same types and key as exact") {
+    val df = wideTable()
+    val exact = Profiler.profile(df)._2
+    val approx = Profiler.profile(df, EngineConfig(approxDistinct = true))._2
+    assert(approx.keyColumn == exact.keyColumn)
+    exact.columns.zip(approx.columns).foreach { case (e, a) =>
+      assert((a.name, a.logicalType, a.isKey) == (e.name, e.logicalType, e.isKey))
+    }
+  }
+
+  test("signatures skip NaN; all-null and all-NaN columns get none") {
+    // percentile_approx ranks NaN above every double: unfiltered, a
+    // 10%-NaN column's upper quantiles would read NaN and poison every
+    // W1 distance touching it
+    val df = spark.range(10000).select(
+      when(col("id") % 10 === 0, lit(Double.NaN)).otherwise(col("id").cast("double")).as("x"),
+      col("id").cast("double").as("unique"),
+      lit(Double.NaN).as("all_nan"), lit(null).cast("double").as("all_null"))
+    val raw = Profiler.columnStats(df, EngineConfig.default)._2.map(r => r.name -> r).toMap
+    assert(raw("x").quantiles.length == 64 && raw("x").quantiles.forall(!_.isNaN),
+      s"NaN leaked into the signature: ${raw("x").quantiles.mkString(",")}")
+    // p=1.0 over the 9000 non-NaN values is their exact max
+    assert(raw("x").quantiles.last == 9999.0)
+    assert(raw("all_nan").quantiles.isEmpty && raw("all_null").quantiles.isEmpty)
+    // accuracy 1000 on 10000 rows: positional error ≤ 10
+    raw("unique").quantiles.zipWithIndex.foreach { case (v, i) =>
+      assert(math.abs(v - 9999.0 * i / 63) <= 11.0, s"bucket $i: $v")
+    }
+  }
+
+  test("one profile is one query with no Expand; a same-shape table compiles nothing") {
+    Profiler.profile(wideTable(shift = 1)) // warm: this shape compiles once
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    SpecBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val compiled = try {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Profiler.profile(wideTable(shift = 2))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    } finally {
+      SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val ran = plans.toArray(Array.empty[LogicalPlan]).toSeq
+    assert(ran.size == 1, s"${ran.size} query executions:\n${ran.mkString("\n")}")
+    assert(!ran.head.exists(_.isInstanceOf[Expand]), ran.head.toString)
+    assert(compiled == 0, s"a second table of the same shape compiled $compiled classes")
   }
 }

@@ -99,46 +99,14 @@ class SketchProfileSpec extends SparkSpec {
     }
   }
 
-  test("quantileSignatures: one-agg signatures hit the error bound; all-null column yields empty") {
-    val withNull = fixture.withColumn("all_null", lit(null).cast("double"))
-    val sigs = SketchProfile.quantileSignatures(withNull,
-      Seq("unique_col", "all_null"), probs = Seq(0.25, 0.5, 0.75),
-      accuracy = 10000)
-    assert(sigs("all_null").isEmpty)
-    // accuracy 10000 on 10000 rows → positional error ≤ 1
-    sigs("unique_col").zip(Seq(2500.0, 5000.0, 7500.0)).foreach {
-      case (est, target) =>
-        assert(math.abs(est - target) <= 2.0, s"quantile $est vs ~$target")
-    }
-    assertThrows[IllegalArgumentException] {
-      SketchProfile.quantileSignatures(fixture, Seq("unique_col"), Seq(1.5))
-    }
-    assertThrows[IllegalArgumentException] {
-      SketchProfile.quantileSignatures(fixture, Seq.empty, Seq(0.5))
-    }
-  }
-
-  test("quantileSignatures ignores NaN — upper quantiles stay finite (ADVICE r10)") {
-    // percentile_approx ranks NaN above every double, so before the
-    // round-11 NaN→null filter a 10%-NaN column reported NaN for its
-    // upper quantiles and poisoned every W1 distance touching it; the
-    // stat.approxQuantile path this replaced silently dropped NaN.
+  test("sketchProfile ignores NaN in min, max and percentiles") {
+    // percentile_approx ranks NaN above every double and Spark orders
+    // NaN greatest, so unfiltered, the max and the upper percentiles of
+    // any NaN-bearing column would read NaN. NaN still counts in
+    // n_nonnull (it is not null), matching every SQL engine's COUNT.
     val nanCol = fixture.select(
       when(col("unique_col") % 10 === 0, lit(Double.NaN))
-        .otherwise(col("unique_col")).as("x"),
-      lit(Double.NaN).as("all_nan"))
-    val sigs = SketchProfile.quantileSignatures(nanCol, Seq("x", "all_nan"),
-      probs = Seq(0.5, 0.9, 1.0), accuracy = 10000)
-    assert(sigs("x").forall(v => !v.isNaN),
-      s"NaN leaked into the signature: ${sigs("x").mkString(",")}")
-    // p=1.0 over the 9000 non-NaN values is their exact max, 9999
-    assert(sigs("x").last == 9999.0, s"p1.0 should be the non-NaN max, got ${sigs("x").last}")
-    // a column that is ENTIRELY NaN behaves like all-null: empty signature
-    assert(sigs("all_nan").isEmpty)
-    // same convention across the whole sketchProfile row: percentiles
-    // AND min/max ignore NaN (an unfiltered max reads NaN — Spark
-    // orders NaN greatest — which would contradict the row's own
-    // finite quantiles); NaN still counts in n_nonnull
+        .otherwise(col("unique_col")).as("x"))
     val row = SketchProfile.sketchProfile(nanCol, Seq("x"), pcts = Seq(50, 75))
       .collect()(0)
     assert(row.getLong(1) == 10000L, "NaN is not null — n_nonnull counts it")

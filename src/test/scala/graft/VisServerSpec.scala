@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.SpecBus
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.TStep
@@ -194,6 +196,29 @@ class VisServerSpec extends SparkSpec {
       assert(resp.statusCode() == 400)
       assert(mapper.readTree(resp.body()).get("error").asText().contains("/vis/csv"))
     } finally fresh.stop()
+  }
+
+  test("the local-relation sheet gives the search and addT rows of an RDD-built sheet") {
+    postOk("/vis/csv", csvBody)
+    val served = postOk("/vis/search", """{"charts": ["scatter", "bar"]}""")
+      .get("vislist").elements().asScalaAll
+      .map(c => (c.get("signature").asText(), c.get("score").asDouble()))
+    val addT = postOk("/vis/addT", """{"lineage": "[]", "t": {"op": "sum", "incols": ["price", "cost"]}}""")
+    // the sheet as it was built before: an RDD of external rows
+    val rows = (1 to 40).map(i => Row(s"item$i", i * 10.0, i * 7.0 + 3, (i % 5) * 1.0))
+    val rddSheet = spark.createDataFrame(spark.sparkContext.parallelize(rows), StructType(
+      StructField("name", StringType) +: Seq("price", "cost", "size").map(StructField(_, DoubleType))))
+    val engine = new Engine(spark)
+    val rec = engine.search(rddSheet, Seq("scatter", "bar"))
+    assert(served.nonEmpty)
+    assert(served == rec.visList.map(c => (c.signature, c.score)))
+    val (frame, lineage) = engine.addTransform(rddSheet, "[]", TStep("sum", inCols = Seq("price", "cost")))
+    assert(addT.get("lineage").asText() == lineage)
+    val want = frame.limit(400).collect().map { r =>
+      frame.columns.zipWithIndex.map { case (c, i) => s"$c=${mapper.valueToTree[JsonNode](r.get(i))}" }
+        .sorted.mkString("|")
+    }.toSeq.sorted
+    assert(rowSet(addT.get("data")) == want)
   }
 
   // ---- refines of returned charts: served from the search's frames ----
