@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.{EngineConfig, TableProfile}
 import graft.operators.{ChartAssembly, CoreT, TStep}
@@ -67,19 +69,32 @@ object Recommendation {
   *    search.py:293-298);
   *  - the reference's per-core-T OS processes (search.py:55-63)
   *    disappear: Spark's scheduler is the parallelism substrate;
+  *  - the source is persisted for the search unless the caller cached
+  *    it or it is driver-local (a local relation, or a plan Catalyst
+  *    folds into one, like the /vis/csv sheet): Catalyst folds reads of
+  *    a local source on the driver, and a cache would make each of
+  *    them an in-memory scan job;
   *  - scoring collects only the columns it scores, bounded by
   *    `maxChartRows`, so scoring cost is independent of table size;
   *  - each scatter xy candidate is read once (key + both columns, the
-  *    first `maxChartRows` complete rows) and each categorical color
-  *    once, for the keys of the xy samples that pick it (at most
-  *    #xys × `maxChartRows` rows). CDM is a driver-side key lookup over
-  *    the xy sample: it scores the labelled subset of the points
-  *    scagnostics scored. When an xy's complete rows fit in
+  *    first `maxChartRows` complete rows). CDM is a driver-side key
+  *    lookup over the xy sample: it scores the labelled subset of the
+  *    points scagnostics scored. When an xy's complete rows fit in
   *    `maxChartRows`, that subset is exactly the xy ⋈ color join;
   *    above it, CDM sees the sample's points, not a different N;
-  *  - chart data (the joined channel frames) is built only for the
-  *    charts that survive dedup and top-k — never for the candidates
-  *    the ranking drops.
+  *  - every channel frame the search touches (a picked cat color, a
+  *    survivor's channel) is read once: key + output columns (+ a cat
+  *    frame's label cast to string), `maxChartRows + 1` rows, so the
+  *    read knows whether it is complete. On a complete read a color's
+  *    labels are a driver-side filter and group of the read, and a
+  *    survivor's chart data a driver-side inner key join of its
+  *    channels' reads; neither runs a Spark join;
+  *  - on an incomplete read, Spark computes both: the labels by a
+  *    broadcast left-semi join of the color to its xys' sample keys (at
+  *    most #xys × `maxChartRows` rows), the chart data by key-joining
+  *    the channel frames;
+  *  - chart data is built only for the charts that survive dedup and
+  *    top-k — never for the candidates the ranking drops.
   */
 object Recommender {
 
@@ -110,6 +125,9 @@ object Recommender {
     "rel_cat_line" -> Map("x" -> (Some(1), "num"), "y" -> (Some(1), "cat")),
     "sum_bar" -> Map("x" -> (Some(1), "cat"), "y" -> (None, "num")),
     "count_bar" -> Map("x" -> (Some(1), "cat")))
+
+  /** A channel frame's bounded read: `complete` when it holds every row. */
+  private final case class FrameRead(rows: Array[Row], complete: Boolean)
 
   private final case class Executed(coreT: String, tpath: TPathCandidate, df: DataFrame,
                                     outCols: Seq[String]) {
@@ -163,6 +181,11 @@ object Recommender {
     (left.join(r2, key), rightCols.map(c => renames.getOrElse(c, c)))
   }
 
+  /** A frame whose rows already sit on the driver: a local relation, or
+    * a plan Catalyst folds into one (a project, filter or limit over it). */
+  private def driverLocal(df: DataFrame): Boolean =
+    df.isLocal || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
   /** @param tlist restrict core transforms considered for channels —
     *        the /vis/search "tlist" parameter (main.py:91-94). The four
     *        null passthroughs are always admitted, exactly like the
@@ -206,9 +229,12 @@ object Recommender {
     }
     val key = profile.keyColumn.toSeq
     // the source frame feeds every (coreT, tpath) execution — keep it
-    // hot, but a cache the caller set up is the caller's to release
-    val cachedByCaller = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!cachedByCaller) df.persist()
+    // hot, unless it already lives on the driver: Catalyst folds reads
+    // of a local relation there, and a cache would turn each of them
+    // into an in-memory scan job. A cache the caller set up is the
+    // caller's to release.
+    val persisted = df.storageLevel == StorageLevel.NONE && !driverLocal(df)
+    if (persisted) df.persist()
 
     // exclusive wall time per phase: entering a nested phase pauses the
     // enclosing one (candidate selection runs inside the score loops)
@@ -389,11 +415,12 @@ object Recommender {
         rows.map(r => (r.getDouble(key.size), r.getDouble(key.size + 1))))
     }
 
-    /** One read per cat color: (key → labels as strings), non-null
-      * labels only, restricted by a broadcast left-semi join to `keys`
-      * (the samples of the xys that pick this color), so it returns at
-      * most #xys × `maxChartRows` rows. A multimap, so a non-unique key
-      * labels a point once per match, like an inner join would. */
+    /** A cat color's labels when its read is incomplete: (key → labels
+      * as strings), non-null labels only, restricted by a broadcast
+      * left-semi join to `keys` (the samples of the xys that pick this
+      * color), so it returns at most #xys × `maxChartRows` rows. A
+      * multimap, so a non-unique key labels a point once per match,
+      * like an inner join would. */
     def readLabels(c: Executed, keys: Seq[Row]): Map[Row, Seq[String]] = {
       val label = c.outCols.head
       val wanted = spark.createDataFrame(keys.filterNot(_.anyNull).asJava,
@@ -403,6 +430,35 @@ object Recommender {
         .select(key.map(col) :+ col(label).cast("string"): _*)
         .collect().toSeq
         .groupMap(keyOf)(_.getString(key.size))
+    }
+
+    /** One read per channel frame the search touches (a picked cat
+      * color, a survivor's channel): the key, every output column and,
+      * for a cat frame, its label as Spark casts it to a string. At most
+      * `maxChartRows + 1` rows, so the read knows whether it holds the
+      * whole frame. Memoized per executed frame. */
+    val reads = mutable.Map[Executed, FrameRead]()
+    def readFrame(ex: Executed): FrameRead = reads.getOrElseUpdate(ex, {
+      val label =
+        if (Enumerator.catTl.contains(ex.coreT)) Seq(col(ex.outCols.head).cast("string")) else Nil
+      val rows = ex.df.select(key.map(col) ++ ex.outCols.map(col) ++ label: _*)
+        .limit(maxChartRows + 1).collect()
+      FrameRead(rows, rows.length <= maxChartRows)
+    })
+
+    /** [[readLabels]]' result, from the color's read when that is
+      * complete: rows whose key and label are neither null nor NaN (as
+      * `na.drop` keeps them) and whose key is wanted. */
+    def labelsFor(c: Executed, keys: Seq[Row]): Map[Row, Seq[String]] = {
+      val read = readFrame(c)
+      if (!read.complete) readLabels(c, keys)
+      else {
+        val wanted = keys.filterNot(_.anyNull).toSet
+        read.rows.toSeq.filter(r => (0 to key.size).forall(i => present(r.get(i))))
+          .map(r => keyOf(r) -> r.getString(key.size + c.outCols.size))
+          .filter(kl => wanted(kl._1))
+          .groupMap(_._1)(_._2)
+      }
     }
 
     val scored = mutable.ArrayBuffer[Scored]()
@@ -423,7 +479,7 @@ object Recommender {
         else Nil
       // each picked color is read once, for the union of its xys' keys
       val labelsOf = samples.flatMap { case (xy, s) => catPicks(xy).map(_ -> s.keys) }
-        .groupMap(_._1)(_._2).map { case (c, ks) => c -> readLabels(c, ks.flatten.distinct) }
+        .groupMap(_._1)(_._2).map { case (c, ks) => c -> labelsFor(c, ks.flatten.distinct) }
       for ((xy, s) <- samples) {
         val g = new Scagnostics.Graph(s.pts)
         // per-flag metric selection (search.py:763-792); striated is
@@ -593,7 +649,7 @@ object Recommender {
             famCaps.getOrElse(fam, 3)))
         }
     }
-    val topk = phase("render")(survivors.map(render(_, maxChartRows, key)))
+    val topk = phase("render")(survivors.map(render(_, maxChartRows, key, readFrame)))
     val graph = phase("rank")(ProvenanceGraph.render(topk))
     val frames: Recommendation.ChannelFrames = survivors.flatMap(_.chans.values)
       .map(ex => (ex.coreT, ex.tpath.steps) -> ex.df).toMap
@@ -603,7 +659,7 @@ object Recommender {
       // always release resources — a failed assembly must not leak the
       // persisted source frame or the executor pool
       execPool.shutdown()
-      if (!cachedByCaller) df.unpersist()
+      if (persisted) df.unpersist()
     }
   }
 
@@ -623,23 +679,66 @@ object Recommender {
 
   /** A survivor's chart data: the JOINED all-channels frame (key +
     * every channel's output columns, right-side collisions renamed
-    * `__y` like Engine.buildChart), capped at maxRows. */
-  private def render(c: Scored, maxRows: Int, key: Seq[String]): ChartRec = {
+    * `__y` like Engine.buildChart), capped at maxRows. Joined on the
+    * driver when every channel's read is complete, by Spark otherwise. */
+  private def render(c: Scored, maxRows: Int, key: Seq[String],
+                     read: Executed => FrameRead): ChartRec = {
     val channels = c.chans.map { case (ch, ex) => ch -> s"${ex.coreT} | ${ex.tpath.fingerprint}" }
     val columns = c.chans.map { case (ch, ex) => ch -> ex.outCols }
     val lineages = c.chans.map { case (ch, ex) => ch -> Lineage.toJson(ex.tpath.steps) }
-    val chanSeq = c.chans.toSeq
-    val (joined, dataCols) = chanSeq.tail.foldLeft(
-        (chanSeq.head._2.df, chanSeq.head._2.outCols)) { case ((l, acc), (_, ex)) =>
-      val (j, rc) = joinOnKey(key)(l, ex.df, ex.outCols)
-      (j, acc ++ rc)
-    }
-    val sample = joined
-      .select((key ++ dataCols).distinct.map(col): _*)
-      .limit(maxRows).collect().map { r =>
-        r.schema.fieldNames.zip(r.toSeq).toMap
-      }.toSeq
+    val chanSeq = c.chans.toSeq.map(_._2)
+    val sample =
+      if (chanSeq.forall(read(_).complete)) joinReads(chanSeq.map(ex => ex -> read(ex)), key, maxRows)
+      else {
+        val (joined, dataCols) = chanSeq.tail.foldLeft((chanSeq.head.df, chanSeq.head.outCols)) {
+          case ((l, acc), ex) =>
+            val (j, rc) = joinOnKey(key)(l, ex.df, ex.outCols)
+            (j, acc ++ rc)
+        }
+        joined.select((key ++ dataCols).distinct.map(col): _*)
+          .limit(maxRows).collect().map { r =>
+            r.schema.fieldNames.zip(r.toSeq).toMap
+          }.toSeq
+      }
     ChartRec(c.chartType, channels, columns, c.score, c.signature, c.dedupKey, sample, lineages)
+  }
+
+  /** [[joinOnKey]]'s fold over complete channel reads, on the driver:
+    * an inner join on the key in which a null key never matches and
+    * `Row` equality matches NaN with NaN and -0.0 with 0.0, as Spark's
+    * join does; the same `__y` renames; the `(key ++ data columns)
+    * .distinct` projection; the first `maxRows` rows. */
+  private def joinReads(chans: Seq[(Executed, FrameRead)], key: Seq[String],
+                        maxRows: Int): Seq[Map[String, Any]] = {
+    def keyOf(r: Row): Row = Row.fromSeq(key.indices.map(r.get))
+    def values(ex: Executed, r: Row): Seq[Any] = (key.size until key.size + ex.outCols.size).map(r.get)
+    val (head, headRead) = chans.head
+    // (key, values in `names` order past the key), left column names, data columns
+    val start = (headRead.rows.toSeq.map(r => keyOf(r) -> values(head, r)),
+      key ++ head.outCols, head.outCols)
+    val (rows, names, dataCols) = chans.tail.foldLeft(start) {
+      case ((left, names, acc), (ex, read)) =>
+        val renamed = ex.outCols.map(c => if (names.contains(c)) c + "__y" else c)
+        val right = read.rows.toSeq.filterNot(keyOf(_).anyNull).groupMap(keyOf)(values(ex, _))
+        val joined = left.flatMap { case (k, l) =>
+          if (k.anyNull) Nil else right.getOrElse(k, Nil).map(r => k -> (l ++ r))
+        }
+        (joined, names ++ renamed, acc ++ renamed)
+    }
+    val out = (key ++ dataCols).distinct
+    val at = out.map(names.indexOf)
+    rows.take(maxRows).map { case (k, vs) =>
+      val row = k.toSeq ++ vs
+      out.zip(at.map(row)).toMap
+    }
+  }
+
+  /** `na.drop`'s test of one value: neither null nor NaN. */
+  private def present(v: Any): Boolean = v match {
+    case null => false
+    case d: Double => !d.isNaN
+    case f: Float => !f.isNaN
+    case _ => true
   }
 }
 

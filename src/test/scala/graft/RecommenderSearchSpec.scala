@@ -1,11 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.SpecBus
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Limit, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
@@ -132,23 +137,39 @@ class RecommenderSearchSpec extends SparkSpec {
       rec.visList.map(_.chartType).toString)
     assert(rec.failedTpaths == 0)
     val engine = new Engine(spark)
-    val key = profile.keyColumn.toSeq
     def rowSet(rows: Seq[Map[String, Any]]): Set[Seq[(String, Any)]] =
       rows.map(_.toSeq.sortBy(_._1)).toSet
+    // every row fits: the data is the whole join
     rec.visList.foreach { c =>
       assert(c.data.nonEmpty, s"${c.signature}: no data")
-      val frames = c.channels.toSeq.map { case (ch, desc) =>
-        (replay(engine, pdf, profile, desc), c.columns(ch))
-      }
-      val (joined, cols) = frames.tail.foldLeft(frames.head) { case ((l, acc), (r, rc)) =>
-        val (j, renamed) = Recommender.joinOnKey(key)(l, r, rc)
-        (j, acc ++ renamed)
-      }
-      val expected = joined.select((key ++ cols).distinct.map(joined.col): _*)
-        .limit(maxChartRows).collect().map(r => r.schema.fieldNames.zip(r.toSeq).toMap).toSeq
       assert(c.data.size <= maxChartRows)
-      assert(rowSet(c.data) == rowSet(expected), s"${c.signature}: data differs from the replay")
+      assert(rowSet(c.data) == rowSet(replayedJoin(engine, pdf, profile, c)),
+        s"${c.signature}: data differs from the replay")
     }
+    // 25 of 60 rows: at most 25 rows, each a row of the whole join
+    val capped = Recommender.recommend(pdf, profile, spark, maxChartRows = 25)
+    assert(capped.visList.nonEmpty && capped.failedTpaths == 0)
+    capped.visList.foreach { c =>
+      assert(c.data.nonEmpty && c.data.size <= 25, s"${c.signature}: ${c.data.size} rows")
+      val extra = rowSet(c.data) -- rowSet(replayedJoin(engine, pdf, profile, c))
+      assert(extra.isEmpty, s"${c.signature}: rows outside the replayed join: $extra")
+    }
+  }
+
+  /** A chart's channels replayed and key-joined as the search joins
+    * them, every row. */
+  private def replayedJoin(engine: Engine, pdf: DataFrame, profile: TableProfile,
+                           c: graft.plans.ChartRec): Seq[Map[String, Any]] = {
+    val key = profile.keyColumn.toSeq
+    val frames = c.channels.toSeq.map { case (ch, desc) =>
+      (replay(engine, pdf, profile, desc), c.columns(ch))
+    }
+    val (joined, cols) = frames.tail.foldLeft(frames.head) { case ((l, acc), (r, rc)) =>
+      val (j, renamed) = Recommender.joinOnKey(key)(l, r, rc)
+      (j, acc ++ renamed)
+    }
+    joined.select((key ++ cols).distinct.map(joined.col): _*)
+      .collect().map(r => r.schema.fieldNames.zip(r.toSeq).toMap).toSeq
   }
 
   /** [[fixture]] plus three nominal columns, so cat_scatter colors come
@@ -250,36 +271,104 @@ class RecommenderSearchSpec extends SparkSpec {
     def colorJoins(p: LogicalPlan): Seq[Join] = p.collect {
       case j: Join if carriesLabel(j.left) != carriesLabel(j.right) => j
     }
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.optimizedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    // every row of the 60-row fixture fits: each read is complete
+    val maxChartRows = 4000
+    var rec: graft.plans.Recommendation = null
+    val qes = queryExecutionsOf {
+      rec = Recommender.recommend(pdf, profile, spark, EngineConfig(maxScatter = 1000),
+        charts = Seq("scatter"), maxChartRows = maxChartRows)
     }
-    spark.listenerManager.register(listener)
-    val rec = try {
-      Recommender.recommend(pdf, profile, spark, EngineConfig(maxScatter = 1000),
-        charts = Seq("scatter"))
-    } finally {
-      SpecBus.drain(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
-    }
-    val joins = plans.toArray(Array.empty[LogicalPlan]).toSeq.map(colorJoins).filter(_.nonEmpty)
     val catScatters = rec.visList.filter(_.chartType == "cat_scatter")
     assert(catScatters.map(_.channels("xy")).distinct.size >= 2,
       "the guard needs several xys that share colors")
-    // the only xy ⋈ color joins are the survivors' chart data (render)
-    val pairJoins = joins.count(_.exists(_.joinType == Inner))
-    assert(pairJoins <= catScatters.size,
-      s"$pairJoins xy ⋈ color joins for ${catScatters.size} rendered cat_scatters")
-    // scoring reads each color once: a semi join to the xys' keys, one
-    // per distinct color frame
-    val labelReads = joins.filter(_.exists(_.joinType == LeftSemi)).map { js =>
-      js.flatMap(j => Seq(j.left, j.right).filter(carriesLabel)).map(_.canonicalized)
+    // neither scoring (CDM labels) nor render (chart data) joins a color
+    // frame: both are key lookups over the frames' reads
+    val joins = qes.flatMap(qe => colorJoins(qe.optimizedPlan))
+    assert(joins.isEmpty, s"${joins.count(_.joinType == Inner)} inner and " +
+      s"${joins.count(_.joinType == LeftSemi)} semi joins with a color frame")
+    // a channel frame's read: key + output columns, maxChartRows + 1 rows
+    val reads = qes.map(_.analyzed).filter {
+      case Limit(IntegerLiteral(n), _) => n == maxChartRows + 1
+      case _ => false
     }
-    assert(labelReads.nonEmpty)
-    assert(labelReads.distinct.size == labelReads.size,
-      s"${labelReads.size} label reads of ${labelReads.distinct.size} color frames")
+    assert(reads.exists(carriesLabel), "no color frame was read")
+    val canon = reads.map(_.canonicalized)
+    assert(canon.distinct.size == canon.size,
+      s"${canon.size} reads of ${canon.distinct.size} channel frames")
+  }
+
+  test("a search over a driver-local sheet neither caches it nor scans a cache") {
+    val sheet = spark.createDataFrame(nominalFixture.collect().toSeq.asJava, nominalFixture.schema)
+    val (pdf, profile) = Profiler.profile(sheet)
+    assert(pdf.storageLevel == StorageLevel.NONE)
+    // every chart family; every core T but lda, whose fit caches its
+    // own ranked corpus for the EM sweeps
+    val qes = queryExecutionsOf(Recommender.recommend(pdf, profile, spark,
+      tlist = Some(Set("pca", "mds", "tsne", "umap", "kmeans", "dbscan"))))
+    assert(pdf.storageLevel == StorageLevel.NONE)
+    assert(qes.nonEmpty)
+    val scans = qes.map(_.optimizedPlan).filter(_.exists(_.isInstanceOf[InMemoryRelation]))
+    assert(scans.isEmpty, s"${scans.size} of ${qes.size} plans scan a cache:\n${scans.headOption}")
+  }
+
+  test("a Real key holding a NaN (or a null): data and CDM equal the Spark join") {
+    // floatCanBeKey: the last unique Real column is the key, so every
+    // other column repeats a value
+    val cfg = EngineConfig(floatCanBeKey = true, maxScatter = 1000)
+    val rows = (1 to 60).map { i =>
+      Row((i / 2) * 1.0, math.round(math.sin(i * 0.5) * 10) + 30.0, 120.0 - 2.0 * (i / 3),
+        Seq("red", "green", "blue")(i % 3), if (i % 4 < 2) "lo" else "hi",
+        if (i == 30) Double.NaN else if (i == 1) -0.0 else i * 0.25)
+    }
+    val schema = StructType(Seq("a v", "b v", "c v").map(StructField(_, DoubleType)) ++
+      Seq("tint", "band").map(StructField(_, StringType)) :+ StructField("k", DoubleType))
+    val (pdf, profile) = Profiler.profile(spark.createDataFrame(rows.asJava, schema), cfg)
+    assert(profile.keyColumn.contains("k"))
+    // the same profile over a sheet whose key also holds a null
+    val withNull = spark.createDataFrame(
+      rows.updated(9, Row.fromSeq(rows(9).toSeq.init :+ null)).asJava, schema)
+    val engine = new Engine(spark)
+    // NaN != NaN as a boxed value: compare rows as strings
+    def rowSet(rows: Seq[Map[String, Any]]): Set[Seq[(String, String)]] =
+      rows.map(_.toSeq.map { case (c, v) => c -> String.valueOf(v) }.sortBy(_._1)).toSet
+    for (sheet <- Seq(pdf, withNull)) {
+      val search = Recommender.recommend(sheet, profile, spark, cfg)
+      assert(search.visList.nonEmpty && search.failedTpaths == 0)
+      search.visList.foreach { c =>
+        assert(rowSet(c.data) == rowSet(replayedJoin(engine, sheet, profile, c)),
+          s"${c.signature}: data differs from the replayed join")
+      }
+      val cdm = Seq(None, Some(Set("pca"))).flatMap(tlist =>
+        Recommender.recommend(sheet, profile, spark, cfg, charts = Seq("scatter"), tlist = tlist,
+          slist = Some(Set("sca_cdm"))).visList.filter(_.chartType == "cat_scatter"))
+      assert(cdm.nonEmpty)
+      cdm.foreach { c =>
+        val Seq(x, y) = c.columns("xy")
+        val label = c.columns("color").head
+        val joined = replay(engine, sheet, profile, c.channels("xy"))
+          .join(replay(engine, sheet, profile, c.channels("color")), Seq("k")).na.drop()
+          .select(col(x).cast("double"), col(y).cast("double"), col(label).cast("string"))
+          .collect()
+        val expected = Recommender.cdmOf(
+          joined.map(r => (r.getDouble(0), r.getDouble(1))), joined.map(_.getString(2)))
+        assert(c.score == expected, c.signature)
+      }
+    }
+  }
+
+  /** The query executions `body` runs, once the listener bus drained. */
+  private def queryExecutionsOf(body: => Unit): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = qes.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body finally {
+      SpecBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    qes.toArray(Array.empty[QueryExecution]).toSeq
   }
 
   /** Inverse of TPathCandidate.fingerprint: steps

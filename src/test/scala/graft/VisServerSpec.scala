@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.SpecBus
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -345,6 +345,23 @@ class VisServerSpec extends SparkSpec {
       assert(fitted.exists(hasAggregate), "the replay path ran no fit: the guard cannot fail")
       assert(replayed == rows)
     }
+  }
+
+  test("a scatter + PCA /vis/search on a 400-row sheet runs no join") {
+    val body = (1 to 400).map { i =>
+      s"""["item$i", "${Seq("gold", "silver", "bronze")(i % 3)}", ${i * 1.5},
+         | ${math.sin(i * 0.1) * 40 + 50}, ${(i % 9) * 2.0}, ${math.sqrt(i)}]""".stripMargin
+    }.mkString("[", ",", "]")
+    postOk("/vis/csv", s"""{"headers": ["name","tier","price","cost","size","weight"], "body": $body}""")
+    var search: JsonNode = null
+    val plans = plansOf { search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""") }
+    val types = search.get("vislist").elements().asScalaAll.map(_.get("type").asText())
+    assert(types.contains("cat_scatter"), types.toString)
+    assert(returnedChannels(search).exists(_._3 == "pca"))
+    // every channel read is complete: CDM labels and chart data are key
+    // lookups on the driver
+    val joins = plans.filter(_.exists(_.isInstanceOf[Join]))
+    assert(joins.isEmpty, s"${joins.size} of ${plans.size} plans join:\n${joins.headOption}")
   }
 
   test("after a new /vis/csv, returned lineages replay on the new sheet; addT extensions replay") {
