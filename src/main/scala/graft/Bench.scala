@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — driver contract: ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -118,7 +118,7 @@ object Bench {
   // round-13 additions q_drift_tv / q_oov_rate stay OUT of the pinned
   // headline (the contract line is a byte-budgeted driver artifact —
   // BenchContractSpec; precedent: no round-12 op joined either); their
-  // medians are recorded via MicroBench q-mode in BASELINE.md.
+  // medians are recorded in BASELINE.md.
 
   def main(args: Array[String]): Unit = {
     // FIRST thing in main: the external-load sample must precede
@@ -136,15 +136,7 @@ object Bench {
     val loadBefore = readLoadAvg()
     val busyFrac = cpuBusyFraction()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-bench")
     // ERROR, not WARN: the expected below-threshold global-window WARN
     // from the reference-parity rank path (scale twin: q_rank_scalable)
     // would otherwise swamp the one-line JSON contract output
@@ -211,25 +203,7 @@ object Bench {
       // operators that persist intermediates (dedup/similarity
       // self-join inputs) are measured at full per-execution cost —
       // later runs must not silently hit an earlier run's cache.
-      def run(): Double = {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try {
-          all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            -1.0
-        } finally {
-          // drop the CacheScope registry every run, not just the SQL
-          // cache: clearCache alone leaves the tracked ArrayBuffer
-          // holding strong refs to every persisted Dataset (and its
-          // analyzed plan) across ~69 queries × up to 4 runs — the
-          // same leak MicroBench.tailStability already releases
-          graft.CacheScope.releaseAll()
-        }
-      }
+      def run(): Double = timedRun(spark, name, all(name), sfDir)
       val two = Vector(run(), run())
       val valid2 = two.filter(_ >= 0)
       var times =
@@ -294,6 +268,32 @@ object Bench {
     println(contractLine(results, sfDir, loadBefore, loadAfter, hotLabel,
       busyFrac, suspectOf(results, priorMedians)))
     System.out.flush()
+  }
+
+  /** One measured run of a declared query, the protocol behind every
+    * recorded number (this contract and `graft.tools.Measure`): clear
+    * the SQL cache, materialize through a noop sink (every column is
+    * evaluated, unlike `count()`), release the `CacheScope` registry.
+    * Returns the wall in seconds, or −1 when the query fails non-fatally
+    * (an OOM or interrupt still surfaces).
+    *
+    * The release runs every run, not just `clearCache`: the tracked
+    * registry would otherwise keep strong refs to every persisted
+    * Dataset (and its analyzed plan) across ~69 queries × up to 5 runs.
+    */
+  private[graft] def timedRun(spark: SparkSession, name: String,
+                              query: (SparkSession, String) => DataFrame,
+                              sfDir: String): Double = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    try {
+      query(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+    } finally CacheScope.releaseAll()
   }
 
   /** The re-run/suspect trigger: min exceeds 3× the prior recorded
@@ -362,6 +362,21 @@ object Bench {
           parsed
       }
     } catch { case NonFatal(_) => Map.empty }
+
+  /** The `MEDIANS_r{N}.json` line that [[parseMedians]] reads:
+    * `{"metric":"median_total",…,"sf":…,"queries":{name:{"med":x,"min":y},…}}`,
+    * written by `graft.tools.Measure headline`. `rows` are
+    * (query, median, min), −1 for a query whose every run failed (left
+    * out of the totals, as in the contract line); `load` is the 1-min
+    * loadavg before and after as `"before;after"`. */
+  private[graft] def mediansLine(rows: Seq[(String, Double, Double)], n: Int,
+                                 sfDir: String, load: String): String = {
+    val qs = rows.map { case (k, med, min) =>
+      "\"" + k + "\":{\"med\":" + fmt(med) + ",\"min\":" + fmt(min) + "}"
+    }.mkString("{", ",", "}")
+    def total(xs: Seq[Double]) = fmt(xs.filter(_ >= 0).sum)
+    s"""{"metric":"median_total","value":${total(rows.map(_._2))},"unit":"sec","n":$n,"min_total":${total(rows.map(_._3))},"sf":"$sfDir","load":"$load","queries":$qs}"""
+  }
 
   /** `{"queries":{name:{"med":x,…},…},…}` → name → med, provided the
     * artifact's "sf" matches this run's (empty otherwise). Jackson
@@ -480,7 +495,7 @@ object Bench {
     * Sampled before and after the run so a grading artifact recorded
     * under concurrent host load is self-evidently contaminated.
     */
-  private def readLoadAvg(): String =
+  private[graft] def readLoadAvg(): String =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split("\\s+").take(3).mkString(" ")

@@ -41,7 +41,7 @@ object CacheScope {
 
   /** Unpersist every tracked frame AND drop memoized codebook fits —
     * [[CodebookCache]]'s benchmark-honesty contract rides this hook
-    * (every measured Bench/MicroBench run calls this, so recorded
+    * (every measured Bench and Measure run calls this, so recorded
     * numbers never hide a fit behind a warm memo).
     * @return frames released */
   def releaseAll(blocking: Boolean = false): Int = {

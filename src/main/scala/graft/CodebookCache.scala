@@ -22,7 +22,7 @@ import graft.operators.Similarity.Codebook
   *
   * Benchmark honesty: [[CacheScope.releaseAll]] clears this cache too,
   * so every protocol that releases scoped persists per measured run
-  * ([[Bench]], MicroBench q/tail/headline modes) re-pays the fit per
+  * ([[Bench]], `graft.tools.Measure`) re-pays the fit per
   * run — a recorded number never hides the driver constant behind a
   * warm memo. Driver footprint per entry is the handle's own bound
   * (nlist·dim centers + the ≤100k-row fit sample), cleared on release.

@@ -75,10 +75,7 @@ object ExtQueries {
     * arithmetic), so the whole rule surface is value-gated; same
     * pattern as q_pii_redact's injected emails.
     */
-  /** package-private: graft.tools.CurationProbe measures the kernels
-    * over this exact fixture — sharing the builder keeps the probe's
-    * recorded numbers and parity check on the gate's corpus. */
-  private[graft] def lineFixture(s: SparkSession, dir: String): DataFrame = {
+  private def lineFixture(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documentsSpread(s, dir).select(col("doc_id"), col("text"))
     // NULL text ≡ '' in the fixture: without the coalesce a NULL doc's
     // chunk lines NULL-propagate through concat and are silently
@@ -995,7 +992,7 @@ object ExtQueries {
     // deterministic fit), so ONE Verify session fits each codebook once
     // across its ANN queries instead of once per query; results are
     // bit-identical to fit-inside by the handle's contract, and
-    // CacheScope.releaseAll clears the memo so Bench/MicroBench runs
+    // CacheScope.releaseAll clears the memo so Bench and Measure runs
     // still pay the fit per measured run.
     "q_embed_norm" -> ((s, dir) => {
       Tables.embeddings(s, dir).select(col("vec_id"),
@@ -1279,7 +1276,7 @@ object ExtQueries {
       // item); eager checkpoint materializes the SAME frame a persist
       // would but truncates the lineage to a LogicalRDD, so the
       // dedup/cap/split stages re-plan over a leaf. Measured ABBA at
-      // sf0.1 (MicroBench n=7 ×4, alternating): persist 1.93/1.88 s
+      // sf0.1 (n=7 ×4, alternating, OPTIMIZATION_r16.md): persist 1.93/1.88 s
       // medians vs checkpoint 1.81/1.64 s. Blocks are freed by the
       // ContextCleaner when the frame goes unreachable (the
       // nearDupSurvivors precedent); executor-loss recompute is lost

@@ -278,8 +278,8 @@ object RelationalQueries {
       // The gate checks the columns that are bit-deterministic under
       // ANY partitioning: n_nonnull/min/max are exact, and HLL++'s
       // register-max merge is commutative so its estimate is
-      // partition-invariant for a fixed input (SketchDeterminism probe:
-      // identical bits across parts∈{1,3,13,32}×AQE on/off at sf0.01).
+      // partition-invariant for a fixed input (measured: identical
+      // bits across parts∈{1,3,13,32}×AQE on/off at sf0.01).
       // The GK percentile columns are NOT merge-order-invariant (same
       // probe: p50/p75/p99 of the near-unique l_extendedprice move
       // within their error bound with partition count), so they stay
@@ -363,7 +363,7 @@ object RelationalQueries {
     // n_nonnull/min/max are computed exactly by DuckDB; only the HLL++
     // estimate is pinned (VALUES join) — it is partition-invariant for
     // a fixed input (register-max merge is commutative; verified bitwise
-    // across parts×AQE by the SketchDeterminism probe), so the pin is a
+    // across parts×AQE), so the pin is a
     // constant of the sf0.01 gate fixture, not of any partitioning.
     // check.py skips pinned oracles when run off the sf0.01 fixture.
     "q_profile_sketch" ->

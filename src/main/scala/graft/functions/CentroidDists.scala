@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * Σ_f (element_at(v,f+1) − lit(ctr(f)))²))` — materializes a
   * k·d-term expression tree (1024 nodes at k=16, d=64) whose generated
   * code blows past the JIT's huge-method limit: the 2000-row sf0.1
-  * assignment scan measured ~5 s of pure execution (EmbedClusterProbe),
+  * assignment scan measured ~5 s of pure execution,
   * all of it interpretation of a giant fallback method. This
   * expression is the same arithmetic as a data-independent JVM loop:
   * centers ride along as a plain array in the expression instance, one

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * groupBy(id).agg(32 mins) spelling moves every shingle row through a
   * hash aggregate only to reduce back to one row per document. This
   * expression computes the identical values in place (measured 2.4×
-  * on the sf0.1 signature stage, tools/MicroBench minhash).
+  * on the sf0.1 signature stage).
   *
   * Value-compatibility is load-bearing for the DuckDB oracle and is
   * spec-pinned against the aggregate spelling (DedupSimilaritySpec

@@ -133,7 +133,7 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression with 
   * max unigram count, mx2 = max bigram count, dupn/totn = duplicated /
   * total `dupN`-gram positions.
   *
-  * The load-bearing observation (RepetitionProbe, sf0.1): these counts
+  * The load-bearing observation (measured on the sf0.1 corpus): these counts
   * are keyed by (document, gram) — grams never cross documents — so
   * the groupBy spelling shuffles ~175 gram rows per document only to
   * reduce them straight back to one row per document. Counting inside

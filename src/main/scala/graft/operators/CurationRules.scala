@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   * rather than collection-lambda expressions: Spark evaluates
   * higher-order-function lambdas interpreted (CodegenFallback), and
   * the declarative spelling costs two tokenizations, a line split and
-  * five lambda passes per document (CurationProbe records the gap).
+  * five lambda passes per document (q_gopher_quality 0.70 → 0.43 s at
+  * sf0.1 with the kernels, BASELINE.md round 8).
   * At 100 TB the operators are scan-bandwidth-bound, which is the
   * floor.
   *

@@ -136,7 +136,7 @@ object Dedup {
     // isNotNull(sig): a predicate on the signature pushes below the
     // projection and re-evaluates the whole md5 chain per row (the
     // first cut of this operator measured 1.26× SLOWER than the
-    // aggregate for exactly that reason — MinhashProbe). ≥ shingleSize
+    // aggregate for exactly that reason). ≥ shingleSize
     // tokens ⟺ ≥ 1 shingle ⟺ the aggregate spelling kept the doc.
     df.where(size(TextFunctions.tokens(col(textCol))) >= shingleSize)
       .select(col(keyCol).as("id"), sig.as("__sig"))
@@ -202,7 +202,7 @@ object Dedup {
     * each size): 30k docs parity (2.4 vs 2.4 s), 100k docs pair-first
     * 1.5× faster (12.2 → 8.0 s), 1M docs 2.9× faster (54.5 → 18.8 s,
     * shuffle bytes 3155 → 1184 MiB); at the sf0.1 gate (6.6k docs) the
-    * attached spelling is ~0.35 s faster (MicroBench n=7 A/B). The
+    * attached spelling is ~0.35 s faster (n=7 A/B, OPTIMIZATION_r16.md). The
     * probe is a `limit(k+1).count()` over the already-persisted
     * signature frame — it short-circuits after k+1 rows, so at real
     * scale it reads ~one partition, and both spellings are
@@ -676,6 +676,13 @@ object Dedup {
     inc.join(broadcast(confirmed), Seq("fp"), "left_anti")
   }
 
+  /** The packed (id, pos) keys' stand-in for a NULL integral id —
+    * one below `Long.MinValue` in the DECIMAL(38,0) packing space, so
+    * it sorts before every real id of any integral type and ties with
+    * none. Shared with [[PipelineOps.dedupLines]]. */
+  private[operators] def NullId: Column =
+    lit(BigDecimal(Long.MinValue) - 1).cast("decimal(38,0)")
+
   /** Duplicated-span removal — the ExactSubstr pass of Lee et al.
     * 2022, "Deduplicating Training Data Makes Language Models Better"
     * (§3.1): any `k`-token span occurring more than once in the corpus
@@ -697,8 +704,8 @@ object Dedup {
     * shuffles. The duplicate detection is one map-side-combinable
     * groupBy on the span hash carrying `count` + `min(struct(id,
     * pos))`, so the canonical pick costs no window and no second
-    * pass. This is a deliberate skew trade, measured by
-    * DedupSpansProbe at 1M docs: a `ROW_NUMBER over (PARTITION BY
+    * pass. This is a deliberate skew trade, measured at 1M synthetic
+    * docs (BASELINE.md round 10): a `ROW_NUMBER over (PARTITION BY
     * hash)` spelling runs ~1.45× faster on a unique-heavy corpus
     * (sort shuffle beats a 31M-distinct-key hash agg locally), but it
     * co-locates EVERY occurrence of a span on one task — a
@@ -734,7 +741,7 @@ object Dedup {
     // occurrences of every k-token span, as (id, pos, md5(span));
     // persisted for its two consumers (the dup agg + the mark join —
     // measured cheaper than recomputing the shingle expressions,
-    // DedupSpansProbe)
+    // BASELINE.md round 10)
     val occ = graft.CacheScope.track(tokenized
       .select(col(idCol),
         posexplode(graft.functions.Tokenize.wordShingles(col("__toks"), k))
@@ -761,16 +768,14 @@ object Dedup {
       }
     }
     val marked = if (idIsIntegral) {
-      // NULL ids coalesce to Long.MinValue BEFORE packing (round-15
-      // advice): packed(null, pos) would be NULL, which min() skips —
-      // a different winner than the struct branch, whose min sorts
-      // null ids first. Long.MinValue is the packing's smallest id, so
-      // a null-id occurrence wins exactly when the struct spelling
-      // would have it win, and the exclusion compares the same
-      // coalesced value on both sides.
+      // a NULL id packs as NullId, one below every integral id:
+      // packed(null, pos) would be NULL, which min() skips — a
+      // different winner than the struct branch, whose min sorts null
+      // ids first — and a MinValue stand-in would tie with a real
+      // MinValue id at the same position, sparing that occurrence.
+      // The exclusion compares the same coalesced value on both sides.
       def packed(id: Column, pos: Column): Column =
-        coalesce(id, lit(Long.MinValue)).cast("decimal(38,0)") *
-          lit(4294967296L) + pos
+        coalesce(id.cast("decimal(38,0)"), NullId) * lit(4294967296L) + pos
       val dup = occ.groupBy(col("__h"))
         .agg(count(lit(1)).as("__n"),
           min(packed(col(idCol), col("__pos"))).as("__keep"))
@@ -785,8 +790,10 @@ object Dedup {
         .where(col("__n") > 1)
         .select(col("__h"), col(s"__keep.$idCol").as("__kid"),
           col("__keep.__pos").as("__kpos"))
+      // null-safe: with `===` a null canonical id made the test NULL,
+      // so every occurrence at the canonical position was spared
       occ.join(dup, Seq("__h"))
-        .where(!(col(idCol) === col("__kid") && col("__pos") === col("__kpos")))
+        .where(!(col(idCol) <=> col("__kid") && col("__pos") === col("__kpos")))
     }
     // per-document covered positions — volume scales with the
     // duplication rate, not the corpus (a duplicate-free document

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * hash-gateable against a SQL replay. The deliberate floor bias loses
   * ≲ iters·(E + 2N) micro-units of total mass (each out-degree split
   * can strand outdeg−1 units per node per round) — ~1e-5 relative at
-  * any realistic scale, identically on every engine; PageRankProbe
-  * asserts the bound end-to-end at 8M edges.
+  * any realistic scale, identically on every engine; a scale run
+  * checked the bound end-to-end at 8M edges (BASELINE.md round 12).
   *
   * Per iteration (damping d = dampNum/100):
   * {{{ r'(v) = teleport + d * (Σ_{u→v} r(u) div outdeg(u) + danglingSum div N) div 100 }}}

@@ -86,7 +86,7 @@ object PipelineOps {
     * gram rows per document only to reduce them straight back to one
     * row per document. [[graft.functions.RepetitionStats]] counts
     * inside the row instead (measured 1.9 s → ~0.2 s on the sf0.1
-    * corpus, RepetitionProbe): the operator is a pure projection,
+    * corpus): the operator is a pure projection,
     * embarrassingly parallel, input partitioning untouched.
     */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String,
@@ -597,31 +597,20 @@ object PipelineOps {
     }
     val winners = if (idIsIntegral) {
       val two32 = lit(4294967296L)
-      // NULL ids coalesce to the id TYPE's MinValue before packing
-      // (round-15 advice): a NULL packed value would be SKIPPED by
-      // min() while the struct branch sorts null ids first — the
-      // branches must pick the same winner on a mixed null/non-null
-      // line group. Type-aware so the unpack's cast back to the id
-      // type cannot wrap; the sentinel winner joins back to no
-      // document — exactly the struct branch's observable behavior
-      // (a null winner id never equi-joins).
-      val sentinel = {
-        import org.apache.spark.sql.types._
-        base.schema(idCol).dataType match {
-          case IntegerType => Int.MinValue.toLong
-          case ShortType   => Short.MinValue.toLong
-          case ByteType    => Byte.MinValue.toLong
-          case _           => Long.MinValue
-        }
-      }
-      occ.groupBy(md5(col("__line")).as("__h"))
-        .agg(min(coalesce(col(idCol), lit(sentinel)).cast("decimal(38,0)")
-          * two32 + col("__pos"))
-          .as("__w"))
-        .select(
-          ((col("__w") - pmod(col("__w"), two32)) / two32)
-            .cast(base.schema(idCol).dataType).as(idCol),
+      // a NULL id packs as Dedup.NullId, one below every integral id:
+      // a NULL packed value would be SKIPPED by min() while the struct
+      // branch sorts null ids first, and a MinValue stand-in would tie
+      // with a real MinValue id. The unpack turns NullId back into a
+      // null id, which joins back to no document — the struct
+      // branch's observable behavior (a null winner id never
+      // equi-joins).
+      val w = occ.groupBy(md5(col("__line")).as("__h"))
+        .agg(min(coalesce(col(idCol).cast("decimal(38,0)"), Dedup.NullId) * two32 +
+          col("__pos")).as("__w"))
+        .select(((col("__w") - pmod(col("__w"), two32)) / two32).as("__wid"),
           pmod(col("__w"), two32).cast("int").as("__pos"))
+      w.select(when(col("__wid") =!= Dedup.NullId,
+          col("__wid").cast(base.schema(idCol).dataType)).as(idCol), col("__pos"))
     } else {
       occ.groupBy(md5(col("__line")).as("__h"))
         .agg(min(struct(col(idCol), col("__pos"))).as("__w"))
@@ -1152,7 +1141,7 @@ object PipelineOps {
     * total, no single-partition stage, no hot key — measured 3× the
     * window spelling at 10M rows with a 90% hot domain even on
     * local[32], where the window's skew is merely a straggler, not an
-    * executor OOM (SamplerProbe: 10.3 s vs 30.7 s).
+    * executor OOM (measured 10.3 s vs 30.7 s).
     */
   def temperatureSample(df: DataFrame, idCol: String, domainCol: String,
                         n: Long, salt: String = "graft-temp"): DataFrame = {

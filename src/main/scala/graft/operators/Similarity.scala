@@ -284,7 +284,7 @@ object Similarity {
   /** A FITTED, reusable IVF codebook — the amortization handle for the
     * ANN family's one driver-side constant: the bounded-sample Lloyd
     * fit is corpus-size-independent but costs ~28 s at the 100k fit
-    * cap (KnnGraphProbe, BASELINE.md round 13), and every operator
+    * cap (BASELINE.md round 13), and every operator
     * call used to pay it again. Fit ONCE per (corpus, nlist, seed)
     * via [[Similarity.fitIvfCodebook]] and pass the handle to the
     * `*With` variants ([[Similarity.ivfTopKWith]],
@@ -344,7 +344,7 @@ object Similarity {
     * argmin via array_position(min). A single tight-loop expression
     * ([[graft.functions.CentroidDists]]): the k·d-term Column spelling
     * generated JIT-hostile thousand-node code that cost ~5 s of pure
-    * interpretation on a 2000-row scan (EmbedClusterProbe). */
+    * interpretation on a 2000-row scan. */
   private def centerDistArr(centers: Array[Array[Double]], dim: Int) = {
     require(centers.forall(_.length == dim),
       s"codebook dimension ${centers.head.length} != declared dim $dim")
@@ -603,7 +603,7 @@ object Similarity {
     *
     * Scale shape: candidate volume ≈ m·nprobe·(m/nlist) pairs, tuned
     * by nlist (autoNlist ≈ √m keeps per-list size ≈ √m). Measured
-    * (KnnGraphProbe, BASELINE.md round 13): the driver Lloyd fit at
+    * (BASELINE.md round 13): the driver Lloyd fit at
     * the 100k fit-sample cap is a ~28 s CONSTANT term independent of
     * m, while the distributed join term costs ~54M exact cosines/s on
     * 32 cores — the term that grows with the corpus is the
@@ -1047,7 +1047,7 @@ object Similarity {
     * no hot key possible; driver traffic is k·d rows per iteration.
     * The sample fit stays the INIT (deterministic, oracle-replayed);
     * refinement upgrades it to full-corpus optima at a fixed number of
-    * linear passes. RefineProbe: 1M×64-dim vectors, 2 iterations,
+    * linear passes. Measured on 1M×64-dim vectors, 2 iterations:
     * 37 s on local[32] — the per-iteration cost is the component
     * explode (64M rows), all map-side combined into 1024 reducer keys.
     */

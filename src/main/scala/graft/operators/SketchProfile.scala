@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * estimate is partition-invariant for a fixed input — its merge is a
   * register-wise max, which is commutative and associative); GK
   * summaries are NOT — quantile estimates can move within their error
-  * bound under a different partitioning (measured: the
-  * SketchDeterminism probe shows p50/p75/p99 of a near-unique column
+  * bound under a different partitioning (measured across
+  * parts∈{1,3,13,32}×AQE: p50/p75/p99 of a near-unique column
   * shifting bits across partition counts while every other output is
   * bit-identical). The correctness gate therefore checks the
   * deterministic columns (n_nonnull/min/max exactly in SQL, the HLL

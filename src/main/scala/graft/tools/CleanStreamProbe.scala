@@ -2,10 +2,10 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.operators.CorpusPipeline
 
 /** Corpus-scale stream==batch pin for [[CorpusPipeline.cleanStream]]
@@ -29,10 +29,7 @@ import graft.operators.CorpusPipeline
   */
 object CleanStreamProbe {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession("graft-clean-stream")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** Local-only dev harness for the q_coret_lda oracle: runs the exact
   * gate input pipeline and dumps the VB fit's intermediates as JSON so
@@ -11,10 +12,7 @@ object DumpLda {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "/tmp/lda_trace.json"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-dump-lda")
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.expressions.Window
     // this harness keeps the literal percent_rank form because it

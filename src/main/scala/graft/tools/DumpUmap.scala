@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** Local-only dev harness for [[graft.UmapOracle]]: runs the exact
   * q_coret_umap input pipeline and dumps the fit's intermediates as
@@ -12,10 +13,7 @@ object DumpUmap {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "/tmp/umap_trace.json"
     val epochs = if (args.length > 2) args(2).toInt else 300
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-dump-umap")
     spark.sparkContext.setLogLevel("WARN")
     // same key bound as the gate query (MLQueries.q_coret_umap)
     val norm = graft.operators.CoreT.normalizedForTrace(

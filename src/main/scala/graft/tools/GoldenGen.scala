@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import graft.profiler.Profiler
 import graft.plans.Enumerator
 import graft.score.{Scagnostics, Significance}
@@ -8,9 +8,7 @@ import graft.score.{Scagnostics, Significance}
 /** Scratch: print the golden values GoldenSpec pins. */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession("graft-golden-gen")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,9 +1,9 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.operators.Dedup
 
 /** Scale probe for the LSH pair-join payload cut (round 16, guide
@@ -29,12 +29,7 @@ object LshShuffleProbe {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
     val n = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-lsh-shuffle")
     spark.sparkContext.setLogLevel("ERROR")
 
     val srB = new java.util.concurrent.atomic.AtomicLong

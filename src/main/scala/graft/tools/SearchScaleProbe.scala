@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Engine
+import graft.{Engine, LocalSession}
 import graft.sources.Tables
 
 /** End-to-end scale rehearsal of the §3.2 search pipeline at non-toy
@@ -16,11 +14,7 @@ import graft.sources.Tables
   */
 object SearchScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession("graft-search-scale")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
 
@@ -34,9 +28,10 @@ object SearchScaleProbe {
       "l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val nRows = df.count()
 
-    // both profiler paths: exact countDistinct (default — an
-    // expand-based plan that multiplies the scan by #columns) and the
-    // documented 100 TB path (HLL distinct + boundary re-count)
+    // both profiler paths: exact distinct (default — one aggregation
+    // over the rows exploded into one cell per column, grouped by
+    // column index) and the documented 100 TB path (HLL distinct +
+    // boundary re-count)
     for ((label, cfg) <- Seq(
         ("exact-nd", graft.EngineConfig.default),
         ("approx-nd", graft.EngineConfig.default.copy(approxDistinct = true)))) {

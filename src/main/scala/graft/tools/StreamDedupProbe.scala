@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.streaming.StreamingDemo
 
 /** Real-data-scale equivalence + throughput probe for the streaming
@@ -29,10 +29,7 @@ object StreamDedupProbe {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession("graft-stream-dedup")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.functions.{MirrorMath, TSNE}
 import graft.sources.Tables
 
@@ -12,9 +12,7 @@ import graft.sources.Tables
 object TsneDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = LocalSession("graft-tsne-dump")
     spark.sparkContext.setLogLevel("ERROR")
     // same key bound as the gate query (MLQueries.q_coret_tsne)
     val df = Tables.supplier(spark, dir)

@@ -18,4 +18,10 @@ object GraftSqlBridge {
     * specs (graft.CacheScope lifecycle) needs this hop too. */
   def cacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** Blocks until every posted listener event is delivered
+    * (`listenerBus` is private[spark]), so a measurement reads the
+    * run's jobs and stages complete instead of sleeping for them. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -71,6 +71,19 @@ class BenchContractSpec extends AnyFunSuite {
     // ignored (3x of an sf0.1 median means nothing at sf0.001)
     assert(Bench.parseMedians(raw, "/root/testdata/sf0.1").nonEmpty)
     assert(Bench.parseMedians(raw, "/root/testdata/sf0.001").isEmpty)
+    // the writer is the reader's format: a written line parses back to
+    // its medians, through the sf guard too, byte for byte as recorded;
+    // a query whose every run failed (−1) stays out of the totals
+    val written = Bench.mediansLine(Seq(("q_a", 1.234, 1.2), ("q_b", 0.051, 0.05),
+      ("q_c", -1.0, -1.0)), 3, "data/sf0.1", "0.10;0.20")
+    assert(written == """{"metric":"median_total","value":1.285,"unit":"sec","n":3,""" +
+      """"min_total":1.250,"sf":"data/sf0.1","load":"0.10;0.20","queries":""" +
+      """{"q_a":{"med":1.234,"min":1.200},"q_b":{"med":0.051,"min":0.050},""" +
+      """"q_c":{"med":-1.000,"min":-1.000}}}""")
+    val meds = Map("q_a" -> 1.234, "q_b" -> 0.051)
+    assert(Bench.parseMedians(written) == meds)
+    assert(Bench.parseMedians(written, "data/sf0.1/") == meds)
+    assert(Bench.parseMedians(written, "data/sf0.01").isEmpty)
     // malformed input degrades to empty, never throws
     assert(Bench.parseMedians("not json").isEmpty)
     assert(Bench.parseMedians("{}").isEmpty)

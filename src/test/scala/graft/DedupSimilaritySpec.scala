@@ -623,6 +623,27 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out(2L)._2 == "y1" && out(2L)._4 == 6L)
   }
 
+  test("dedupSpans: a NULL id and a MinValue id never share a canonical occurrence") {
+    // both documents open with the same spans at the same positions;
+    // the null id sorts first, so its occurrences are canonical and
+    // the MinValue document loses the copies. The packed (bigint id)
+    // and struct (decimal id) branches must agree.
+    val docs = Seq[(Option[Long], String)](
+      (None, "a b c d"),
+      (Some(Long.MinValue), "a b c d e"),
+      (Some(0L), "x a b c y")).toDF("id", "text")
+    val want = Set[(Option[Long], String, Long, Long)](
+      (None, "a b c d", 4L, 0L),
+      (Some(Long.MinValue), "e", 1L, 4L),
+      (Some(0L), "x y", 2L, 3L))
+    for (idType <- Seq("bigint", "decimal(20,0)")) {
+      val got = Dedup.dedupSpans(docs.withColumn("id", col("id").cast(idType)), "id", "text", k = 3)
+        .withColumn("id", col("id").cast("bigint"))
+        .as[(Option[Long], String, Long, Long)].collect().toSet
+      assert(got == want, idType)
+    }
+  }
+
   test("dedupSpans is partitioning-invariant; empty docs survive as empty rows") {
     val span = (1 to 5).map(i => s"p$i").mkString(" ")
     val docs = ((1L to 40L).map(i => (i, s"doc$i $span end$i")) :+ (99L, ""))
@@ -942,7 +963,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val a = graft.CodebookCache.getOrFit("spec|knn60|nlist=4|seed=9")(fit())
     val b = graft.CodebookCache.getOrFit("spec|knn60|nlist=4|seed=9")(fit())
     assert(fits == 1 && (a eq b), "second lookup must hit the memo")
-    // releaseAll (the Bench/MicroBench per-run hygiene hook) clears it —
+    // releaseAll (the Bench/Measure per-run hygiene hook) clears it —
     // recorded numbers never hide the fit behind a warm memo
     graft.CacheScope.releaseAll()
     val c = graft.CodebookCache.getOrFit("spec|knn60|nlist=4|seed=9")(fit())

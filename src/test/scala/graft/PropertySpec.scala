@@ -152,20 +152,32 @@ class PropertySpec extends SparkSpec {
         nLines <- Gen.choose(0, 6)
         ws <- Gen.listOfN(nLines, Gen.choose(0, 7).map(i => s"w$i"))
       } yield ws.mkString(" "))
-    } yield texts.zipWithIndex.map { case (t, i) => ((i + 1).toLong, t) }
-    forAll(genCorpus, n = 6) { docs =>
-      val got = graft.operators.PipelineOps.dedupLines(
-          docs.toDF("doc_id", "text"), "doc_id", "text", delim = " ")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1).toSeq
+    } yield texts.zipWithIndex.map { case (t, i) => (Option((i + 1).toLong), t) }
+    // lines are claimed in (id, position) order with null ids first,
+    // as min(struct(id, pos)) sorts them; a null-id document claims
+    // its lines but keeps none, since no winner joins back to it
+    def check(docs: Seq[(Option[Long], String)]): Unit = {
       val seen = scala.collection.mutable.Set.empty[String]
       val expect = docs.sortBy(_._1).map { case (id, text) =>
         val segs = text.split(" ", -1).toSeq   // "" splits to [""], like Spark
-        val kept = segs.filter(s => seen.add(s))
+        val kept = segs.filter(s => seen.add(s)).filter(_ => id.nonEmpty)
         (id, kept.mkString(" "), segs.size.toLong, kept.size.toLong)
+      }.sorted
+      // the packed (bigint id) and the struct (decimal id) branches
+      for (idType <- Seq("bigint", "decimal(20,0)")) {
+        val df = docs.toDF("doc_id", "text")
+          .withColumn("doc_id", $"doc_id".cast(idType))
+        val got = graft.operators.PipelineOps.dedupLines(df, "doc_id", "text", delim = " ")
+          .withColumn("doc_id", $"doc_id".cast("bigint"))
+          .as[(Option[Long], String, Long, Long)].collect().sorted.toSeq
+        assert(got == expect, s"$idType docs=$docs")
       }
-      assert(got == expect, s"docs=$docs")
     }
+    forAll(genCorpus, n = 6)(check)
+    // a NULL id and a MinValue id: the null document's lines win and
+    // no line of theirs leaks into the MinValue document
+    check(Seq(None -> "w1 w2", Some(Long.MinValue) -> "w2 w1 w3",
+      Some(0L) -> "w3 w4", None -> "w4", Some(Long.MaxValue) -> "w1 w5"))
   }
 
   test("stripBoilerplate equals the brute-force doc-frequency reference on random corpora") {
