@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.TStep
-import graft.plans.{Beautify, Lineage, Recommendation, Recommender}
+import graft.plans.{Beautify, FoldLocalAggregate, Lineage, Recommendation, Recommender}
 import graft.plans.Recommendation.ChannelFrames
 import graft.profiler.Profiler
 
@@ -27,8 +27,18 @@ import graft.profiler.Profiler
   * included) instead of being replayed and fitted again. The caller
   * decides how long they live — [[graft.api.VisServer]] keeps them
   * until the next /vis/search or /vis/csv.
+  *
+  * Constructing an Engine installs [[FoldLocalAggregate]] on `spark`'s
+  * optimizer, session-wide: a global min / max / count / integral sum
+  * over a driver-local relation (the /vis/csv sheet: the search's
+  * min-max extrema and PCA moments) is evaluated on the driver instead
+  * of as a Spark job. Every other query on the session is unaffected,
+  * and a folded aggregate gives Spark's result, because the rule folds
+  * only aggregates whose result does not depend on row order.
   */
 final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default) {
+
+  FoldLocalAggregate.install(spark)
 
   /** Ingest + profile: returns the (possibly key-augmented) frame and
     * the profile that drives the search (§3.1). */

@@ -29,6 +29,13 @@ import graft.functions.DBSCAN
   *    ([[graft.functions.TSNE]], [[graft.functions.UMAP]]), bounded
   *    like MDS. (The reference's dead `lida` path,
   *    searchthread.py:461-462, stays out.)
+  *  - The global aggregates (the min-max extrema, PCA's moment sums)
+  *    are plain `df.agg(...).head()`. Over a driver-local sheet (the
+  *    /vis/csv upload) a session that built an [[graft.Engine]] folds
+  *    them on the driver ([[graft.plans.FoldLocalAggregate]]), with no
+  *    Spark job. That is exact because min, max, count and long sums
+  *    give the same result in any row order; over any other source
+  *    they run as Spark jobs.
   */
 object CoreT {
 

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.{Bench, CacheScope, LocalSession, SparkEntry}
 
@@ -21,7 +22,8 @@ import graft.{Bench, CacheScope, LocalSession, SparkEntry}
   *
   *  - A query list prints, per query, the n run walls and their
   *    median, then the best run's jobs (submit→end wall, stages,
-  *    tasks) and its slowest stages (wall, executor run time, input,
+  *    tasks, the graft call site of the SQL execution that submitted
+  *    each) and its slowest stages (wall, executor run time, input,
   *    shuffle read and write).
   *  - `headline` measures every `Bench.headline` query. The same
   *    report goes to stderr, and stdout carries one line: the
@@ -52,6 +54,23 @@ object Measure {
       .groupMapReduce(_._1)(t => (1, t._2)) { case ((s1, t1), (s2, t2)) => (s1 + s2, t1 + t2) }
   }
 
+  /** The first `graft.` frame of a call site's long form, e.g. a SQL
+    * execution's `details`. */
+  private[graft] def graftFrame(details: String): Option[String] =
+    details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+
+  /** A job's name: the graft call site of the SQL execution that
+    * submitted it (its `spark.sql.execution.id` property, looked up in
+    * `sqlSites`), else its description, else its last stage's name. AQE
+    * stage jobs and broadcast jobs are submitted from Spark's own
+    * threads, so only their SQL execution names their query's site. */
+  private[graft] def jobName(props: java.util.Properties, sqlSites: collection.Map[Long, String],
+                             lastStage: Option[String]): String = {
+    def prop(k: String) = Option(props).flatMap(p => Option(p.getProperty(k)))
+    prop("spark.sql.execution.id").flatMap(id => sqlSites.get(id.toLong))
+      .orElse(prop("spark.job.description")).orElse(lastStage).getOrElse("")
+  }
+
   private def median(ts: Seq[Double]): Double = {
     val ok = ts.filter(_ >= 0).sorted
     if (ok.isEmpty) -1.0 else ok(ok.size / 2)
@@ -79,12 +98,17 @@ object Measure {
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = mutable.ArrayBuffer.empty[Job]
     val stages = mutable.ArrayBuffer.empty[Stage]
+    val sqlSites = mutable.Map.empty[Long, String]
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => jobs.synchronized {
+          graftFrame(s.details).foreach(sqlSites(s.executionId) = _)
+        }
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("")
-        jobs += Job(e.jobId, desc, e.time, e.stageIds)
+        jobs += Job(e.jobId, jobName(e.properties, sqlSites, e.stageInfos.lastOption.map(_.name)),
+          e.time, e.stageIds)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
         val i = jobs.indexWhere(_.id == e.jobId)

@@ -7,9 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Window}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlanInfo}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -311,12 +313,14 @@ class VisServerSpec extends SparkSpec {
     }
   }
 
-  /** Logical plans of every query execution `body` runs. */
-  private def plansOf(body: => Unit): Seq[LogicalPlan] = {
+  /** One logical plan (optimized unless `phase` says otherwise) of
+    * every query execution `body` runs. */
+  private def plansOf(body: => Unit,
+                      phase: QueryExecution => LogicalPlan = _.optimizedPlan): Seq[LogicalPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.optimizedPlan)
+        plans.add(phase(qe))
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -334,14 +338,19 @@ class VisServerSpec extends SparkSpec {
     val search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""")
     val (_, _, coreT, lineage) = returnedChannels(search).find(_._3 == "pca")
       .getOrElse(fail("the search returned no PCA channel"))
+    // analyzed plans: a fit over the local sheet folds out of the
+    // optimized plan (FoldLocalAggregate), but its query still
+    // aggregates, and a reused frame's preview does not
     var rows = Seq.empty[String]
-    val reused = plansOf { rows = rowSet(postOk("/vis/addV", addVBody(lineage, coreT)).get("data")) }
+    val reused = plansOf({ rows = rowSet(postOk("/vis/addV", addVBody(lineage, coreT)).get("data")) },
+      _.analyzed)
     assert(rows.size == 40)
     assert(reused.nonEmpty, "the preview ran no query")
     assert(!reused.exists(hasAggregate), s"a reused frame ran a fit:\n${reused.mkString("\n")}")
     withReplayServer(csvBody) { replay =>
       var replayed = Seq.empty[String]
-      val fitted = plansOf { replayed = rowSet(replay("/vis/addV", addVBody(lineage, coreT)).get("data")) }
+      val fitted = plansOf({ replayed = rowSet(replay("/vis/addV", addVBody(lineage, coreT)).get("data")) },
+        _.analyzed)
       assert(fitted.exists(hasAggregate), "the replay path ran no fit: the guard cannot fail")
       assert(replayed == rows)
     }
@@ -354,7 +363,25 @@ class VisServerSpec extends SparkSpec {
     }.mkString("[", ",", "]")
     postOk("/vis/csv", s"""{"headers": ["name","tier","price","cost","size","weight"], "body": $body}""")
     var search: JsonNode = null
-    val plans = plansOf { search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""") }
+    // each job's SQL execution, and the executions whose plan ranks
+    // the sheet with a window
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val windowed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def hasWindow(p: SparkPlanInfo): Boolean = p.nodeName == "Window" || p.children.exists(hasWindow)
+    val jobCounter = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if hasWindow(s.sparkPlanInfo) =>
+          windowed.add(s.executionId.toString)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse("none"))
+    }
+    SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobCounter)
+    val plans = try plansOf { search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""") }
+      finally spark.sparkContext.removeSparkListener(jobCounter)
     val types = search.get("vislist").elements().asScalaAll.map(_.get("type").asText())
     assert(types.contains("cat_scatter"), types.toString)
     assert(returnedChannels(search).exists(_._3 == "pca"))
@@ -362,6 +389,13 @@ class VisServerSpec extends SparkSpec {
     // lookups on the driver
     val joins = plans.filter(_.exists(_.isInstanceOf[Join]))
     assert(joins.isEmpty, s"${joins.size} of ${plans.size} plans join:\n${joins.headOption}")
+    // and every aggregate over the sheet (the extrema, the PCA moments)
+    // folds on the driver: the search runs no Spark job, except for the
+    // tpaths that rank a column first, whose aggregates read the rank
+    // T's row_number window over the sheet
+    val unranked = jobs.asScala.filterNot(windowed.contains)
+    assert(unranked.isEmpty, s"${unranked.size} of ${jobs.size} jobs outside a rank window:\n" +
+      plans.filter(p => p.exists(_.isInstanceOf[Aggregate]) && !p.exists(_.isInstanceOf[Window])).mkString("\n"))
   }
 
   test("after a new /vis/csv, returned lineages replay on the new sheet; addT extensions replay") {
