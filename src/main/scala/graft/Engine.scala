@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.TStep
+import graft.operators.{CoreT, TStep}
 import graft.plans.{Beautify, FoldLocalAggregate, Lineage, Recommendation, Recommender}
 import graft.plans.Recommendation.ChannelFrames
 import graft.profiler.Profiler
@@ -99,23 +99,16 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
   }
 
   /** Interactive lineage extension (§3.3): replay `lineageJson` on the
-    * source and apply one more basic step; returns the frame + new id. */
+    * source and apply one more basic step; returns the frame + new id.
+    * Refines take the search's route ([[CoreT.route]]): a 600k-row rank
+    * must not funnel through one partition because it arrived via
+    * /vis/addT, and a chart the search fitted on a sample must rebuild
+    * on the same sample. */
   def addTransform(source: DataFrame, lineageJson: String, step: TStep,
                    profiled: Option[(DataFrame, TableProfile)] = None): (DataFrame, String) = {
     val (pdf, prof) = profileOr(source, profiled)
-    // approxRows + windowRankMaxRows forwarded so interactive
-    // rank/nominalize replays route through the same scale path the
-    // search used (a 600k-row rank must not funnel through one
-    // partition just because it arrived via /vis/addT)
-    Lineage.addStep(pdf, lineageJson, step, prof.keyColumn.toSeq,
-      approxRows = prof.rows, windowRankMaxRows = cfg.windowRankMaxRows,
-      distincts = prof.distinctCounts)
+    Lineage.addStep(pdf, lineageJson, step, prof.keyColumn.toSeq, CoreT.route(prof, cfg))
   }
-
-  /** Sampled-fit routing for interactive rebuilds — the same decision
-    * search makes, so recommended charts replay identically. */
-  private def embedSampleAbove: Long =
-    if (cfg.searchEmbedTs && cfg.searchEmbedSampleFit) cfg.searchEmbedMaxRows else 0L
 
   /** The channel frame for (lineage, core T): the search's executed
     * frame when `frames` holds that exact (core T, steps) pair, else a
@@ -124,10 +117,7 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
                            coreT: String,
                            frames: ChannelFrames): Option[DataFrame] =
     frames.get((coreT, Lineage.fromJson(lineageJson))).orElse(
-      Lineage.addCoreT(pdf, lineageJson, coreT, prof.keyColumn.toSeq, cfg.notCalcuDmT,
-        approxRows = prof.rows, embedSampleAbove = embedSampleAbove,
-        windowRankMaxRows = cfg.windowRankMaxRows,
-        distincts = prof.distinctCounts))
+      Lineage.addCoreT(pdf, lineageJson, coreT, prof.keyColumn.toSeq, CoreT.route(prof, cfg)))
 
   /** Interactive terminal transform on a replayed lineage (§3.3).
     *

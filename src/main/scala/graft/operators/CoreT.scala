@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.DBSCAN
+import graft.{EngineConfig, TableProfile}
+import graft.functions.{DBSCAN, TSNE, UMAP}
 
 /** Core transformations — the ML operators that terminate a tpath
   * (registry T.py:1-178, executor wrappers Tengine.py:146-220).
@@ -19,15 +20,16 @@ import graft.functions.DBSCAN
   *    (SURVEY §7.4.1) — the reference relies on pandas RangeIndex.
   *
   * Execution strategy per operator:
-  *  - PCA / KMeans / LDA: MLlib pipelines — fully distributed, scale path.
-  *  - DBSCAN / MDS: no MLlib implementation; driver-side over a bounded
-  *    collect (grid-indexed DBSCAN, mirrored power-iteration MDS).
-  *    Inputs are capped (`maxDriverRows`) exactly like the reference
-  *    caps its whole input at 400 rows — these operators are
-  *    chart-feeders, not table-scale transforms.
-  *  - t-SNE / UMAP: exact driver-side implementations
-  *    ([[graft.functions.TSNE]], [[graft.functions.UMAP]]), bounded
-  *    like MDS. (The reference's dead `lida` path,
+  *  - PCA: a pinned-moment aggregate plus a driver-side Jacobi.
+  *  - KMeans: a driver-side Lloyd fit over a digest sample plus a scan
+  *    against the center literals.
+  *  - LDA: [[graft.functions.VBLda]]'s distributed EM.
+  *  - DBSCAN / MDS / t-SNE / UMAP: driver-side over a bounded collect
+  *    (grid-indexed DBSCAN, mirrored power-iteration MDS, exact
+  *    [[graft.functions.TSNE]] and [[graft.functions.UMAP]]). Inputs are
+  *    capped (`maxDriverRows`) exactly like the reference caps its whole
+  *    input at 400 rows — these operators are chart-feeders, not
+  *    table-scale transforms. (The reference's dead `lida` path,
   *    searchthread.py:461-462, stays out.)
   *  - The global aggregates (the min-max extrema, PCA's moment sums)
   *    are plain `df.agg(...).head()`. Over a driver-local sheet (the
@@ -39,10 +41,90 @@ import graft.functions.DBSCAN
   */
 object CoreT {
 
-  val dimensionReducing = Set("pca", "tsne", "mds", "umap") // dmTl (T.py)
-  // shared with Recommender.candidates' static-validity filter, which
-  // must mirror transform's arithmetic-based rejections exactly
-  private[graft] val arithmeticOps = Set("sum", "sub", "mul", "div")
+  /** The basic ops that make a tpath arithmetic, in enumeration order. */
+  private[graft] val arithmeticOps = Seq("sum", "sub", "mul", "div")
+
+  /** The embeddings' fit parameters; the defaults are the reference's
+    * (Tfunctions.py:18-37). */
+  final case class EmbedParams(perplexity: Double = 5.0, nNeighbors: Int = 15, epochs: Int = 300)
+
+  /** One core T; every layer reads these facts from [[table]].
+    * `outCols` (of type `outType`) follow the carried key; the null
+    * passthroughs have none, their columns are the tpath's
+    * (Tengine.py:202-212). `dimReducing` / `needsArithmetic`: invalid
+    * after / without an arithmetic step ([[admits]]; dmTl, T.py).
+    * `searchGated`: a search candidate only where
+    * [[Route.searchEmbeds]]. `points`: an embedding's point fit, run by
+    * its exact route and by [[embedSampled]]. `fit`: (tpath output,
+    * numeric features, carry, route) → output. */
+  final case class Decl(name: String, channel: String,
+                        outCols: Seq[String] = Nil, outType: DataType = NullType,
+                        dimReducing: Boolean = false, needsArithmetic: Boolean = false,
+                        searchGated: Boolean = false,
+                        points: Option[(Array[Array[Double]], EmbedParams) =>
+                          Array[Array[Double]]] = None)(
+      val fit: (DataFrame, Seq[String], Seq[String], Route) => Option[DataFrame]) {
+    /** A fitted core T, not a null passthrough. */
+    def fitted: Boolean = outCols.nonEmpty
+  }
+
+  /** Every core T, in the search's candidate order: the "num" rows are
+    * [[graft.plans.Enumerator.numTl]] and the "cat" rows `catTl`. */
+  val table: Seq[Decl] = {
+    val passthrough = (d: DataFrame, _: Seq[String], _: Seq[String], _: Route) => Some(d)
+    Seq(
+      Decl("pca", "num", Seq("PC1", "PC2"), DoubleType, dimReducing = true)(
+        (d, f, c, _) => pca(d, f, c)),
+      Decl("tsne", "num", Seq("tSNE-1", "tSNE-2"), DoubleType, dimReducing = true,
+        searchGated = true, points = Some((p, e) => TSNE.embed(p, e.perplexity)))(
+        (d, f, c, _) => tsne(d, f, c)),
+      Decl("mds", "num", Seq("MDS-1", "MDS-2"), DoubleType, dimReducing = true,
+        points = Some((p, _) => mdsFit(p)))((d, f, c, _) => mds(d, f, c)),
+      Decl("umap", "num", Seq("UMAP-1", "UMAP-2"), DoubleType, dimReducing = true,
+        searchGated = true, points = Some((p, e) => UMAP.embed(p, e.nNeighbors, e.epochs)))(
+        (d, f, c, _) => umap(d, f, c)),
+      Decl("null_num", "num")(passthrough),
+      Decl("null_num1", "num", needsArithmetic = true)(passthrough),
+      Decl("dbscan", "cat", Seq("Category by DBSCAN"), LongType)((d, f, c, _) => dbscan(d, f, c)),
+      Decl("kmeans", "cat", Seq("Category by KMeans"), LongType)((d, f, c, _) => kmeans(d, f, c)),
+      Decl("lda", "cat", Seq("Category by LDA"), StringType)((d, f, c, r) => lda(d, f, c, route = r)),
+      Decl("null_nom1", "cat")(passthrough),
+      Decl("null_nom", "cat")(passthrough))
+  }
+
+  private val byName = table.map(t => t.name -> t).toMap
+
+  def decl(coreT: String): Decl =
+    byName.getOrElse(coreT, throw new IllegalArgumentException(s"unknown core T: $coreT"))
+
+  /** The scale route of a table's tpaths, built by [[route]], so the
+    * search and its refines (/vis/addT, /vis/addV) take the same one:
+    * rank and nominalize leave the single-partition window above
+    * `windowRankMaxRows` rows (same values), nominalize trusts the
+    * profiled `distincts`, and the embeddings fit a digest sample of
+    * `embedSampleCap` rows ([[embedSampled]]). The default is the
+    * chart-scale route: window ranks, exact fits. */
+  final case class Route(approxRows: Long = 0L,
+                         windowRankMaxRows: Long = EngineConfig.default.windowRankMaxRows,
+                         distincts: Map[String, Long] = Map.empty,
+                         embedSampleCap: Option[Int] = None,
+                         searchEmbeds: Boolean = true,
+                         notCalcuDmT: Boolean = EngineConfig.default.notCalcuDmT)
+
+  /** The route of a profiled table's tpaths under `cfg`. The embeddings
+    * are driver fits: above `searchEmbedMaxRows` rows they fit a sample
+    * of that many where `searchEmbedSampleFit` allows, and the search
+    * skips the gated ones where it does not. The source's row count is
+    * every tpath's: each step is row-wise. */
+  def route(profile: TableProfile, cfg: EngineConfig): Route = {
+    val sampled = cfg.searchEmbedTs && cfg.searchEmbedSampleFit &&
+      cfg.searchEmbedMaxRows > 0 && profile.rows > cfg.searchEmbedMaxRows
+    Route(profile.rows, cfg.windowRankMaxRows, profile.distinctCounts,
+      embedSampleCap = Option.when(sampled)(cfg.searchEmbedMaxRows.toInt),
+      searchEmbeds = cfg.searchEmbedTs &&
+        (cfg.searchEmbedSampleFit || profile.rows <= cfg.searchEmbedMaxRows),
+      notCalcuDmT = cfg.notCalcuDmT)
+  }
 
   /** LDA defaults (Tfunctions.py:46-77: n_components=4; seed 9 is the
     * engine-wide deterministic seed). Shared with [[graft.LdaOracle]],
@@ -67,16 +149,17 @@ object CoreT {
                      (body: => DataFrame): Option[DataFrame] =
     if (df.columns.length <= 2 || features.size < minFeatures) None else Some(body)
 
-  private def normalized(df: DataFrame, features: Seq[String], carry: Seq[String]): DataFrame = {
+  private[graft] def normalized(df: DataFrame, features: Seq[String], carry: Seq[String]): DataFrame = {
     val kept = (carry ++ features).distinct
     TBasic.minMaxNormalize(df.select(kept.map(col): _*), features)
   }
 
-  /** [[normalized]] exposed for the oracle dev harness
-    * (graft.tools.DumpUmap) — not part of the operator surface. */
-  private[graft] def normalizedForTrace(df: DataFrame, features: Seq[String],
-                                        carry: Seq[String]): DataFrame =
-    normalized(df, features, carry)
+  /** The carried key columns, typed as in `src`, then `coreT`'s declared
+    * output columns. */
+  private def outSchema(src: DataFrame, carry: Seq[String], coreT: String): StructType = {
+    val t = decl(coreT)
+    StructType(carry.map(src.schema(_)) ++ t.outCols.map(StructField(_, t.outType, nullable = false)))
+  }
 
   /** 2^40 — the fixed-point pin for order-free distributed moment sums
     * (see [[pca]]). */
@@ -170,8 +253,8 @@ object CoreT {
         features.zipWithIndex.map { case (c, i) =>
           (col(c) - lit(means(i))) * lit(v(i))
         }.reduce(_ + _)
-      norm.select(carry.map(col) :+ project(comps(0)).as("PC1")
-        :+ project(comps(1)).as("PC2"): _*)
+      norm.select(carry.map(col) ++
+        decl("pca").outCols.zip(comps).map { case (name, v) => project(v).as(name) }: _*)
     }
 
   /** KMeans(k=3, seed=9) → "Category by KMeans" int64 labels
@@ -231,7 +314,7 @@ object CoreT {
       // MLlib handleInvalid=keep contract of a non-null label (0)
       val pred = coalesce((array_position(array(dists.toIndexedSeq: _*),
         array_min(array(dists.toIndexedSeq: _*))) - 1).cast(LongType), lit(0L))
-      norm.select(carry.map(col) :+ pred.as("Category by KMeans"): _*)
+      norm.select(carry.map(col) :+ pred.as(decl("kmeans").outCols.head): _*)
     }
 
   /** Driver-side Lloyd's algorithm. Init = the first k points, so
@@ -316,8 +399,7 @@ object CoreT {
     * topic-term weights → column "Category by LDA".
     */
   def lda(df: DataFrame, features: Seq[String], carry: Seq[String],
-          k: Int = LdaK, seed: Long = LdaSeed,
-          windowRankMaxRows: Long = 100000L): Option[DataFrame] =
+          k: Int = LdaK, seed: Long = LdaSeed, route: Route = Route()): Option[DataFrame] =
     guarded(df, features) {
       val spark = df.sparkSession
       // rank each feature column (method=first; tie-break = carry key),
@@ -349,7 +431,7 @@ object CoreT {
       val ranked = features.foldLeft(base) { (d, c) =>
         val withRn =
           if (carry.nonEmpty)
-            Rank.rank(d, c, carry, s"__rn_$c", approxRows = n, windowRankMaxRows)
+            Rank.rank(d, c, carry, s"__rn_$c", approxRows = n, route.windowRankMaxRows)
           else
             Rank.minRankByValue(d, c, s"__rn_$c")
         withRn.withColumn(s"__rank_$c", pctBucket(col(s"__rn_$c")))
@@ -402,9 +484,7 @@ object CoreT {
         val g = VBLda.docEStep(countsOf(r), bFinal.value, alpha)
         Row.fromSeq((0 until nCarry).map(r.get) :+ bDesc.value(VBLda.argmax(g)))
       }
-      val carrySchema = StructType(carry.map(c => ranked.schema(c)))
-      spark.createDataFrame(outRdd,
-        StructType(carrySchema :+ StructField("Category by LDA", StringType, nullable = false)))
+      spark.createDataFrame(outRdd, outSchema(ranked, carry, "lda"))
     }
 
   /** DBSCAN(eps=0.25, minPts=5) → "Category by DBSCAN", -1 = outlier
@@ -443,23 +523,14 @@ object CoreT {
       val out = rows.zip(labels).map { case (r, l) =>
         Row.fromSeq(carry.indices.map(r.get) :+ l)
       }
-      val carrySchema = StructType(carry.map(c => norm.schema(c)))
       spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq),
-        StructType(carrySchema :+ StructField("Category by DBSCAN", LongType, nullable = false)))
+        spark.sparkContext.parallelize(out.toIndexedSeq), outSchema(norm, carry, "dbscan"))
     }
 
-  /** Classical (Torgerson) metric MDS → MDS-1, MDS-2
-    * (Tfunctions.py:27-31): double-centered squared-distance Gram
-    * matrix, top-2 eigenpairs, coords = v·√λ. Driver-side (mirrored
-    * power iteration, [[graft.functions.JacobiEig.powerTop]]) over a
-    * bounded collect — sklearn uses SMACOF so
-    * coordinates differ, but both are metric embeddings of the same
-    * distances; tests assert distance preservation, not values. */
   /** Classical-MDS (Torgerson) coordinates for a point set: B = −½JD²J,
     * top-2 eigenpairs by mirrored power iteration + deflation (see
     * [[graft.functions.JacobiEig.powerTop]] — replayable, unlike
-    * LAPACK). Shared by [[mds]] and the sampled-fit path. */
+    * LAPACK). The point fit of both [[mds]] and the sampled-fit path. */
   private def mdsFit(pts: Array[Array[Double]]): Array[Array[Double]] = {
     val n = pts.length
     val d2 = Array.tabulate(n, n) { (i, j) =>
@@ -481,94 +552,61 @@ object CoreT {
     }
   }
 
+  /** Classical (Torgerson) metric MDS → MDS-1, MDS-2
+    * (Tfunctions.py:27-31): double-centered squared-distance Gram
+    * matrix, top-2 eigenpairs, coords = v·√λ ([[mdsFit]]). sklearn uses
+    * SMACOF so coordinates differ, but both are metric embeddings of the
+    * same distances; tests assert distance preservation, not values. */
   def mds(df: DataFrame, features: Seq[String], carry: Seq[String],
           maxDriverRows: Int = 5000): Option[DataFrame] =
+    driverEmbed(df, features, carry, "mds", maxDriverRows, EmbedParams())
+
+  /** Exact t-SNE → tSNE-1, tSNE-2 (Tfunctions.py:18-25: perplexity=5,
+    * method=exact, init=pca for <100 rows). Driver-side deterministic
+    * implementation ([[graft.functions.TSNE]]). */
+  def tsne(df: DataFrame, features: Seq[String], carry: Seq[String],
+           perplexity: Double = 5.0, maxDriverRows: Int = 2000): Option[DataFrame] =
+    driverEmbed(df, features, carry, "tsne", maxDriverRows, EmbedParams(perplexity = perplexity))
+
+  /** UMAP → UMAP-1, UMAP-2 (Tfunctions.py:33-37: umap-learn defaults,
+    * n_neighbors=15, min_dist=0.1). Driver-side deterministic
+    * implementation ([[graft.functions.UMAP]]). */
+  def umap(df: DataFrame, features: Seq[String], carry: Seq[String],
+           nNeighbors: Int = 15, epochs: Int = 300,
+           maxDriverRows: Int = 2000): Option[DataFrame] =
+    driverEmbed(df, features, carry, "umap", maxDriverRows,
+      EmbedParams(nNeighbors = nNeighbors, epochs = epochs))
+
+  /** The exact route of an embedding: its point fit over at most
+    * `maxDriverRows` collected rows. */
+  private def driverEmbed(df: DataFrame, features: Seq[String], carry: Seq[String],
+                          coreT: String, maxDriverRows: Int,
+                          params: EmbedParams): Option[DataFrame] =
     guarded(df, features, minFeatures = 2) {
       val spark = df.sparkSession
       val norm = normalized(df, features, carry)
       // limit BEFORE collect: the cap must protect the driver, not
       // fire after the full frame is already materialized. Rows are
-      // ordered by the carry key so the Gram matrix (and therefore the
-      // replayed eigenvectors) has one canonical layout on any
-      // partitioning — and in the DuckDB oracle. Features are appended
-      // as tie-breakers: for a UNIQUE carry key they change nothing,
-      // and for an empty/non-unique carry they keep the collected
-      // layout deterministic (duplicate feature rows are the only
-      // remaining ties, and those are interchangeable).
+      // ordered by the carry key so the fit's inputs (MDS's Gram matrix,
+      // t-SNE's pair matrices, UMAP's kNN graph and edge list) have one
+      // canonical layout on any partitioning — and in the DuckDB
+      // oracles. Features are appended as tie-breakers: for a UNIQUE
+      // carry key they change nothing, and for an empty/non-unique
+      // carry they keep the collected layout deterministic (duplicate
+      // feature rows are the only remaining ties, and those are
+      // interchangeable).
       val rows = norm.select((carry ++ features).map(col): _*)
         .orderBy((carry ++ features).map(col): _*).limit(maxDriverRows + 1).collect()
       require(rows.length <= maxDriverRows,
-        s"mds driver path capped at $maxDriverRows rows (got ${rows.length})")
+        s"$coreT driver path capped at $maxDriverRows rows (got ${rows.length})")
       val pts = rows.map(r => features.indices.map(i =>
         Option(r.get(carry.length + i)).map(_.toString.toDouble).getOrElse(0.0)).toArray)
-      val coords = mdsFit(pts)
-      val out = rows.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(carry.indices.map(r.get) ++ Seq(coords(i)(0), coords(i)(1)))
-      }
-      val carrySchema = StructType(carry.map(c => norm.schema(c)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq),
-        StructType(carrySchema ++ Seq(StructField("MDS-1", DoubleType, nullable = false),
-          StructField("MDS-2", DoubleType, nullable = false))))
-    }
-
-  /** Exact t-SNE → tSNE-1, tSNE-2 (Tfunctions.py:18-25: perplexity=5,
-    * method=exact, init=pca for <100 rows). Driver-side deterministic
-    * implementation ([[graft.functions.TSNE]]), bounded like mds. */
-  def tsne(df: DataFrame, features: Seq[String], carry: Seq[String],
-           perplexity: Double = 5.0, maxDriverRows: Int = 2000): Option[DataFrame] =
-    guarded(df, features, minFeatures = 2) {
-      val spark = df.sparkSession
-      val norm = normalized(df, features, carry)
-      // limit BEFORE collect: the cap must protect the driver, not
-      // fire after the full frame is already materialized. Canonical
-      // key order (like mds) so the pair matrices — and the replayed
-      // embedding — have one layout on any partitioning.
-      val rows = norm.select((carry ++ features).map(col): _*)
-        .orderBy((carry ++ features).map(col): _*).limit(maxDriverRows + 1).collect()
-      require(rows.length <= maxDriverRows,
-        s"tsne driver path capped at $maxDriverRows rows (got ${rows.length})")
-      val pts = rows.map(r => features.indices.map(i =>
-        Option(r.get(carry.length + i)).map(_.toString.toDouble).getOrElse(0.0)).toArray)
-      val emb = graft.functions.TSNE.embed(pts, perplexity)
+      val emb = decl(coreT).points.get(pts, params)
       val out = rows.zipWithIndex.map { case (r, i) =>
         Row.fromSeq(carry.indices.map(r.get) ++ Seq(emb(i)(0), emb(i)(1)))
       }
-      val carrySchema = StructType(carry.map(c => norm.schema(c)))
       spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq),
-        StructType(carrySchema ++ Seq(StructField("tSNE-1", DoubleType, nullable = false),
-          StructField("tSNE-2", DoubleType, nullable = false))))
-    }
-
-  /** UMAP → UMAP-1, UMAP-2 (Tfunctions.py:33-37: umap-learn defaults,
-    * n_neighbors=15, min_dist=0.1). Driver-side deterministic
-    * implementation ([[graft.functions.UMAP]]), bounded like mds. */
-  def umap(df: DataFrame, features: Seq[String], carry: Seq[String],
-           nNeighbors: Int = 15, epochs: Int = 300,
-           maxDriverRows: Int = 2000): Option[DataFrame] =
-    guarded(df, features, minFeatures = 2) {
-      val spark = df.sparkSession
-      val norm = normalized(df, features, carry)
-      // limit BEFORE collect: the cap must protect the driver, not
-      // fire after the full frame is already materialized. Canonical
-      // key order (like tsne) so the kNN graph, edge list, and SGD
-      // replay see one layout on any partitioning.
-      val rows = norm.select((carry ++ features).map(col): _*)
-        .orderBy((carry ++ features).map(col): _*).limit(maxDriverRows + 1).collect()
-      require(rows.length <= maxDriverRows,
-        s"umap driver path capped at $maxDriverRows rows (got ${rows.length})")
-      val pts = rows.map(r => features.indices.map(i =>
-        Option(r.get(carry.length + i)).map(_.toString.toDouble).getOrElse(0.0)).toArray)
-      val emb = graft.functions.UMAP.embed(pts, nNeighbors, epochs)
-      val out = rows.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(carry.indices.map(r.get) ++ Seq(emb(i)(0), emb(i)(1)))
-      }
-      val carrySchema = StructType(carry.map(c => norm.schema(c)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq),
-        StructType(carrySchema ++ Seq(StructField("UMAP-1", DoubleType, nullable = false),
-          StructField("UMAP-2", DoubleType, nullable = false))))
+        spark.sparkContext.parallelize(out.toIndexedSeq), outSchema(norm, carry, coreT))
     }
 
   /** Sampled-fit out-of-sample embedding — the scale path that lets
@@ -576,7 +614,8 @@ object CoreT {
     * driver-fit bound. Fit: the `sampleCap` rows with the smallest
     * md5(key…:seed) digest (the kmeans fit-sample selection — a seeded
     * deterministic pseudo-random subset, no Spark-internal RNG),
-    * embedded exactly like [[tsne]]/[[umap]]. Transform: every row
+    * embedded by `which`'s declared point fit, the one its exact route
+    * runs ([[Decl.points]]). Transform: every row
     * maps DISTRIBUTED to the inverse-distance-weighted mean of its 3
     * nearest fitted points in normalized feature space — the standard
     * out-of-sample extension for non-parametric embeddings (Bengio et
@@ -606,12 +645,9 @@ object CoreT {
         .collect()
       val pts = fitRows.map(r => Array.tabulate(d)(i => r.getDouble(i + 1)))
       require(pts.nonEmpty, s"$which sampled fit: no rows with complete features")
-      val (emb, names) = which match {
-        case "tsne" => (graft.functions.TSNE.embed(pts, perplexity), ("tSNE-1", "tSNE-2"))
-        case "umap" => (graft.functions.UMAP.embed(pts, nNeighbors, epochs), ("UMAP-1", "UMAP-2"))
-        case "mds"  => (mdsFit(pts), ("MDS-1", "MDS-2"))
-        case other => throw new IllegalArgumentException(s"embedSampled: $other")
-      }
+      val fit = decl(which).points
+        .getOrElse(throw new IllegalArgumentException(s"embedSampled: $which"))
+      val emb = fit(pts, EmbedParams(perplexity, nNeighbors, epochs))
       val bPts = spark.sparkContext.broadcast(pts)
       val bEmb = spark.sparkContext.broadcast(emb)
       val nCarry = carry.length
@@ -651,59 +687,34 @@ object CoreT {
           }
         Row.fromSeq((0 until nCarry).map(r.get) ++ Seq(e1, e2))
       }
-      val carrySchema = StructType(carry.map(c => norm.schema(c)))
-      spark.createDataFrame(outRdd,
-        StructType(carrySchema ++ Seq(StructField(names._1, DoubleType, nullable = false),
-          StructField(names._2, DoubleType, nullable = false))))
+      spark.createDataFrame(outRdd, outSchema(norm, carry, which))
     }
 
-  /** Identity pass-throughs null_num/null_num1/null_nom/null_nom1
-    * (Tengine.py:202-212): selection is done by the tpath; validity
-    * rules live in [[transform]]. */
-  def nullT(df: DataFrame): Option[DataFrame] = Some(df)
-
-  /** Full core-transform dispatch with the reference's plan-validity
-    * rules (Tengine.py:19-75):
-    *  - NOTCALCUDMT: dimension-reducing core T after an arithmetic
-    *    tpath → invalid (None);
-    *  - null_num1 is only valid when the tpath DID contain arithmetic
-    *    (single-column charts must show derived columns).
-    */
+  /** Run a tpath and its core T on the tpath's numeric output columns:
+    * None when [[admits]] rejects the pair. Where `route` sets
+    * `embedSampleCap`, an embedding fits a digest sample of that many
+    * rows ([[embedSampled]]) instead of the exact driver fit. */
   def transform(df: DataFrame, coreT: String, tpath: Seq[TStep],
-                carry: Seq[String], notCalcuDmT: Boolean = true,
-                approxRows: Long = 0L,
-                windowRankMaxRows: Long = 100000L,
-                embedSampleAbove: Long = 0L,
-                distincts: Map[String, Long] = Map.empty): Option[DataFrame] = {
-    val hasArithmetic = tpath.exists(s => arithmeticOps.contains(s.op))
-    if (notCalcuDmT && dimensionReducing.contains(coreT) && hasArithmetic) return None
-    if (coreT == "null_num1" && !hasArithmetic) return None
-    val after = tpath.foldLeft(df)((d, s) =>
-      TBasic(d, s, carry, approxRows, windowRankMaxRows, distincts))
+                carry: Seq[String], route: Route = Route()): Option[DataFrame] = {
+    val t = decl(coreT)
+    if (!admits(coreT, tpath, route.notCalcuDmT)) return None
+    val after = tpath.foldLeft(df)((d, s) => TBasic(d, s, carry, route))
     val feats = numericCols(after).filterNot(carry.contains)
-    // tsne/umap at scale: above `embedSampleAbove` (0 = off) the
-    // sampled-fit out-of-sample path replaces the exact driver fit —
-    // the search pipeline opts in via EngineConfig.searchEmbedSampleFit.
-    // Routing on the SOURCE row count is exact, not an approximation:
-    // every tpath step (select/rank/row-wise arithmetic/astype/
-    // nominalize) is row-wise, so post-tpath cardinality == approxRows
-    def sampledEmbed = embedSampleAbove > 0 && approxRows > embedSampleAbove
-    coreT match {
-      case "pca"    => pca(after, feats, carry)
-      case "kmeans" => kmeans(after, feats, carry)
-      case "lda"    => lda(after, feats, carry, windowRankMaxRows = windowRankMaxRows)
-      case "dbscan" => dbscan(after, feats, carry)
-      case "mds" if sampledEmbed =>
-        embedSampled(after, feats, carry, "mds", sampleCap = embedSampleAbove.toInt)
-      case "mds"    => mds(after, feats, carry)
-      case "tsne" if sampledEmbed =>
-        embedSampled(after, feats, carry, "tsne", sampleCap = embedSampleAbove.toInt)
-      case "umap" if sampledEmbed =>
-        embedSampled(after, feats, carry, "umap", sampleCap = embedSampleAbove.toInt)
-      case "tsne"   => tsne(after, feats, carry)
-      case "umap"   => umap(after, feats, carry)
-      case n if n.startsWith("null") || n == "test" => nullT(after)
-      case other => throw new IllegalArgumentException(s"unknown core T: $other")
+    route.embedSampleCap.filter(_ => t.points.isDefined) match {
+      case Some(cap) => embedSampled(after, feats, carry, coreT, sampleCap = cap)
+      case None => t.fit(after, feats, carry, route)
     }
+  }
+
+  /** The reference's plan-validity rules (Tengine.py:19-75), decided
+    * before anything runs: [[transform]] applies them, and so does the
+    * search before it spends an execution slot on a candidate.
+    *  - NOTCALCUDMT: a dimension-reducing core T after an arithmetic
+    *    step is invalid;
+    *  - a `needsArithmetic` core T (null_num1) is valid only after one. */
+  def admits(coreT: String, steps: Seq[TStep], notCalcuDmT: Boolean): Boolean = {
+    val t = decl(coreT)
+    val hasArithmetic = steps.exists(s => arithmeticOps.contains(s.op))
+    if (t.needsArithmetic) hasArithmetic else !(notCalcuDmT && t.dimReducing && hasArithmetic)
   }
 }

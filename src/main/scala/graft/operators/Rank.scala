@@ -40,7 +40,7 @@ object Rank {
     * keeps whole-stage codegen for chart-scale frames; zipWithIndex for
     * anything large. */
   def rank(df: DataFrame, valueCol: String, tieCols: Seq[String], outCol: String,
-           approxRows: Long, windowMaxRows: Long = 100000L): DataFrame =
+           approxRows: Long, windowMaxRows: Long): DataFrame =
     if (approxRows <= windowMaxRows)
       df.withColumn(outCol, TBasic.rankWindow(valueCol, tieCols))
     else
@@ -193,22 +193,6 @@ object Rank {
       .select(col(groupCol), col("pct"), col(valueCol).as("value"))
   }
 
-  /** Robust (median/IQR) scaling — the outlier-resistant sibling of
-    * [[TBasic.minMaxNormalize]] (one extreme row distorts min-max for
-    * the whole corpus; quartiles don't care): appends
-    * `outCol = (v − median) / (p75 − p25)`.
-    *
-    * The quartiles come from [[exactPercentiles]] — the same
-    * distinct-value prefix-sum rank that keeps q_profile_quantiles off
-    * a global sort — and cross the driver as exactly THREE doubles, so
-    * the scan side is a pure literal projection (codegen'd, zero extra
-    * shuffle). EXACT order statistics, not sketch approximations:
-    * bit-reproducible on any engine and partitioning, which is what
-    * makes the op hash-gateable.
-    *
-    * A zero IQR (≥ half the mass on one value) means the scale is
-    * undefined — rejected loudly rather than silently dividing by
-    * zero. */
   /** Equal-frequency quantile binning, EXACT: each row gets the bucket
     * of its value's FIRST sorted position —
     * `bucket = ((min_rank − 1) · nBuckets) div n` — so tied values
@@ -249,6 +233,22 @@ object Rank {
     df.join(buckets, df(valueCol) <=> buckets(valOut), "left").drop(valOut)
   }
 
+  /** Robust (median/IQR) scaling — the outlier-resistant sibling of
+    * [[TBasic.minMaxNormalize]] (one extreme row distorts min-max for
+    * the whole corpus; quartiles don't care): appends
+    * `outCol = (v − median) / (p75 − p25)`.
+    *
+    * The quartiles come from [[exactPercentiles]] — the same
+    * distinct-value prefix-sum rank that keeps q_profile_quantiles off
+    * a global sort — and cross the driver as exactly THREE doubles, so
+    * the scan side is a pure literal projection (codegen'd, zero extra
+    * shuffle). EXACT order statistics, not sketch approximations:
+    * bit-reproducible on any engine and partitioning, which is what
+    * makes the op hash-gateable.
+    *
+    * A zero IQR (≥ half the mass on one value) means the scale is
+    * undefined — rejected loudly rather than silently dividing by
+    * zero. */
   def robustScale(df: DataFrame, valueCol: String, outCol: String): DataFrame = {
     val q = exactPercentiles(df, valueCol, Seq(25, 50, 75))
       .select(col("pct"), col("value").cast("double"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.EngineConfig
+
 /** Basic transformation IR — the engine's "query language".
   *
   * A tpath is a chain of basic steps terminated by one core transform.
@@ -155,7 +157,7 @@ object TBasic {
     *    codegen it forgoes is noise. */
   def nominalize(df: DataFrame, c: String, outName: String,
                  approxRows: Long = 0L,
-                 windowMaxRows: Long = 100000L,
+                 windowMaxRows: Long = EngineConfig.default.windowRankMaxRows,
                  distinctEstimate: Long = -1L): DataFrame = {
     val distinctVals = df.select(col(c)).where(col(c).isNotNull).distinct()
     val distinctBound: Long =
@@ -183,17 +185,15 @@ object TBasic {
     * add columns, replace = drop inputs then add. `carryCols` threads
     * the key column through every output (SURVEY §7.4.1).
     *
-    * @param approxRows caller's row-count estimate; above
-    *                   `windowRankMaxRows` the rank op switches from the
-    *                   single-partition window to [[Rank.zipWithIndexRank]]
-    *                   (same semantics, range-partitioned)
-    * @param distincts  profiled per-column distinct counts, forwarded
-    *                   to [[nominalize]]'s routing so a replay behind a
-    *                   profile never re-measures cardinality (columns
-    *                   created mid-tpath are absent and measure) */
+    * @param route the table's scale route: above its `windowRankMaxRows`
+    *              rows the rank op switches from the single-partition
+    *              window to [[Rank.zipWithIndexRank]] (same semantics,
+    *              range-partitioned), and its profiled `distincts` feed
+    *              [[nominalize]]'s routing so a replay behind a profile
+    *              never re-measures cardinality (columns created
+    *              mid-tpath are absent and measure) */
   def apply(df: DataFrame, step: TStep, carryCols: Seq[String] = Nil,
-            approxRows: Long = 0L, windowRankMaxRows: Long = 100000L,
-            distincts: Map[String, Long] = Map.empty): DataFrame = {
+            route: CoreT.Route = CoreT.Route()): DataFrame = {
     val ins = resolveInputs(df, step)
     def named(default: String): String = step.outName.getOrElse(default)
 
@@ -218,10 +218,10 @@ object TBasic {
         // appended as "rank "+c beside the original (searchthread.py:470-519);
         // scale path picked by the caller's row estimate
         ins.foldLeft(df)((d, c) =>
-          Rank.rank(d, c, carryCols, "rank " + c, approxRows, windowRankMaxRows))
+          Rank.rank(d, c, carryCols, "rank " + c, route.approxRows, route.windowRankMaxRows))
       case "nominalize" =>
         ins.foldLeft(df)((d, c) => nominalize(d, c, named("nominalize " + c),
-          approxRows, windowRankMaxRows, distincts.getOrElse(c, -1L)))
+          route.approxRows, route.windowRankMaxRows, route.distincts.getOrElse(c, -1L)))
       case other =>
         throw new IllegalArgumentException(s"unknown basic T: $other")
     }

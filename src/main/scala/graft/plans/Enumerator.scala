@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import graft.{EngineConfig, LogicalType, TableProfile}
-import graft.operators.TStep
+import graft.operators.{CoreT, TStep}
 
 /** The tpath cost vector — `Load = (compute, distribution-distance,
   * semantic-distance)` (L.py:1-12, searchthread.py:363-369).
@@ -51,8 +51,9 @@ object Enumerator {
     * it free. */
   val basicTl: Seq[String] = Seq("rank", "aggr", "sum", "sub", "mul", "div")
 
-  val numTl: Seq[String] = Seq("pca", "tsne", "mds", "umap", "null_num", "null_num1")
-  val catTl: Seq[String] = Seq("dbscan", "kmeans", "lda", "null_nom1", "null_nom")
+  /** The core Ts by the channel type they feed, in [[CoreT.table]] order. */
+  val numTl: Seq[String] = CoreT.table.filter(_.channel == "num").map(_.name)
+  val catTl: Seq[String] = CoreT.table.filter(_.channel == "cat").map(_.name)
 
   val RankPrefix = "rank "
 
@@ -168,7 +169,7 @@ object Enumerator {
           TPathCandidate(zero, pre :+ select(Seq(c)))
         }
         val arith = for {
-          t <- Seq("sum", "sub", "mul", "div")
+          t <- CoreT.arithmeticOps
           cluster <- ctx.clusters
           if !(cfg.onlyProcessClusterMoreThan2 && cluster.size == 2)
           if !(Seq("sub", "div", "mul").contains(t) && cluster.size != 2)
@@ -190,7 +191,7 @@ object Enumerator {
         val appended = mutable.ArrayBuffer[TStep]()
         var groupIdx = 0
         for {
-          t <- Seq("sum", "sub", "mul", "div")
+          t <- CoreT.arithmeticOps
           cluster <- ctx.clusters
           if !(cfg.onlyProcessClusterMoreThan2 && cluster.size == 2)
           if !(Seq("sub", "div", "mul").contains(t) && cluster.size != 2)
@@ -246,7 +247,6 @@ object Enumerator {
       }
     }
 
-    val arithmeticOps = Seq("sum", "sub", "mul", "div")
     for (depth <- 1 to cfg.maxTPathDepth) {
       val pruning = depth >= cfg.pruningDepth
       val leaves = nodes.values.filter(n => n.depth == depth - 1 &&
@@ -257,7 +257,7 @@ object Enumerator {
         val newKids = mutable.ArrayBuffer[Nd]()
         for {
           t <- basicTl.drop(startIdx)
-          if arithmeticOps.contains(t)
+          if CoreT.arithmeticOps.contains(t)
           (cluster, i) <- ctx.clusters.zipWithIndex
           if !(t == leaf.lastOp && i <= leaf.lastCluster)
           if !(Seq("sub", "div", "mul").contains(t) && cluster.size != 2)

@@ -51,36 +51,18 @@ object Lineage {
   def replay(source: DataFrame, json: String, carry: Seq[String]): DataFrame =
     fromJson(json).foldLeft(source)((d, s) => TBasic(d, s, carry))
 
-  /** /vis/addT: extend a lineage with one more basic step; returns the
-    * new frame and the new lineage id. */
-  /** `approxRows`/`windowRankMaxRows` must mirror what the SEARCH used
-    * (Engine forwards profile.rows + cfg.windowRankMaxRows): without
-    * them every interactive rank/nominalize replay took the
-    * single-partition global-window path regardless of table size —
-    * exactly the funnel windowRankMaxRows exists to route around. */
-  def addStep(source: DataFrame, json: String, step: TStep,
-              carry: Seq[String], approxRows: Long = 0L,
-              windowRankMaxRows: Long = 100000L,
-              distincts: Map[String, Long] = Map.empty): (DataFrame, String) = {
+  /** /vis/addT: extend a lineage with one more basic step under the
+    * table's `route`; returns the new frame and the new lineage id. */
+  def addStep(source: DataFrame, json: String, step: TStep, carry: Seq[String],
+              route: CoreT.Route = CoreT.Route()): (DataFrame, String) = {
     val steps = fromJson(json) :+ step
-    (steps.foldLeft(source)((d, s) =>
-      TBasic(d, s, carry, approxRows, windowRankMaxRows, distincts)), toJson(steps))
+    (steps.foldLeft(source)((d, s) => TBasic(d, s, carry, route)), toJson(steps))
   }
 
   /** /vis/addV-style terminal transform on a replayed lineage. */
-  /** `approxRows`/`embedSampleAbove` must mirror what the SEARCH used
-    * (Engine passes profile.rows + its sampled-fit config): a chart
-    * recommended through the sampled tsne/umap path must rebuild
-    * through the same path, or /vis/addV would crash on (or silently
-    * re-fit differently than) the very chart search just emitted. */
-  def addCoreT(source: DataFrame, json: String, coreT: String,
-               carry: Seq[String], notCalcuDmT: Boolean = true,
-               approxRows: Long = 0L, embedSampleAbove: Long = 0L,
-               windowRankMaxRows: Long = 100000L,
-               distincts: Map[String, Long] = Map.empty): Option[DataFrame] =
-    CoreT.transform(source, coreT, fromJson(json), carry, notCalcuDmT,
-      approxRows, windowRankMaxRows = windowRankMaxRows,
-      embedSampleAbove = embedSampleAbove, distincts = distincts)
+  def addCoreT(source: DataFrame, json: String, coreT: String, carry: Seq[String],
+               route: CoreT.Route = CoreT.Route()): Option[DataFrame] =
+    CoreT.transform(source, coreT, fromJson(json), carry, route)
 }
 
 /** Demo-presentation reorder of the recommendation list

@@ -162,10 +162,10 @@ object Recommender {
       }.mkString("|")
   }
 
-  /** Dimension-reduction / clustering core Ts: shared tpath enumeration
-    * (threadsharing, T.py:192-199), per-T candidate cap 3, channel
-    * alignment rule. */
-  private val dmTs = Set("pca", "mds", "tsne", "umap", "kmeans", "dbscan", "lda")
+  /** Dimension-reduction / clustering core Ts (the fitted ones): shared
+    * tpath enumeration (threadsharing, T.py:192-199), per-T candidate
+    * cap 3, channel alignment rule. */
+  private val dmTs = CoreT.table.filter(_.fitted).map(_.name)
 
   /** Collision-renaming key join of two channel frames — the ONE
     * spelling shared by the search pipeline and Engine.buildChart's
@@ -229,6 +229,7 @@ object Recommender {
       meanOf(cs.result())
     }
     val key = profile.keyColumn.toSeq
+    val route = CoreT.route(profile, cfg)
     // the source frame feeds every (coreT, tpath) execution — keep it
     // hot, unless it already lives on the driver: Catalyst folds reads
     // of a local relation there, and a cache would turn each of them
@@ -254,8 +255,9 @@ object Recommender {
     }
 
     // ── presearch: enumerate pools, shared across DM core Ts
-    //    (threadsharing, T.py:192-199) ─────────────────────────────────
-    val dmShared = phase("enumerate")(Enumerator.dedupe(Enumerator.enumerate(profile, "pca", cfg)))
+    //    (threadsharing, T.py:192-199): every DM core T enumerates the
+    //    same pool ─────────────────────────────────────────────────────
+    val dmShared = phase("enumerate")(Enumerator.dedupe(Enumerator.enumerate(profile, dmTs.head, cfg)))
     def pool(t: String): Seq[TPathCandidate] =
       if (dmTs.contains(t)) dmShared
       else Enumerator.dedupe(Enumerator.enumerate(profile, t, cfg))
@@ -283,11 +285,7 @@ object Recommender {
     def executeF(coreT: String, tp: TPathCandidate): Future[Option[Executed]] =
       memo.synchronized {
         memo.getOrElseUpdate(s"$coreT :: ${tp.fingerprint}", Future {
-          try CoreT.transform(df, coreT, tp.steps, key, cfg.notCalcuDmT,
-            profile.rows, cfg.windowRankMaxRows,
-            embedSampleAbove = if (cfg.searchEmbedTs && cfg.searchEmbedSampleFit)
-              cfg.searchEmbedMaxRows else 0L,
-            distincts = profile.distinctCounts).map { out =>
+          try CoreT.transform(df, coreT, tp.steps, key, route).map { out =>
             val outCols = out.columns.filterNot(key.contains).toSeq
             Executed(coreT, tp, out, outCols)
           } catch {
@@ -308,9 +306,8 @@ object Recommender {
     // static output-dimension prediction, so only dimension-compatible
     // tpaths are ever executed (channel dim == T output dim,
     // search.py:131)
-    def predictedDim(coreT: String, tp: TPathCandidate): Option[Int] = coreT match {
-      case "pca" | "mds" | "tsne" | "umap" => Some(2)
-      case "kmeans" | "dbscan" | "lda" => Some(1)
+    def predictedDim(t: String, tp: TPathCandidate): Option[Int] = CoreT.decl(t).outCols match {
+      case fitted if fitted.nonEmpty => Some(fitted.size)
       case _ => // null passthroughs: simulate the column set
         var cols: Option[Seq[String]] = Some(Nil)
         tp.steps.foreach { s =>
@@ -327,38 +324,12 @@ object Recommender {
     }
 
     // channel candidates: executed results matching (dim, type) — all
-    // dimension-compatible tpaths dispatched in parallel, then gathered
-    // tsne/umap are in the reference's default search tlist (main.py:91,
-    // T.py:180) and in ours — but they are driver-side fits, so beyond
-    // cfg.searchEmbedMaxRows (default: the reference's own 400-row
-    // scale) the search skips them rather than collect-and-fit per
-    // candidate — unless searchEmbedSampleFit opts into the
-    // sampled-fit out-of-sample path; see the EngineConfig scaladoc
-    val embedSampling = cfg.searchEmbedTs && cfg.searchEmbedSampleFit &&
-      profile.rows > cfg.searchEmbedMaxRows
-    val embedOk = (cfg.searchEmbedTs && profile.rows <= cfg.searchEmbedMaxRows) ||
-      embedSampling
+    // dimension-compatible tpaths dispatched in parallel, then gathered.
+    // The search-gated core Ts (tsne/umap) are driver-side fits that the
+    // route admits only at a scale it can fit (CoreT.route).
     // client tlist restriction + the always-admitted null passthroughs
     // (main.py:92-94)
-    val allowedTs = tlist.map(_ ++ Set("null_num", "null_num1", "null_nom", "null_nom1"))
-    // Statically-doomed candidates must not occupy pre-execution
-    // slots: CoreT.transform rejects null_num1 tpaths WITHOUT
-    // arithmetic (Tengine.py:65-67) and notCalcuDmT rejects
-    // dimension-reducing tpaths WITH it. The reference executes its
-    // whole pool, so its execution-time rejections cost nothing; our
-    // take(perT) scale cap slices BEFORE execution, and on a wide
-    // table the (always-rejected) null_num1 single-selects alone
-    // filled every slot — silently eliminating the arithmetic
-    // null_num1 charts the reference produces (WideTableSearchSpec
-    // pins the fix). The filter mirrors the execution rule exactly,
-    // so the slice only ever spends slots on candidates that can
-    // actually run.
-    def staticallyViable(t: String, tp: TPathCandidate): Boolean = {
-      lazy val hasArith = tp.steps.exists(s => CoreT.arithmeticOps.contains(s.op))
-      if (t == "null_num1") hasArith
-      else if (cfg.notCalcuDmT && CoreT.dimensionReducing.contains(t)) !hasArith
-      else true
-    }
+    val allowedTs = tlist.map(_ ++ CoreT.table.filterNot(_.fitted).map(_.name))
     // memoized per (dim, ctype): the line/bar families re-request the
     // same candidate lists (rel_cat_line once per cat-y candidate) and
     // each rebuild re-ran enumeration + dedup + the gather, all
@@ -371,10 +342,15 @@ object Recommender {
       val ts = if (ctype == "num") Enumerator.numTl else Enumerator.catTl
       val work: Seq[(String, TPathCandidate)] = phase("enumerate") {
         ts.filter(t => allowedTs.forall(_.contains(t)))
-          .filter(t => embedOk || (t != "tsne" && t != "umap")).flatMap { t =>
+          .filter(t => route.searchEmbeds || !CoreT.decl(t).searchGated).flatMap { t =>
           val perT = if (dmTs.contains(t)) 3 else maxCandidatesPerChannel
+          // A candidate transform rejects must not occupy a slot: the
+          // reference executes its whole pool, but take(perT) slices
+          // BEFORE execution, and on a wide table the always-rejected
+          // null_num1 single-selects alone filled every slot
+          // (WideTableSearchSpec pins this).
           pool(t)
-            .filter(tp => staticallyViable(t, tp))
+            .filter(tp => CoreT.admits(t, tp.steps, route.notCalcuDmT))
             .filter(tp => predictedDim(t, tp).forall(d => dim.forall(_ == d)))
             .take(perT).map(t -> _)
         }
@@ -389,7 +365,7 @@ object Recommender {
       // the embed family alone can fill every slot (4 DM Ts × 3 = 12
       // since sampled fit became the default). They sit last in
       // numTl/catTl, so appending keeps the tlist candidate order.
-      val (nulls, rest) = ok.partition(_.coreT.startsWith("null_"))
+      val (nulls, rest) = ok.partition(ex => !CoreT.decl(ex.coreT).fitted)
       rest.take(maxCandidatesPerChannel) ++ nulls
     }
 
@@ -441,7 +417,7 @@ object Recommender {
     val reads = mutable.Map[Executed, FrameRead]()
     def readFrame(ex: Executed): FrameRead = reads.getOrElseUpdate(ex, {
       val label =
-        if (Enumerator.catTl.contains(ex.coreT)) Seq(col(ex.outCols.head).cast("string")) else Nil
+        if (CoreT.decl(ex.coreT).channel == "cat") Seq(col(ex.outCols.head).cast("string")) else Nil
       val rows = ex.df.select(key.map(col) ++ ex.outCols.map(col) ++ label: _*)
         .limit(maxChartRows + 1).collect()
       FrameRead(rows, rows.length <= maxChartRows)

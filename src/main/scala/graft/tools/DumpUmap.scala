@@ -16,7 +16,7 @@ object DumpUmap {
     val spark = LocalSession("graft-dump-umap")
     spark.sparkContext.setLogLevel("WARN")
     // same key bound as the gate query (MLQueries.q_coret_umap)
-    val norm = graft.operators.CoreT.normalizedForTrace(
+    val norm = graft.operators.CoreT.normalized(
       graft.sources.Tables.supplier(spark, dir)
         .where(col("s_suppkey") <= graft.UmapOracle.GateKeyBound),
       Seq("s_nationkey", "s_acctbal"), Seq("s_suppkey"))

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+
 import graft.operators.{CoreT, TStep}
+import graft.plans.Enumerator
 
 class CoreTSpec extends SparkSpec {
   import spark.implicits._
@@ -188,6 +191,21 @@ class CoreTSpec extends SparkSpec {
     assert(CoreT.transform(df, "null_num1", arith, Seq("k")).isDefined)
     // pca with clean tpath → Some
     assert(CoreT.transform(df, "pca", Nil, Seq("k")).isDefined)
+    // every core T: admits agrees with transform, and a fitted core T
+    // emits exactly its declared columns after the key
+    for (t <- Enumerator.numTl ++ Enumerator.catTl; steps <- Seq(Nil, arith)) {
+      val out = CoreT.transform(df, t, steps, Seq("k"))
+      assert(CoreT.admits(t, steps, notCalcuDmT = true) == out.isDefined, s"$t after $steps")
+      val decl = CoreT.decl(t)
+      if (decl.fitted) out.foreach(o => assert(
+        o.schema.fields.toSeq.map(f => f.name -> f.dataType) ==
+          (("k" -> LongType) +: decl.outCols.map(_ -> decl.outType)), t))
+    }
+    assert(CoreT.table.filter(_.fitted).map(d => d.name -> (d.outCols.size, d.outType)).toMap ==
+      Map("pca" -> (2, DoubleType), "mds" -> (2, DoubleType), "tsne" -> (2, DoubleType),
+        "umap" -> (2, DoubleType), "kmeans" -> (1, LongType), "dbscan" -> (1, LongType),
+        "lda" -> (1, StringType)))
+    CacheScope.releaseAll()
   }
 
   test("guard: ≤2 columns → None (Tengine.py:217-220)") {

@@ -1,9 +1,11 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.TStep
+import graft.operators.{CoreT, TStep}
 import graft.plans.Lineage
 import graft.streaming.StreamingDemo
 
@@ -50,6 +52,28 @@ class EngineSpec extends SparkSpec {
     assert(vis.get.columns.toSeq.containsSlice(Seq("UMAP-1", "UMAP-2")))
     assert(vis.get.count() == 3000)
     CacheScope.releaseAll()
+  }
+
+  test("refines take the search's rank route") {
+    // 50 keyed rows: past a 10-row rank bound the rank step takes the
+    // zipWithIndex route (no Window in the plan), under the default
+    // bound the window; the search's route plans the same
+    val keyed = Seq.tabulate(50)(i => (s"row$i", (i * 7 % 13).toDouble, i * 1.0, 2.0 * i))
+      .toDF("name", "a val", "b val", "c val")
+    val rank = TStep("rank", inCols = Seq("a val"))
+    def windowed(df: DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collectFirst { case w: Window => w }.isDefined
+    for ((cfg, window) <- Seq(EngineConfig(windowRankMaxRows = 10) -> false,
+                              EngineConfig.default -> true)) {
+      val engine = new Engine(spark, cfg)
+      val (pdf, prof) = engine.profile(keyed)
+      val (refined, _) = engine.addTransform(pdf, Lineage.toJson(Nil), rank,
+        profiled = Some((pdf, prof)))
+      assert(windowed(refined) == window, cfg)
+      val searched = CoreT.transform(pdf, "null_num", Seq(rank), prof.keyColumn.toSeq,
+        CoreT.route(prof, cfg)).get
+      assert(windowed(searched) == window, cfg)
+    }
   }
 
   test("buildChart assembles bar/scatter data from channel lineages") {

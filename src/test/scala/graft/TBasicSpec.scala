@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Rank, TBasic, TStep}
+import graft.operators.{CoreT, Rank, TBasic, TStep}
 
 class TBasicSpec extends SparkSpec {
   import spark.implicits._
@@ -60,7 +60,7 @@ class TBasicSpec extends SparkSpec {
     val windowed = TBasic(d, TStep("rank", inCols = Seq("v")), carryCols = Seq("k"))
       .select($"k", $"rank v").as[(Long, Long)].collect().toMap
     val scaled = TBasic(d, TStep("rank", inCols = Seq("v")), carryCols = Seq("k"),
-      approxRows = 200L, windowRankMaxRows = 100L) // force the scale path
+      CoreT.Route(approxRows = 200L, windowRankMaxRows = 100L)) // force the scale path
       .select($"k", $"rank v").as[(Long, Long)].collect().toMap
     assert(windowed == scaled)
   }
