@@ -29,12 +29,15 @@ import graft.profiler.Profiler
   * until the next /vis/search or /vis/csv.
   *
   * Constructing an Engine installs [[FoldLocalAggregate]] on `spark`'s
-  * optimizer, session-wide: a global min / max / count / integral sum
-  * over a driver-local relation (the /vis/csv sheet: the search's
-  * min-max extrema and PCA moments) is evaluated on the driver instead
-  * of as a Spark job. Every other query on the session is unaffected,
-  * and a folded aggregate gives Spark's result, because the rule folds
-  * only aggregates whose result does not depend on row order.
+  * optimizer, session-wide: an order-free aggregate (min / max / count /
+  * integral sum, one distinct group, `percentile_approx` below half its
+  * accuracy; global or grouped) over a driver-local relation, or over a
+  * project / filter / explode chain of one, is evaluated on the driver
+  * instead of as Spark jobs. On the /vis/csv sheet that is the profile's
+  * aggregation and the search's min-max extrema and PCA moments. Every
+  * other query on the session is unaffected, and a folded aggregate
+  * gives Spark's result, because the rule folds only aggregates whose
+  * result does not depend on row order.
   */
 final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default) {
 

@@ -1,6 +1,9 @@
 package graft.profiler
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,17 +15,23 @@ import graft.operators.Rank
   * (spreadsheet.py:46-282).
   *
   * One aggregation collects every per-column stat: row count, exact
-  * distinct for key detection, nulls, min/max, a sampled value for
-  * date sniffing and the K-bucket quantile signature. Each row is
-  * exploded into one cell per column and the cells are grouped by
-  * column index, so the query holds ONE distinct group (the typed cell
-  * value) whatever the width. Spark plans a single distinct group
-  * directly; several `countDistinct`s would go through
-  * `RewriteDistinctAggregates`, whose `Expand` orders its groups by
+  * distinct for key detection, nulls, min/max, the smallest string
+  * for date sniffing (so a column that mixes date-like and plain
+  * strings is typed by its smallest string) and the K-bucket quantile
+  * signature. Each row is exploded into one cell per column and the
+  * cells are grouped by column index, so the query holds ONE distinct
+  * group (the typed cell value) whatever the width. Spark plans a
+  * single distinct group directly; several `countDistinct`s would go
+  * through `RewriteDistinctAggregates`, whose `Expand` orders its groups by
   * hashing expressions that carry fresh expression ids — every new
   * frame of the same shape then got a new projection order and new
   * generated code. One group keeps the plan, and so the compiled
   * classes, the same for every table of one shape.
+  *
+  * Every stat is order-free (no `first`), so on a driver-local table
+  * (the /vis/csv sheet) `graft.plans.FoldLocalAggregate`, once an
+  * `Engine` has installed it, evaluates the whole aggregation on the
+  * driver with no Spark job, and the profile equals Spark's.
   *
   * Everything downstream — type rules, key precedence, Wasserstein
   * distances, DBSCAN column clustering, name clustering — is
@@ -35,8 +44,8 @@ object Profiler {
 
   /** Per-column facts from the aggregation: `min`/`max` and
     * `quantiles` are over the numeric view (empty quantiles when the
-    * column has no non-NaN value), `sample` is one non-null value cast
-    * to string, for the date sniffer. */
+    * column has no non-NaN value), `sample` is the smallest non-null
+    * value cast to string, for the date sniffer. */
   private[graft] final case class RawStats(
       name: String, dt: DataType, distinct: Long, nulls: Long,
       min: Option[Double], max: Option[Double], sample: Option[String],
@@ -156,7 +165,9 @@ object Profiler {
       if (useApprox) approx_count_distinct(col("v"), 0.01) else countDistinct(col("v")),
       count(lit(1)) - count(col("v")),
       min(d), max(d),
-      first(col("s"), ignoreNulls = true),
+      // the date sniffer's sample: the smallest string, which skips
+      // nulls and, unlike first(), does not depend on row order
+      min(col("s")),
       // GK signatures (accuracy 1000 = relative error 0.001) over the
       // non-NaN values: percentile_approx ranks NaN above every
       // double, which would turn a NaN-bearing column's upper
@@ -250,9 +261,10 @@ object Profiler {
       }
     }
 
-    // synthetic key when none inferred (spreadsheet.py:168-177);
-    // zipWithIndex keeps assignment distributed + deterministic for a
-    // fixed file layout (no Window single-partition funnel)
+    // synthetic key when none inferred (spreadsheet.py:168-177):
+    // numbered on the driver for a local table, else by zipWithIndex,
+    // distributed and deterministic for a fixed file layout (no Window
+    // single-partition funnel)
     var out = df
     if (key.isEmpty) {
       out = appendDefaultIndex(df)
@@ -328,11 +340,19 @@ object Profiler {
       clean(dimClusters ++ unitClusters), clean(unitClusters), clean(nameClusters)))
   }
 
-  /** Append a 0..n-1 `defaultindex` column without a global sort. */
+  /** Append a 0..n-1 `defaultindex` column without a global sort. A
+    * driver-local table stays local: its rows are numbered in row order
+    * on the driver (the numbers `zipWithIndex` gives), so later reads of
+    * it keep folding there instead of running jobs over an RDD. */
   def appendDefaultIndex(df: DataFrame): DataFrame = {
-    val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd,
-      StructType(df.schema.fields :+ StructField("defaultindex", LongType, nullable = false)))
+    val schema = StructType(df.schema.fields :+ StructField("defaultindex", LongType, nullable = false))
+    def indexed(r: Row, i: Long) = Row.fromSeq(r.toSeq :+ i)
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        df.sparkSession.createDataFrame(
+          df.collect().toSeq.zipWithIndex.map { case (r, i) => indexed(r, i.toLong) }.asJava, schema)
+      case _ => df.sparkSession.createDataFrame(df.rdd.zipWithIndex().map((indexed _).tupled), schema)
+    }
   }
 
   /** The per-column stats as a DataFrame — the declared-query surface
@@ -340,7 +360,6 @@ object Profiler {
     * typed double and SQL-comparable). */
   def profileStatsDF(spark: SparkSession, df: DataFrame, cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val (_, prof) = profile(df, cfg)
-    import scala.jdk.CollectionConverters._
     val rows = prof.columns
       .filter(c => c.min.isDefined && (c.sparkType != "date" &&
         c.sparkType != "timestamp" && c.sparkType != "timestamp_ntz"))

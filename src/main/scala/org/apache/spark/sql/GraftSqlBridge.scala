@@ -13,6 +13,13 @@ object GraftSqlBridge {
   def expression(spark: SparkSession, c: Column): Expression =
     spark.asInstanceOf[classic.SparkSession].expression(c)
 
+  /** `e` with its floating-point values normalised (NaN one value,
+    * -0.0 as 0.0) the way Spark's planner normalises grouping keys and
+    * distinct values; `NormalizeFloatingNumbers.normalize` is
+    * private[sql]. */
+  def normalizeFloats(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** True when the session's CacheManager holds no cached plans —
     * `sharedState` is private[sql], so the cache-leak assertion in
     * specs (graft.CacheScope lifecycle) needs this hop too. */

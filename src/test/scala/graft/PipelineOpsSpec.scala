@@ -244,8 +244,11 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("snapshotDiff plan: digest aggregates feed the full-outer id join") {
-    val a = Seq((1L, "x")).toDF("id", "text")
-    val b = Seq((1L, "x")).toDF("id", "text")
+    // RDD-backed snapshots, so Spark plans the aggregates: over local
+    // ones they fold on the driver once an Engine has installed
+    // FoldLocalAggregate on the session
+    val a = spark.sparkContext.parallelize(Seq((1L, "x"))).toDF("id", "text")
+    val b = spark.sparkContext.parallelize(Seq((1L, "x"))).toDF("id", "text")
     val lp = PipelineOps.snapshotDiff(a, b, "id", "text")
       .queryExecution.optimizedPlan
     // the join's direct children must be the (id, digest) aggregates —

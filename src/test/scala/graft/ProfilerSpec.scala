@@ -7,14 +7,16 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SpecBus
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.{DBSCAN, DateSniffer}
+import graft.plans.FoldLocalAggregate
 import graft.profiler.{Profiler, SemClusters}
 
 class ProfilerSpec extends SparkSpec {
@@ -58,6 +60,26 @@ class ProfilerSpec extends SparkSpec {
       .toDF("d", "v")
     val (_, p) = Profiler.profile(df)
     assert(p.column("d").get.logicalType == LogicalType.Date)
+  }
+
+  test("a column mixing date-like and plain strings is typed by its smallest string, on any partitioning") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("when", StringType),
+      StructField("v", DoubleType)))
+    // the first rows are plain strings: a first-value sample read
+    // "pending" on one partition and could read either kind on four
+    val rows = (0 until 40).map { i =>
+      Row(i.toLong, i % 4 match {
+        case 0 => "pending"
+        case 1 => null
+        case _ => s"${i % 12 + 1}/${i % 28 + 1}/2020"
+      }, (i % 13) * 1.5)
+    }
+    val local = Profiler.profile(spark.createDataFrame(rows.asJava, schema))._2
+    assert(local.column("when").get.logicalType == LogicalType.Date)
+    Seq(1, 4).foreach { parts =>
+      assertSameProfile(Profiler.profile(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema))._2, local)
+    }
   }
 
   test("DateSniffer matches reference formats") {
@@ -242,8 +264,16 @@ class ProfilerSpec extends SparkSpec {
   /** 60 rows over every profiled type: `x` holds NaN, −0.0, 0.0 and
     * nulls, `empty` is all null, `name` is the natural key. `shift`
     * moves every value, for a second table of the same shape. */
-  private def wideTable(shift: Int = 0, n: Int = 60): DataFrame = {
-    val rows = (0 until n).map { i =>
+  private def wideTable(shift: Int = 0, n: Int = 60): DataFrame =
+    spark.createDataFrame(wideRows(shift, n).asJava, wideSchema)
+
+  /** The rows of [[wideTable]] as an RDD-backed frame over 4 partitions,
+    * which no local fold touches: Spark runs its profile. */
+  private def wideRddTable(shift: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(wideRows(shift, 60), 4), wideSchema)
+
+  private def wideRows(shift: Int, n: Int): Seq[Row] =
+    (0 until n).map { i =>
       val j = i + shift
       val x: Any = i match {
         case 0 | 3 => Double.NaN
@@ -259,8 +289,6 @@ class ProfilerSpec extends SparkSpec {
         LocalDateTime.of(2021, 6, 1, 0, 0).plusMinutes(j.toLong * j),
         (i % 10) * 2.5 + shift, null)
     }
-    spark.createDataFrame(rows.asJava, wideSchema)
-  }
 
   /** The former two-aggregation formulation, kept as the reference:
     * pass 1 is one `agg` with a `countDistinct` per column, pass 2 one
@@ -395,27 +423,54 @@ class ProfilerSpec extends SparkSpec {
     }
   }
 
-  test("one profile is one query with no Expand; a same-shape table compiles nothing") {
-    Profiler.profile(wideTable(shift = 1)) // warm: this shape compiles once
+  /** Profiles `table(1)`, which compiles its shape once, then
+    * `table(2)`: the second profile's optimized plans, Janino compiles
+    * and Spark jobs. */
+  private def secondProfile(table: Int => DataFrame): (Seq[LogicalPlan], Long, Int) = {
+    Profiler.profile(table(1))
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.optimizedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobCounter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val df = table(2)
     SpecBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(jobCounter)
     val compiled = try {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      Profiler.profile(wideTable(shift = 2))
+      Profiler.profile(df)
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     } finally {
       SpecBus.drain(spark.sparkContext)
       spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(jobCounter)
     }
-    val ran = plans.toArray(Array.empty[LogicalPlan]).toSeq
+    (plans.toArray(Array.empty[LogicalPlan]).toSeq, compiled, jobs.get)
+  }
+
+  test("one profile is one query with no Expand; a same-shape table compiles nothing") {
+    // every Engine installs the fold: the local table is profiled on
+    // the driver
+    FoldLocalAggregate.install(spark)
+    val (ran, compiled, jobs) = secondProfile(shift => wideTable(shift))
     assert(ran.size == 1, s"${ran.size} query executions:\n${ran.mkString("\n")}")
     assert(!ran.head.exists(_.isInstanceOf[Expand]), ran.head.toString)
     assert(compiled == 0, s"a second table of the same shape compiled $compiled classes")
+    assert(jobs == 0, s"the profile of a local table ran $jobs Spark jobs")
+  }
+
+  test("over an RDD-backed table, one profile is one Spark query with no Expand; a same-shape table compiles nothing") {
+    val (ran, compiled, jobs) = secondProfile(wideRddTable)
+    assert(ran.size == 1, s"${ran.size} query executions:\n${ran.mkString("\n")}")
+    assert(ran.head.exists(_.isInstanceOf[Aggregate]), s"Spark did not run the profile:\n${ran.head}")
+    assert(!ran.head.exists(_.isInstanceOf[Expand]), ran.head.toString)
+    assert(compiled == 0, s"a second table of the same shape compiled $compiled classes")
+    assert(jobs > 0)
   }
 }

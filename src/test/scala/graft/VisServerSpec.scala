@@ -363,8 +363,31 @@ class VisServerSpec extends SparkSpec {
     }.mkString("[", ",", "]")
     postOk("/vis/csv", s"""{"headers": ["name","tier","price","cost","size","weight"], "body": $body}""")
     var search: JsonNode = null
-    // each job's SQL execution, and the executions whose plan ranks
-    // the sheet with a window
+    var plans = Seq.empty[LogicalPlan]
+    val jobs = jobsOf {
+      plans = plansOf { search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""") }
+    }
+    val types = search.get("vislist").elements().asScalaAll.map(_.get("type").asText())
+    assert(types.contains("cat_scatter"), types.toString)
+    assert(returnedChannels(search).exists(_._3 == "pca"))
+    // every channel read is complete: CDM labels and chart data are key
+    // lookups on the driver
+    val joins = plans.filter(_.exists(_.isInstanceOf[Join]))
+    assert(joins.isEmpty, s"${joins.size} of ${plans.size} plans join:\n${joins.headOption}")
+    // and every aggregate over the sheet (the extrema, the PCA moments)
+    // folds on the driver: the search runs no Spark job, except for the
+    // tpaths that rank a column first, whose aggregates read the rank
+    // T's row_number window over the sheet
+    assert(jobs.unranked.isEmpty, s"${jobs.unranked.size} of ${jobs.all.size} jobs outside a rank window:\n" +
+      plans.filter(p => p.exists(_.isInstanceOf[Aggregate]) && !p.exists(_.isInstanceOf[Window])).mkString("\n"))
+  }
+
+  /** Every Spark job `body` runs, by the SQL execution that submitted
+    * it ("none" outside one), and those outside an execution that ranks
+    * the sheet with a window. */
+  private final case class Jobs(all: Seq[String], unranked: Seq[String])
+
+  private def jobsOf(body: => Unit): Jobs = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val windowed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     def hasWindow(p: SparkPlanInfo): Boolean = p.nodeName == "Window" || p.children.exists(hasWindow)
@@ -380,22 +403,44 @@ class VisServerSpec extends SparkSpec {
     }
     SpecBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(jobCounter)
-    val plans = try plansOf { search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""") }
-      finally spark.sparkContext.removeSparkListener(jobCounter)
-    val types = search.get("vislist").elements().asScalaAll.map(_.get("type").asText())
-    assert(types.contains("cat_scatter"), types.toString)
-    assert(returnedChannels(search).exists(_._3 == "pca"))
-    // every channel read is complete: CDM labels and chart data are key
-    // lookups on the driver
-    val joins = plans.filter(_.exists(_.isInstanceOf[Join]))
-    assert(joins.isEmpty, s"${joins.size} of ${plans.size} plans join:\n${joins.headOption}")
-    // and every aggregate over the sheet (the extrema, the PCA moments)
-    // folds on the driver: the search runs no Spark job, except for the
-    // tpaths that rank a column first, whose aggregates read the rank
-    // T's row_number window over the sheet
-    val unranked = jobs.asScala.filterNot(windowed.contains)
-    assert(unranked.isEmpty, s"${unranked.size} of ${jobs.size} jobs outside a rank window:\n" +
-      plans.filter(p => p.exists(_.isInstanceOf[Aggregate]) && !p.exists(_.isInstanceOf[Window])).mkString("\n"))
+    try body finally {
+      SpecBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(jobCounter)
+    }
+    val all = jobs.asScala.toSeq
+    Jobs(all, all.filterNot(windowed.contains))
+  }
+
+  test("a keyless 400-row sheet stays local: /vis/csv runs no job, the search none outside a rank window") {
+    val headers = Seq("tier", "price", "cost", "size")
+    // no column is all-distinct: the profile appends defaultindex
+    val rows = (1 to 400).map { i =>
+      Seq(Seq("gold", "silver", "bronze")(i % 3), (i % 97) * 1.5,
+        math.round(math.sin(i * 0.1) * 400) / 10.0 + 50, (i % 9) * 2.0)
+    }
+    val body = rows.map(r => (s""""${r.head}"""" +: r.tail.map(_.toString)).mkString("[", ",", "]"))
+      .mkString("[", ",", "]")
+    var csv: JsonNode = null
+    val ingest = jobsOf {
+      csv = postOk("/vis/csv", s"""{"headers": ${headers.map(h => s""""$h"""").mkString("[", ",", "]")},
+                                  | "body": $body}""".stripMargin)
+    }
+    assert(csv.get("key").asText() == "defaultindex", csv.toString)
+    assert(ingest.all.isEmpty, s"/vis/csv ran ${ingest.all.size} Spark jobs")
+    val query = """{"charts": ["scatter"], "tlist": ["pca"]}"""
+    var search: JsonNode = null
+    val searched = jobsOf { search = postOk("/vis/search", query) }
+    assert(searched.unranked.isEmpty, s"${searched.unranked.size} of ${searched.all.size} jobs outside a rank window")
+    // the same rows as an RDD-backed frame: Spark profiles, numbers and
+    // searches them, and gives the same charts and scores
+    val schema = StructType(headers.map(h => StructField(h, if (h == "tier") StringType else DoubleType)))
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row.fromSeq), 4), schema)
+    val want = new Engine(spark).search(rdd, Seq("scatter"), tlist = Some(Set("pca")))
+      .visList.map(c => (c.signature, c.score))
+    val got = search.get("vislist").elements().asScalaAll
+      .map(c => (c.get("signature").asText(), c.get("score").asDouble()))
+    assert(got.nonEmpty)
+    assert(got.sorted == want.sorted)
   }
 
   test("after a new /vis/csv, returned lineages replay on the new sheet; addT extensions replay") {
