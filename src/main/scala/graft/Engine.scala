@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{CoreT, TStep}
-import graft.plans.{Beautify, FoldLocalAggregate, Lineage, Recommendation, Recommender}
+import graft.plans.{Beautify, Lineage, Recommendation, Recommender}
 import graft.plans.Recommendation.ChannelFrames
 import graft.profiler.Profiler
 
@@ -28,9 +28,10 @@ import graft.profiler.Profiler
   * decides how long they live — [[graft.api.VisServer]] keeps them
   * until the next /vis/search or /vis/csv.
   *
-  * Constructing an Engine installs [[FoldLocalAggregate]] on `spark`'s
-  * optimizer, session-wide: an order-free aggregate (min / max / count /
-  * integral sum, one distinct group, `percentile_approx` below half its
+  * Every session carries [[graft.plans.FoldLocalAggregate]] in its optimizer
+  * (`graft.functions.GraftExtensions`, found by ServiceLoader): an
+  * order-free aggregate (min / max / count / integral or small-decimal
+  * sum, one distinct group, `percentile_approx` below half its
   * accuracy; global or grouped) over a driver-local relation, or over a
   * project / filter / explode chain of one, is evaluated on the driver
   * instead of as Spark jobs. On the /vis/csv sheet that is the profile's
@@ -40,8 +41,6 @@ import graft.profiler.Profiler
   * result does not depend on row order.
   */
 final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default) {
-
-  FoldLocalAggregate.install(spark)
 
   /** Ingest + profile: returns the (possibly key-augmented) frame and
     * the profile that drives the search (§3.1). */

@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_CPUS`, else the machine's cores capped at 32.
   *
   * The test sessions (`SparkSpec`) and the benchmark driver under
-  * `perfbench/` build their own.
+  * `perfbench/` build their own; those get the engine's optimizer rule
+  * and SQL functions too, from `graft.functions.GraftExtensions`, which
+  * Spark finds on the classpath for every session.
   */
 object LocalSession {
   def apply(appName: String): SparkSession = {

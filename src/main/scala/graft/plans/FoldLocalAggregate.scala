@@ -2,13 +2,13 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences, CollectionGenerator, Expression, ExpressionSet, GenericInternalRow, InterpretedMutableProjection, InterpretedProjection, InterpretedUnsafeProjection, JoinedRow, Literal, Predicate, SubqueryExpression, Unevaluable, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, ApproximatePercentile, Count, DeclarativeAggregate, ImperativeAggregate, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Folds an aggregate over a driver-local relation into the local
   * relation it evaluates to, the way Spark's own `ConvertToLocalRelation`
@@ -28,7 +28,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * deduplicated before they update the distinct functions.
   *
   * It folds only functions whose result cannot depend on row order or
-  * partitioning: `min`, `max`, `count` and `sum` over integral input, and
+  * partitioning: `min`, `max`, `count`, `sum` over integral input or a
+  * decimal of precision at most 8 (its buffer holds 10 more digits, so
+  * no order of a driver-local input can overflow it), and
   * `percentile_approx` with a literal accuracy A while every group holds
   * fewer than A/2 rows. In that range the GK summary never merges a
   * sample and every delta is 0, however Spark splits and merges it, so
@@ -37,15 +39,18 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * else (`first`/`last`, a double `sum`, `avg`, a sketch, a `FILTER`
   * clause, several distinct groups) and every plan over a file scan stay
   * with Spark unchanged, so a folded result is the one Spark computes.
+  *
+  * Every session carries the rule from its first query: `graft.functions.
+  * GraftExtensions` injects it into the "Pre CBO Rules" batch, which runs
+  * once, after the operator-optimization batches have pushed projections
+  * and filters down to the relation. No extension hook reaches the last
+  * batch ("User Provided Optimizers"), and the fixed-point
+  * operator-optimization batches would run the rule on every iteration.
+  * Running before "Decimal Optimizations" is why a small-decimal `sum`
+  * is folded as a decimal sum: that batch rewrites it to a `sum` of
+  * unscaled longs only later.
   */
 object FoldLocalAggregate extends Rule[LogicalPlan] {
-
-  /** Adds the rule to `spark`'s optimizer once; safe to call again and
-    * from several threads. */
-  def install(spark: SparkSession): Unit = spark.synchronized {
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(this)) ex.extraOptimizations = ex.extraOptimizations :+ this
-  }
 
   private val integral = Set[Any](ByteType, ShortType, IntegerType, LongType)
 
@@ -57,7 +62,10 @@ object FoldLocalAggregate extends Rule[LogicalPlan] {
   private def orderFree(ae: AggregateExpression): Boolean =
     ae.filter.isEmpty && (ae.aggregateFunction match {
       case _: Min | _: Max | _: Count => true
-      case s: Sum => integral(s.child.dataType)
+      case s: Sum => s.child.dataType match {
+        case d: DecimalType => d.precision <= 8
+        case t => integral(t)
+      }
       case p: ApproximatePercentile => !ae.isDistinct && accuracy(p).isDefined
       case _ => false
     })

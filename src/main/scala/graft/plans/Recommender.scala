@@ -205,7 +205,6 @@ object Recommender {
                 onExecutionFailure: (String, String, Throwable) => Unit = logFailure,
                 tlist: Option[Set[String]] = None,
                 slist: Option[Set[String]] = None): Recommendation = {
-    FoldLocalAggregate.install(spark)
     // mean-of-enabled (search.py:792); empty → 0 like utils.mean's
     // safe default on an all-disabled slist
     def enabled(name: String): Boolean = slist.forall(_.contains(name))

@@ -29,9 +29,9 @@ import graft.operators.Rank
   * classes, the same for every table of one shape.
   *
   * Every stat is order-free (no `first`), so on a driver-local table
-  * (the /vis/csv sheet) `graft.plans.FoldLocalAggregate`, once an
-  * `Engine` has installed it, evaluates the whole aggregation on the
-  * driver with no Spark job, and the profile equals Spark's.
+  * (the /vis/csv sheet) `graft.plans.FoldLocalAggregate`, which every
+  * session carries, evaluates the whole aggregation on the driver with
+  * no Spark job, and the profile equals Spark's.
   *
   * Everything downstream — type rules, key precedence, Wasserstein
   * distances, DBSCAN column clustering, name clustering — is

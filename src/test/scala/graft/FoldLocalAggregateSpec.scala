@@ -20,8 +20,6 @@ import graft.profiler.Profiler
   * row order stays with Spark. */
 class FoldLocalAggregateSpec extends SparkSpec {
 
-  FoldLocalAggregate.install(spark)
-
   /** The rows as a driver-local frame (a `LocalRelation` the rule folds)
     * and as an RDD-backed frame over 3 partitions (which it never
     * touches, so Spark aggregates it, merging partial results). */
@@ -106,6 +104,22 @@ class FoldLocalAggregateSpec extends SparkSpec {
     val r = assertExact(schema, rows, aggs: _*)
     assert(r.getAs[Long]("__n") == 400)
     assert(CoreT.pinnedTotal(r, "__s_0") > 0)
+  }
+
+  test("a decimal sum folds at precision 8 or less and equals Spark's; above it stays with Spark") {
+    val schema = StructType(Seq(StructField("d", DecimalType(6, 2)), StructField("w", DecimalType(10, 2))))
+    val rows = (0 until 60).map { r =>
+      if (r % 9 == 4) Row(null, null)
+      else Row(java.math.BigDecimal.valueOf(r * 7919L % 1999999 - 999999, 2),
+        java.math.BigDecimal.valueOf(r * 104729L * 977 % 19999999999L - 9999999999L, 2))
+    }
+    val r = assertExact(schema, rows, sum("d"), count("d"))
+    assert(r.getDecimal(0) != null)
+    // decimal(10,2) sums unscaled longs only after the fold has run
+    val (local, distributed) = frames(schema, rows)
+    val wide = local.agg(sum("w"))
+    assert(hasAggregate(wide), s"decimal(10,2) sum folded:\n${wide.queryExecution.optimizedPlan}")
+    assert(wide.collect().toSeq == distributed.agg(sum("w")).collect().toSeq)
   }
 
   test("an empty relation folds to one row: count 0, the rest null") {
@@ -237,9 +251,18 @@ class FoldLocalAggregateSpec extends SparkSpec {
     assert(folded(local.groupBy("k").agg(count_distinct(col("n")), min("x"))))
   }
 
-  test("install is idempotent") {
-    FoldLocalAggregate.install(spark)
-    FoldLocalAggregate.install(spark)
-    assert(spark.experimental.extraOptimizations.count(_ eq FoldLocalAggregate) == 1)
+  test("the plain builder session and a new session hold the rule once, in Pre CBO Rules, with no setup call") {
+    Seq("the builder session" -> spark, "a new session" -> spark.newSession()).foreach { case (what, s) =>
+      // RuleExecutor.Batch is protected: read its name and rules as a Product
+      val batches = s.sessionState.optimizer.batches.map { b =>
+        val p = b.asInstanceOf[Product]
+        (p.productElement(0).asInstanceOf[String], p.productElement(2).asInstanceOf[Seq[AnyRef]])
+      }
+      val holding = batches.filter(_._2.exists(_ eq FoldLocalAggregate))
+      assert(holding.map(b => (b._1, b._2.count(_ eq FoldLocalAggregate))) == Seq(("Pre CBO Rules", 1)),
+        s"$what: ${holding.map(_._1)}")
+      assert(s.experimental.extraOptimizations.isEmpty, s"$what: ${s.experimental.extraOptimizations}")
+      assert(s.sql("SELECT graft_tokens('a b') AS t").head().getSeq[String](0) == Seq("a", "b"), what)
+    }
   }
 }

@@ -89,7 +89,6 @@ class LineageSourcesSpec extends SparkSpec {
   }
 
   test("custom expressions registered as SQL functions") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_tokens('a b  c') AS t,
         |       graft_bpeish_tokens('ab12!') AS b,
@@ -119,6 +118,21 @@ class LineageSourcesSpec extends SparkSpec {
     assert(r3.getStruct(0).getAs[Long]("bullet_lines") === 1L)
     assert(r3.getStruct(1).getAs[Long]("n_kept") === 1L)
     assert(r3.getStruct(1).getAs[String]("kept_text") === "Nice long line here.")
+  }
+
+  test("each SQL function's ExpressionInfo names its own expression class") {
+    import graft.functions._
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val classes = Map(
+      "graft_simhash64" -> classOf[SimHash64], "graft_tokens" -> classOf[WhitespaceTokens],
+      "graft_bpeish_tokens" -> classOf[BpeishTokens], "graft_word_shingles" -> classOf[WordShingles],
+      "graft_cosine" -> classOf[CosineSimExpr], "graft_minhash_sig" -> classOf[MinhashSignature],
+      "graft_repetition" -> classOf[RepetitionStats], "graft_gopher_stats" -> classOf[GopherStats],
+      "graft_c4_stats" -> classOf[C4Stats], "graft_nfc_normalize" -> classOf[NfcNormalize])
+    val named = classes.keys.toSeq.sorted.map { name =>
+      name -> spark.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name)).map(_.getClassName)
+    }
+    assert(named == classes.toSeq.sortBy(_._1).map { case (n, c) => n -> Some(c.getName) })
   }
 
   test("DateSniffer.sparkFormat bridges to distributed to_date parsing") {

@@ -168,10 +168,21 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("vocabProfile plans a TakeOrdered, not a global sort") {
-    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
+    // RDD-backed docs, so Spark plans the aggregates: over a local frame
+    // they fold on the driver, the limit (k >= rows) is dropped, and the
+    // top-k plans as a Sort
+    val docs = spark.sparkContext.parallelize(Seq((1L, "a b c"))).toDF("doc_id", "text")
     val plan = PipelineOps.vocabProfile(docs, "doc_id", "text", k = 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"expected TakeOrdered:\n$plan")
+  }
+
+  test("vocabProfile over a local frame gives the rows of the RDD-backed one") {
+    val rows = Seq((1L, "a b c b"), (2L, "c d"))
+    def top(docs: org.apache.spark.sql.DataFrame) =
+      PipelineOps.vocabProfile(docs, "doc_id", "text", k = 5).collect().toSeq
+    assert(top(rows.toDF("doc_id", "text")) ==
+      top(spark.sparkContext.parallelize(rows).toDF("doc_id", "text")))
   }
 
   test("oovRate: per-doc OOV fraction against the top-k vocab; empty docs absent") {
@@ -245,8 +256,8 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("snapshotDiff plan: digest aggregates feed the full-outer id join") {
     // RDD-backed snapshots, so Spark plans the aggregates: over local
-    // ones they fold on the driver once an Engine has installed
-    // FoldLocalAggregate on the session
+    // ones they fold on the driver (every session carries
+    // FoldLocalAggregate)
     val a = spark.sparkContext.parallelize(Seq((1L, "x"))).toDF("id", "text")
     val b = spark.sparkContext.parallelize(Seq((1L, "x"))).toDF("id", "text")
     val lp = PipelineOps.snapshotDiff(a, b, "id", "text")
@@ -1118,8 +1129,13 @@ class PipelineOpsSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("non-positive")))
   }
 
-  private def keyness(a: Seq[String], b: Seq[String], k: Int = 100) =
-    PipelineOps.corpusKeyness(a.toDF("text"), b.toDF("text"), "text", k)
+  /** Local frames (Spark folds their aggregates on the driver), or
+    * RDD-backed ones (Spark plans every operator). */
+  private def textDocs(texts: Seq[String], rdd: Boolean) =
+    if (rdd) spark.sparkContext.parallelize(texts).toDF("text") else texts.toDF("text")
+
+  private def keyness(a: Seq[String], b: Seq[String], k: Int = 100, rdd: Boolean = false) =
+    PipelineOps.corpusKeyness(textDocs(a, rdd), textDocs(b, rdd), "text", k)
       .as[(String, Long, Long, Double, Long)].collect()
 
   test("corpusKeyness: hand-computed 2x2 chi-squared, order, and direction") {
@@ -1191,9 +1207,15 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("corpusKeyness top-k is a TakeOrdered, not a global sort") {
-    val plan = PipelineOps.corpusKeyness(Seq("a b").toDF("text"),
-        Seq("b c").toDF("text"), "text", 10)
+    // RDD-backed docs, as in the vocabProfile guard
+    val plan = PipelineOps.corpusKeyness(textDocs(Seq("a b"), rdd = true),
+        textDocs(Seq("b c"), rdd = true), "text", 10)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"expected top-k plan:\n$plan")
+  }
+
+  test("corpusKeyness over local frames gives the rows of RDD-backed ones") {
+    val (a, b) = (Seq("a b a", "c"), Seq("b c", "d b"))
+    assert(keyness(a, b, 10).toSeq == keyness(a, b, 10, rdd = true).toSeq)
   }
 }

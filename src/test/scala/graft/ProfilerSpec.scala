@@ -16,7 +16,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.functions.{DBSCAN, DateSniffer}
-import graft.plans.FoldLocalAggregate
 import graft.profiler.{Profiler, SemClusters}
 
 class ProfilerSpec extends SparkSpec {
@@ -455,9 +454,8 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("one profile is one query with no Expand; a same-shape table compiles nothing") {
-    // every Engine installs the fold: the local table is profiled on
+    // every session carries the fold: the local table is profiled on
     // the driver
-    FoldLocalAggregate.install(spark)
     val (ran, compiled, jobs) = secondProfile(shift => wideTable(shift))
     assert(ran.size == 1, s"${ran.size} query executions:\n${ran.mkString("\n")}")
     assert(!ran.head.exists(_.isInstanceOf[Expand]), ran.head.toString)
