@@ -251,7 +251,7 @@ class FoldLocalAggregateSpec extends SparkSpec {
     assert(folded(local.groupBy("k").agg(count_distinct(col("n")), min("x"))))
   }
 
-  test("the plain builder session and a new session hold the rule once, in Pre CBO Rules, with no setup call") {
+  test("the builder and a new session hold the rule once, in Pre CBO Rules") {
     Seq("the builder session" -> spark, "a new session" -> spark.newSession()).foreach { case (what, s) =>
       // RuleExecutor.Batch is protected: read its name and rules as a Product
       val batches = s.sessionState.optimizer.batches.map { b =>
