@@ -177,7 +177,7 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
       case "sum_bar" =>
         val (joined, yCols) = joinOn(chFrames("x"), chFrames("y"), outCols("y"))
         Some(graft.operators.ChartAssembly.sumBar(joined, outCols("x").head,
-          yCols.take(cfg.maxBarNumInChart)))
+          yCols.take(Recommender.MaxBarNumInChart)))
       case "count_bar" =>
         Some(graft.operators.ChartAssembly.countBar(chFrames("x"), outCols("x").head))
       case "num_scatter" | "cat_scatter" =>

@@ -108,8 +108,7 @@ object CoreT {
                          windowRankMaxRows: Long = EngineConfig.default.windowRankMaxRows,
                          distincts: Map[String, Long] = Map.empty,
                          embedSampleCap: Option[Int] = None,
-                         searchEmbeds: Boolean = true,
-                         notCalcuDmT: Boolean = EngineConfig.default.notCalcuDmT)
+                         searchEmbeds: Boolean = true)
 
   /** The route of a profiled table's tpaths under `cfg`. The embeddings
     * are driver fits: above `searchEmbedMaxRows` rows they fit a sample
@@ -117,13 +116,11 @@ object CoreT {
     * skips the gated ones where it does not. The source's row count is
     * every tpath's: each step is row-wise. */
   def route(profile: TableProfile, cfg: EngineConfig): Route = {
-    val sampled = cfg.searchEmbedTs && cfg.searchEmbedSampleFit &&
+    val sampled = cfg.searchEmbedSampleFit &&
       cfg.searchEmbedMaxRows > 0 && profile.rows > cfg.searchEmbedMaxRows
     Route(profile.rows, cfg.windowRankMaxRows, profile.distinctCounts,
       embedSampleCap = Option.when(sampled)(cfg.searchEmbedMaxRows.toInt),
-      searchEmbeds = cfg.searchEmbedTs &&
-        (cfg.searchEmbedSampleFit || profile.rows <= cfg.searchEmbedMaxRows),
-      notCalcuDmT = cfg.notCalcuDmT)
+      searchEmbeds = cfg.searchEmbedSampleFit || profile.rows <= cfg.searchEmbedMaxRows)
   }
 
   /** LDA defaults (Tfunctions.py:46-77: n_components=4; seed 9 is the
@@ -697,7 +694,7 @@ object CoreT {
   def transform(df: DataFrame, coreT: String, tpath: Seq[TStep],
                 carry: Seq[String], route: Route = Route()): Option[DataFrame] = {
     val t = decl(coreT)
-    if (!admits(coreT, tpath, route.notCalcuDmT)) return None
+    if (!admits(coreT, tpath)) return None
     val after = tpath.foldLeft(df)((d, s) => TBasic(d, s, carry, route))
     val feats = numericCols(after).filterNot(carry.contains)
     route.embedSampleCap.filter(_ => t.points.isDefined) match {
@@ -709,12 +706,12 @@ object CoreT {
   /** The reference's plan-validity rules (Tengine.py:19-75), decided
     * before anything runs: [[transform]] applies them, and so does the
     * search before it spends an execution slot on a candidate.
-    *  - NOTCALCUDMT: a dimension-reducing core T after an arithmetic
-    *    step is invalid;
+    *  - NOTCALCUDMT (config.py:19, always on): a dimension-reducing
+    *    core T after an arithmetic step is invalid;
     *  - a `needsArithmetic` core T (null_num1) is valid only after one. */
-  def admits(coreT: String, steps: Seq[TStep], notCalcuDmT: Boolean): Boolean = {
+  def admits(coreT: String, steps: Seq[TStep]): Boolean = {
     val t = decl(coreT)
     val hasArithmetic = steps.exists(s => arithmeticOps.contains(s.op))
-    if (t.needsArithmetic) hasArithmetic else !(notCalcuDmT && t.dimReducing && hasArithmetic)
+    if (t.needsArithmetic) hasArithmetic else !(t.dimReducing && hasArithmetic)
   }
 }

@@ -221,7 +221,7 @@ object Dedup {
     // r4 driver bench: 7.13s without this persist vs ~4s), the size
     // probe, and — on the pair-first path — both signature attaches.
     val sigsC = graft.CacheScope.track(sigs)
-    if (corpusAtLeast(sigsC, attachMinDocs)) {
+    if (corpusAbove(sigsC, attachMinDocs)) {
       // PAIR-FIRST-THEN-ATTACH (round 16, guide §2.3 / §8: shuffle
       // keys, not payloads): banded rows carry (id, band, bucket) ONLY
       // — the numHashes-int signature array no longer rides every
@@ -271,14 +271,15 @@ object Dedup {
     }
   }
 
-  /** True iff `df` has at least `minDocs` rows, by a short-circuiting
-    * `limit(minDocs+1).count()` — at scale this reads one or a few
-    * partitions of the (persisted) input, never the whole frame;
-    * `minDocs <= 0` is always true (the spec's force-big-path knob). */
-  private def corpusAtLeast(df: DataFrame, minDocs: Long): Boolean =
+  /** True iff `df` has more than `minDocs` rows, exactly for any Long;
+    * `minDocs <= 0` is always true (the spec's force-big-path knob).
+    * Below `Int.MaxValue` a short-circuiting `limit(minDocs+1).count()`
+    * reads one or a few partitions of the (persisted) input; `limit`
+    * takes an Int, so a larger `minDocs` takes a full `count()`. */
+  private def corpusAbove(df: DataFrame, minDocs: Long): Boolean =
     minDocs <= 0 ||
-      (minDocs < Int.MaxValue &&
-        df.limit(minDocs.toInt + 1).count() > minDocs)
+      (if (minDocs < Int.MaxValue) df.limit(minDocs.toInt + 1).count() > minDocs
+       else df.count() > minDocs)
 
   /** Attach both signatures to a bare id-pair frame and compute the
     * agreeing-position fraction, keeping pairs at est ≥ tau — the
@@ -367,7 +368,7 @@ object Dedup {
     // the corpus side decides the spelling — it is the side whose
     // banded payload weight matters at scale (the increment is the
     // daily crawl, orders of magnitude smaller)
-    if (corpusAtLeast(cS, attachMinDocs)) {
+    if (corpusAbove(cS, attachMinDocs)) {
       // pair-first-then-attach, like [[minhashCandidatePairs]] (round
       // 16): band rows carry (id, band, bucket) only; the signatures
       // join back id-keyed on the distinct'd pair set

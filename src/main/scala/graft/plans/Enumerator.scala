@@ -168,43 +168,23 @@ object Enumerator {
           val pre = if (hasRank(Seq(c))) rankStep.toVector else Vector.empty
           TPathCandidate(zero, pre :+ select(Seq(c)))
         }
-        val arith = for {
-          t <- CoreT.arithmeticOps
-          cluster <- ctx.clusters
-          if !(cfg.onlyProcessClusterMoreThan2 && cluster.size == 2)
-          if !(Seq("sub", "div", "mul").contains(t) && cluster.size != 2)
-          if cluster.size > 1 && !hasRank(cluster)
-        } yield {
-          val name = s"$t: (${tSuffix(cluster)})"
-          TPathCandidate(zero, Vector(TStep(t, inCols = cluster,
-            outMode = "new_table", outName = Some(name))))
-        }
-        singles ++ arith
+        val sums = sumClusters(ctx).map(cluster =>
+          TPathCandidate(zero, Vector(TStep("sum", inCols = cluster,
+            outMode = "new_table", outName = Some(s"sum: (${tSuffix(cluster)})")))))
+        singles ++ sums
 
       case "null_num" =>
         val base =
           if (ctx.realCols.isEmpty) Nil
           else Seq(TPathCandidate(zero, Vector(select(ctx.realCols))))
-        // one combined tpath: select + appended per-cluster arithmetic
-        // with groupN names (searchthread.py:183-250)
-        val total = mutable.LinkedHashSet[String](ctx.realCols: _*)
-        val appended = mutable.ArrayBuffer[TStep]()
-        var groupIdx = 0
-        for {
-          t <- CoreT.arithmeticOps
-          cluster <- ctx.clusters
-          if !(cfg.onlyProcessClusterMoreThan2 && cluster.size == 2)
-          if !(Seq("sub", "div", "mul").contains(t) && cluster.size != 2)
-          if cluster.size > 1 && !hasRank(cluster)
-        } {
-          appended += TStep(t, inCols = cluster, outMode = "append",
-            outName = Some(s"group$groupIdx"))
-          groupIdx += 1
-          total ++= cluster
+        // one combined tpath: select + appended per-cluster sums with
+        // groupN names (searchthread.py:183-250)
+        val appended = sumClusters(ctx).zipWithIndex.map { case (cluster, i) =>
+          TStep("sum", inCols = cluster, outMode = "append", outName = Some(s"group$i"))
         }
         if (appended.isEmpty) base
         else base :+ TPathCandidate(zero,
-          select(total.toSeq) +: appended.toVector)
+          select((ctx.realCols ++ appended.flatMap(_.inCols)).distinct) +: appended.toVector)
 
       case t if numTl.contains(t) || catTl.contains(t) =>
         numericCoreEnumeration(ctx, rankStep, cfg)
@@ -213,6 +193,14 @@ object Enumerator {
         throw new IllegalArgumentException(s"unknown core T for enumeration: $other")
     }
   }
+
+  /** The null_num pools sum each cluster of more than 2 columns: sub,
+    * mul and div take exactly 2, which ONLYPROCESSCLUSTERMORETHAN2
+    * skips (searchthread.py:155-157). */
+  private def sumClusters(ctx: Ctx): Seq[Seq[String]] =
+    ctx.clusters.filter(c => c.size > 2 && !hasRank(c))
+  /** MAXTPATHDEPTH (config.py:8): the deepest arithmetic tree level. */
+  private val MaxTPathDepth = 5
 
   /** The depth-0..MAXTPATHDEPTH Pareto search for numeric-input core
     * transforms (searchthread.py:251-459). */
@@ -247,7 +235,7 @@ object Enumerator {
       }
     }
 
-    for (depth <- 1 to cfg.maxTPathDepth) {
+    for (depth <- 1 to MaxTPathDepth) {
       val pruning = depth >= cfg.pruningDepth
       val leaves = nodes.values.filter(n => n.depth == depth - 1 &&
         !children.get(n.id).exists(_.nonEmpty)).toVector

@@ -167,6 +167,24 @@ object Recommender {
     * cap 3, channel alignment rule. */
   private val dmTs = CoreT.table.filter(_.fitted).map(_.name)
 
+  /** Candidates per channel: each other core T's pre-execution slice,
+    * and the executed ones kept ahead of the null passthroughs. */
+  private val MaxCandidatesPerChannel = 12
+  /** Per-family chart caps after dedup (config.py:27-31,
+    * search.py:1274-1278): MAXLINE, MAXCATLINE, MAXSUMBAR, MAXCOUNTBAR;
+    * MAXSCATTER is [[EngineConfig.maxScatter]]. */
+  private val FamilyCaps = Map("line" -> 3, "cat_line" -> 2, "sum_bar" -> 3, "count_bar" -> 1)
+  /** MAXLINENUMINCHART and MAXBARNUMINCHART (config.py:33-34): series
+    * per line and sum_bar chart, derived columns first (search.py:940-947,
+    * 1048-1055); [[graft.Engine.buildChart]] reads the bar cap too. */
+  private val MaxLineNumInChart = 3
+  private[graft] val MaxBarNumInChart = 3
+  /** Concurrent tpath executions of one search, the analogue of the
+    * reference's process per core T (search.py:55-63): driver threads
+    * submitting jobs on the shared session. */
+  private val SearchParallelism = 4
+  private val SearchTimeout = scala.concurrent.duration.Duration(30, "min")
+
   /** Collision-renaming key join of two channel frames — the ONE
     * spelling shared by the search pipeline and Engine.buildChart's
     * interactive rebuild, so the two paths cannot diverge: right-side
@@ -201,7 +219,6 @@ object Recommender {
                 cfg: EngineConfig = EngineConfig.default,
                 charts: Seq[String] = Seq("scatter", "line", "bar"),
                 maxChartRows: Int = 4000,
-                maxCandidatesPerChannel: Int = 12,
                 onExecutionFailure: (String, String, Throwable) => Unit = logFailure,
                 tlist: Option[Set[String]] = None,
                 slist: Option[Set[String]] = None): Recommendation = {
@@ -269,7 +286,7 @@ object Recommender {
     //    fingerprint share one execution ─────────────────────────────
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
-    val execPool = Executors.newFixedThreadPool(cfg.searchParallelism, (r: Runnable) => {
+    val execPool = Executors.newFixedThreadPool(SearchParallelism, (r: Runnable) => {
       val t = new Thread(r, "graft-recommender")
       t.setDaemon(true)
       t
@@ -342,20 +359,20 @@ object Recommender {
       val work: Seq[(String, TPathCandidate)] = phase("enumerate") {
         ts.filter(t => allowedTs.forall(_.contains(t)))
           .filter(t => route.searchEmbeds || !CoreT.decl(t).searchGated).flatMap { t =>
-          val perT = if (dmTs.contains(t)) 3 else maxCandidatesPerChannel
+          val perT = if (dmTs.contains(t)) 3 else MaxCandidatesPerChannel
           // A candidate transform rejects must not occupy a slot: the
           // reference executes its whole pool, but take(perT) slices
           // BEFORE execution, and on a wide table the always-rejected
           // null_num1 single-selects alone filled every slot
           // (WideTableSearchSpec pins this).
           pool(t)
-            .filter(tp => CoreT.admits(t, tp.steps, route.notCalcuDmT))
+            .filter(tp => CoreT.admits(t, tp.steps))
             .filter(tp => predictedDim(t, tp).forall(d => dim.forall(_ == d)))
             .take(perT).map(t -> _)
         }
       }
       val gathered = phase("execute")(Await.result(
-        Future.sequence(work.map { case (t, tp) => executeF(t, tp) }), cfg.searchTimeout))
+        Future.sequence(work.map { case (t, tp) => executeF(t, tp) }), SearchTimeout))
       val ok = gathered.flatten.filter { ex =>
         dim.forall(_ == ex.outCols.size) && ex.outCols.nonEmpty
       }
@@ -365,7 +382,7 @@ object Recommender {
       // since sampled fit became the default). They sit last in
       // numTl/catTl, so appending keeps the tlist candidate order.
       val (nulls, rest) = ok.partition(ex => !CoreT.decl(ex.coreT).fitted)
-      rest.take(maxCandidatesPerChannel) ++ nulls
+      rest.take(MaxCandidatesPerChannel) ++ nulls
     }
 
     // alignment rule (ONLYVISUALIZESELECTIONMATCHINGCHANNELS,
@@ -500,7 +517,7 @@ object Recommender {
       val ys = candidates(None, "num").filter(_.outCols.nonEmpty)
       for (y <- ys.take(6)) {
         // prefer derived columns, cap series per chart (search.py:940-947)
-        val series = y.outColsDerivedFirst.take(cfg.maxLineNumInChart)
+        val series = y.outColsDerivedFirst.take(MaxLineNumInChart)
         val rows = y.df.select(series.map(c => col(c).cast("double")): _*)
           .na.drop().limit(maxChartRows).collect()
         if (rows.length >= 3) {
@@ -517,7 +534,7 @@ object Recommender {
           val (jf, yCols) = joinChannels(x.df, y.df, y.outColsDerivedFirst)
           val joined = jf.na.drop()
             .orderBy(col(x.outCols.head))
-            .select(((x.outCols.head +: yCols.take(cfg.maxLineNumInChart))
+            .select(((x.outCols.head +: yCols.take(MaxLineNumInChart))
               .map(c => col(c).cast("double"))): _*)
             .limit(maxChartRows).collect()
           if (joined.length >= 3) {
@@ -579,7 +596,7 @@ object Recommender {
           // that score highest at the gate fixture
           for (y <- ys.take(6) if aligned(x, y)) {
             val joined = x.df.join(y.df, key)
-            val series = y.outColsDerivedFirst.take(cfg.maxBarNumInChart)
+            val series = y.outColsDerivedFirst.take(MaxBarNumInChart)
             val agg = ChartAssembly.sumBar(joined, xCol, series)
               .orderBy(col(xCol)).limit(maxChartRows).collect()
             if (agg.length >= 2) {
@@ -606,14 +623,13 @@ object Recommender {
     //    (and ord+rel lines into "line", the cat-line kinds into
     //    "cat_line") before capping, so e.g. MAXSCATTER=10 bounds ALL
     //    scatters combined, not 10 of each kind. Slice after dedup =
-    //    min(int(len·RECOMMENDPCT)+1, familyCap) (search.py:1274-1278).
+    //    min(int(len·RECOMMENDPCT)+1, familyCap) (search.py:1274-1278),
+    //    which with RECOMMENDPCT = 1.0 (config.py:13) is the family cap.
     val family = Map("num_scatter" -> "scatter", "cat_scatter" -> "scatter",
       "ord_line" -> "line", "rel_line" -> "line",
       "ord_cat_line" -> "cat_line", "rel_cat_line" -> "cat_line",
       "sum_bar" -> "sum_bar", "count_bar" -> "count_bar")
-    val famCaps = Map("scatter" -> cfg.maxScatter, "line" -> cfg.maxLine,
-      "cat_line" -> cfg.maxCatLine, "sum_bar" -> cfg.maxSumBar,
-      "count_bar" -> cfg.maxCountBar)
+    val famCaps = FamilyCaps + ("scatter" -> cfg.maxScatter)
     val seen = mutable.Set[String]()
     val survivors = phase("rank") {
       scored.toSeq.groupBy(c => family.getOrElse(c.chartType, c.chartType))
@@ -621,8 +637,7 @@ object Recommender {
           // first-wins on the coarse dedupKey (higher score survives —
           // the buffer is sorted before removal, search.py:1267-1272)
           val deduped = group.sortBy(-_.score).filter(r => seen.add(r.dedupKey))
-          deduped.take(math.min((deduped.size * cfg.recommendPct).toInt + 1,
-            famCaps.getOrElse(fam, 3)))
+          deduped.take(famCaps(fam))
         }
     }
     val topk = phase("render")(survivors.map(render(_, maxChartRows, key, readFrame)))

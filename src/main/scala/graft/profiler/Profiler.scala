@@ -42,6 +42,14 @@ import graft.operators.Rank
   */
 object Profiler {
 
+  /** NOMINALSTD (config.py:2): at most this fraction of distinct values
+    * makes a column nominal (spreadsheet.py:100-101). */
+  private val NominalStd = 0.05
+  /** POTENTIALIDX (config.py:4): names the cluster cleanup drops. */
+  private val PotentialIdx = Set("idx", "index", "epoch", "no", "no.")
+  /** Points of the quantile signature the W1 distances are taken over. */
+  private[graft] val QuantileBuckets = 64
+
   /** Per-column facts from the aggregation: `min`/`max` and
     * `quantiles` are over the numeric view (empty quantiles when the
     * column has no non-NaN value), `sample` is the smallest non-null
@@ -54,7 +62,7 @@ object Profiler {
   /** Column reference by LITERAL name: bare `col(name)` parses dots as
     * nested-field access, so a table with a column literally named
     * "No." or "price.usd" (dotted names are anticipated —
-    * cfg.potentialIdx contains "no.") would abort the whole profile
+    * [[PotentialIdx]] contains "no.") would abort the whole profile
     * with an AnalysisException. Backtick-quoting (with doubling for
     * embedded backticks) resolves the flat name; identical to col()
     * for plain names. */
@@ -157,8 +165,7 @@ object Profiler {
     val cells = df.select(explode(array(cell: _*)).as("c")).select("c.*")
 
     // ── the aggregation: one row per column, one distinct group ──────
-    val probs = (0 until cfg.quantileBuckets)
-      .map(i => lit(i.toDouble / (cfg.quantileBuckets - 1)))
+    val probs = (0 until QuantileBuckets).map(i => lit(i.toDouble / (QuantileBuckets - 1)))
     val d = col("d")
     val stats = cells.groupBy("i").agg(
       count(lit(1)),
@@ -184,7 +191,7 @@ object Profiler {
     val exactNd: Map[Int, Long] =
       if (!useApprox || rows == 0) Map.empty
       else {
-        val nomThresh = rows * cfg.nominalStd
+        val nomThresh = rows * NominalStd
         def nearBoundary(approx: Long): Boolean = approx >= rows * 0.95 ||
           (approx >= nomThresh * 0.8 && approx <= nomThresh * 1.2)
         val boundary = stats.collect { case (i, r) if nearBoundary(r.getLong(2)) => i }.toSeq
@@ -233,7 +240,7 @@ object Profiler {
                 }
                 s.isKey = true; key = Some(r.name)
               }
-            } else if (r.distinct <= rows * cfg.nominalStd)
+            } else if (r.distinct <= rows * NominalStd)
               s.ltype = LogicalType.Nominal
           }
         case LogicalType.Int =>
@@ -244,7 +251,7 @@ object Profiler {
             key.foreach(k => st(k).isKey = false)
             s.isKey = true; key = Some(r.name)
           }
-          if (r.distinct <= rows * cfg.nominalStd || s.isKey)
+          if (r.distinct <= rows * NominalStd || s.isKey)
             s.ltype = LogicalType.Nominal
         case LogicalType.Real =>
           val s = St(LogicalType.Real, isKey = false)
@@ -254,7 +261,7 @@ object Profiler {
             key.foreach(k => st(k).isKey = false)
             s.isKey = true; key = Some(r.name)
           }
-          if (r.distinct <= rows * cfg.nominalStd || s.isKey)
+          if (r.distinct <= rows * NominalStd || s.isKey)
             s.ltype = LogicalType.Nominal
         case _ =>
           st(r.name) = St(LogicalType.Date, isKey = false)
@@ -324,7 +331,7 @@ object Profiler {
     def clean(clusters: Seq[Seq[String]]): Seq[Seq[String]] = {
       val numSet = numericCols.toSet
       clusters
-        .map(_.filter(c => numSet.contains(c) && !cfg.potentialIdx.contains(c.toLowerCase)))
+        .map(_.filter(c => numSet.contains(c) && !PotentialIdx.contains(c.toLowerCase)))
         .filter(_.size >= 2).distinct
     }
 

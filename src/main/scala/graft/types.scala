@@ -83,31 +83,23 @@ final case class TableProfile(
     columns.map(c => c.name -> c.distinctCount).toMap
 }
 
-/** Engine configuration constants carried over from the reference
-  * (config.py:1-37). The 400-row source cap becomes optional: `None`
-  * means unbounded (the scale path).
+/** The reference's settings (config.py:1-37) a caller or a test sets,
+  * plus the scale-path options. The 400-row source cap is optional:
+  * `None` means unbounded (the scale path). The constants nothing varies
+  * are fixed beside their reader: NOMINALSTD and POTENTIALIDX in
+  * [[graft.profiler.Profiler]], MAXTPATHDEPTH in
+  * [[graft.plans.Enumerator]], the other MAX* caps in
+  * [[graft.plans.Recommender]]. NOTCALCUDMT
+  * ([[graft.operators.CoreT.admits]]), ONLYPROCESSCLUSTERMORETHAN2 (the
+  * Enumerator's null_num pools) and RECOMMENDPCT = 1.0 (top-k = the
+  * family cap) are always on.
   */
 final case class EngineConfig(
     maxSourceRows: Option[Int] = None,
-    nominalStd: Double = 0.05,
-    maxTPathDepth: Int = 5,
     pruningDepth: Int = 1,
     floatCanBeKey: Boolean = false,
-    notCalcuDmT: Boolean = true,
-    onlyProcessClusterMoreThan2: Boolean = true,
     catLine: Boolean = false, // CAT_LINE (config.py:22): cat-y line kinds
-    /** RECOMMENDPCT (config.py:13): per-family top-k keeps
-      * min(int(len·pct)+1, familyCap) charts (search.py:1274-1278). */
-    recommendPct: Double = 1.0,
-    maxScatter: Int = 10,
-    maxLine: Int = 3,
-    maxCatLine: Int = 2,
-    maxSumBar: Int = 3,
-    maxCountBar: Int = 1,
-    maxLineNumInChart: Int = 3,
-    maxBarNumInChart: Int = 3,
-    potentialIdx: Seq[String] = Seq("idx", "index", "epoch", "no", "no."),
-    quantileBuckets: Int = 64,
+    maxScatter: Int = 10, // MAXSCATTER, the scatter family cap (config.py:27-31)
     /** Above this row count, global rank/nominalize switch from a single
       * `Window.orderBy` to the shuffle-friendly zipWithIndex path. The
       * two paths are value-identical (same total order); the crossover
@@ -140,18 +132,14 @@ final case class EngineConfig(
       * (word2vec text format) or a hashed-token fallback. */
     semanticNameClusters: Boolean = false,
     semEmbeddingPath: Option[String] = None,
-    /** Include tsne/umap in the search pipeline's channel candidates.
-      * The reference's default tlist has both (main.py:91, T.py:16,44,
-      * 180), so they are ON here too — but both are driver-side fits
-      * (exact t-SNE is O(n²·iters)), so at engine scale the search only
-      * runs them when the profiled row count is ≤ [[searchEmbedMaxRows]]
-      * (the reference itself never sees more than its 400-row cap,
-      * config.py:1). Above the bound they are skipped as CHANNEL
-      * CANDIDATES only — both operators stay reachable directly and via
-      * /vis/addV at their own (larger) driver caps. */
-    searchEmbedTs: Boolean = true,
-    /** Row bound above which search skips tsne/umap channel candidates;
-      * default = the reference's MAXSOURCEDATAROWS (config.py:1). */
+    /** Row bound of the search's exact tsne/umap fits. Both are in the
+      * reference's default tlist (main.py:91, T.py:16,44,180) but are
+      * driver-side fits (exact t-SNE is O(n²·iters)), so above this
+      * many profiled rows the search fits them on a sample
+      * ([[searchEmbedSampleFit]]) or, with that off, skips them as
+      * channel candidates; both stay reachable directly and via
+      * /vis/addV. Default = the reference's MAXSOURCEDATAROWS
+      * (config.py:1). */
     searchEmbedMaxRows: Long = 400L,
     /** Scale extension: above [[searchEmbedMaxRows]], search runs
       * tsne/umap through [[graft.operators.CoreT.embedSampled]] — a
@@ -163,17 +151,7 @@ final case class EngineConfig(
       * public search API silently driver-bound above 400 rows. Set
       * false to reproduce the reference's hard scale exclusion (and
       * rounds ≤6 golden pins). */
-    searchEmbedSampleFit: Boolean = true,
-    /** Concurrent (coreT, tpath) Spark-job submissions during search —
-      * the analogue of the reference's one-process-per-core-T pool
-      * (search.py:55-63). 4 covers the gate-scale search space; raise
-      * it for wider searches (each slot is a driver thread submitting
-      * jobs on the shared session, so the ceiling is scheduler
-      * fairness, not cores). */
-    searchParallelism: Int = 4,
-    /** Hard wall-clock bound on one search's execution phase. */
-    searchTimeout: scala.concurrent.duration.FiniteDuration =
-      scala.concurrent.duration.Duration(30, "min")
+    searchEmbedSampleFit: Boolean = true
 )
 
 object EngineConfig {

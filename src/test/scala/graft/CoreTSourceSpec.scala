@@ -12,13 +12,16 @@ import graft.operators.CoreT
   * [[CoreT.table]], the route in [[CoreT.Route]] (built by
   * [[CoreT.route]]) and its bounds in [[EngineConfig]]. Reads the
   * sources: a quoted core-T name on a code line of the search or the
-  * Engine, a route parameter declared anywhere else, or a literal rank
-  * bound outside EngineConfig fails here. */
+  * Engine, a route parameter declared anywhere else, a literal rank
+  * bound outside EngineConfig, or an EngineConfig field that nothing
+  * sets fails here. */
 class CoreTSourceSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
 
-  private def sources: Seq[Path] =
-    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+  private def sources: Seq[Path] = scalaFiles(root)
+
+  private def scalaFiles(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
 
   /** The code on a line: empty for a scaladoc or block-comment line,
     * else the text before any `//`. */
@@ -61,5 +64,15 @@ class CoreTSourceSpec extends AnyFunSuite {
       (line, i) <- codeLines(f).zipWithIndex if literal.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}"
     assert(hits.isEmpty, s"${hits.size} literal rank bounds outside EngineConfig: $hits")
+  }
+
+  test("every EngineConfig field is set by name outside types.scala") {
+    // a field only its declaration sets is a constant: it belongs beside
+    // its reader, not among the options callers and tests must cover
+    val code = (sources ++ scalaFiles(Paths.get("src/test/scala/graft")))
+      .filterNot(_.endsWith("graft/types.scala")).flatMap(codeLines).mkString("\n")
+    val unset = EngineConfig.default.productElementNames.toSeq
+      .filterNot(f => s"\\b$f\\s*=(?![=>])".r.findFirstIn(code).isDefined)
+    assert(unset.isEmpty, s"${unset.size} EngineConfig fields nothing sets: $unset")
   }
 }

@@ -195,7 +195,7 @@ class CoreTSpec extends SparkSpec {
     // emits exactly its declared columns after the key
     for (t <- Enumerator.numTl ++ Enumerator.catTl; steps <- Seq(Nil, arith)) {
       val out = CoreT.transform(df, t, steps, Seq("k"))
-      assert(CoreT.admits(t, steps, notCalcuDmT = true) == out.isDefined, s"$t after $steps")
+      assert(CoreT.admits(t, steps) == out.isDefined, s"$t after $steps")
       val decl = CoreT.decl(t)
       if (decl.fitted) out.foreach(o => assert(
         o.schema.fields.toSeq.map(f => f.name -> f.dataType) ==

@@ -96,8 +96,12 @@ class DedupSimilaritySpec extends SparkSpec {
     val sigs = Dedup.minhashSignatures(corpus, "id", "text", numHashes = 32, shingleSize = 3)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col): _*).collect().map(_.toSeq).toSeq
+    // only the pair-first spelling attaches signatures (`__siga`)
+    def pairFirst(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString.contains("__siga")
     val big = Dedup.minhashCandidatePairs(sigs, 32, 8, 0.3, attachMinDocs = 0L)
     val small = Dedup.minhashCandidatePairs(sigs, 32, 8, 0.3, attachMinDocs = Long.MaxValue)
+    assert(pairFirst(big) && !pairFirst(small))
     assert(big.columns.toSeq == small.columns.toSeq)
     val bigRows = canon(big)
     assert(bigRows.nonEmpty && bigRows == canon(small))
@@ -106,6 +110,7 @@ class DedupSimilaritySpec extends SparkSpec {
       corpus.select(($"id" + 1000L).as("id"), $"text"), "id", "text", 32, 3)
     val bigI = Dedup.minhashIncrementalPairs(sigs, incSigs, 32, 8, 0.3, attachMinDocs = 0L)
     val smallI = Dedup.minhashIncrementalPairs(sigs, incSigs, 32, 8, 0.3, attachMinDocs = Long.MaxValue)
+    assert(pairFirst(bigI) && !pairFirst(smallI))
     assert(bigI.columns.toSeq == smallI.columns.toSeq)
     val bigIRows = canon(bigI)
     assert(bigIRows.nonEmpty && bigIRows == canon(smallI))

@@ -85,7 +85,7 @@ class PlannerScoreSpec extends SparkSpec {
     // depth-1 (searchthread.py:386-409); replicated here
     val deep = pool.filter(_.steps.count(s => arithOps.contains(s.op)) >= 2)
     assert(deep.isEmpty)
-    // with pruning disabled (pruningDepth > maxTPathDepth) the deeper
+    // with pruning disabled (pruningDepth > MAXTPATHDEPTH = 5) the deeper
     // paths materialize
     val unpruned = Enumerator.dedupe(Enumerator.enumerate(p, "pca",
       EngineConfig(pruningDepth = 6)))
@@ -122,6 +122,10 @@ class PlannerScoreSpec extends SparkSpec {
     assert(pool.exists(tp => tp.steps.head.op == "sum" && tp.steps.head.outMode == "new_table"))
     // sub/div/mul need exactly-2 clusters, which ONLYPROCESSCLUSTERMORETHAN2 skips
     assert(!pool.exists(tp => Set("sub", "div", "mul").contains(tp.steps.head.op)))
+    // the null_num pool appends the same arithmetic to its one select
+    val appended = Enumerator.enumerate(p, "null_num").flatMap(_.steps).filter(_.outMode == "append")
+    assert(appended.nonEmpty)
+    assert(appended.forall(s => s.op == "sum" && s.inCols.size > 2), appended)
   }
 
   // ── Scagnostics ────────────────────────────────────────────────────

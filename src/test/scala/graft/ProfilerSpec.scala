@@ -216,6 +216,31 @@ class ProfilerSpec extends SparkSpec {
     Files.delete(emb)
   }
 
+  test("semEmbeddingPath reaches the profile: nameClusters follow the file's vectors") {
+    import java.nio.file.Files
+    // the five money tokens sit within eps of each other in the file;
+    // hashed, distinct tokens are near-orthogonal and form no cluster
+    val money = Seq("price", "cost", "value", "total", "amount")
+    val emb = Files.createTempFile("w2v", ".txt")
+    Files.writeString(emb, money.zipWithIndex
+      .map { case (w, i) => s"$w ${1.0 + i * 0.01} 0.0 0.0" }.mkString("\n"))
+    val df = (1 to 50).map(i => (s"r$i", i * 1.0, i * 2.0, i * 3.0, i * 4.0, i * 5.0))
+      .toDF("name" +: money: _*)
+    try {
+      val fromFile = Profiler.profile(df, EngineConfig(semanticNameClusters = true,
+        semEmbeddingPath = Some(emb.toString)))._2
+      assert(fromFile.nameClusters.exists(_.toSet == money.toSet), fromFile.nameClusters)
+      val hashed = Profiler.profile(df, EngineConfig(semanticNameClusters = true))._2
+      assert(!hashed.nameClusters.exists(_.toSet == money.toSet), hashed.nameClusters)
+    } finally Files.delete(emb)
+  }
+
+  test("maxSourceRows caps the profiled rows") {
+    val df = (1 to 50).map(i => (s"r$i", i * 1.0)).toDF("name", "v")
+    val (pdf, p) = Profiler.profile(df, EngineConfig(maxSourceRows = Some(7)))
+    assert(p.rows == 7 && pdf.count() == 7)
+  }
+
   test("semantic name clusters: hashed fallback groups same leading token") {
     // no embedding file: identical first tokens are distance 0, distinct
     // tokens near-orthogonal 16-d hashes (far beyond eps) → degraded
@@ -240,7 +265,7 @@ class ProfilerSpec extends SparkSpec {
 
   test("dotted column names profile instead of parsing as nested-field access") {
     // bare col("price.usd") is struct access in Spark; the profiler
-    // must backtick-quote (cfg.potentialIdx even anticipates "no.")
+    // must backtick-quote (POTENTIALIDX even anticipates "no.")
     import spark.implicits._
     val df = (1 to 40).map(i => (s"r$i", i * 1.5, i % 7))
       .toDF("No.", "price.usd", "qty.ordered")
@@ -294,7 +319,7 @@ class ProfilerSpec extends SparkSpec {
     * `percentile_approx` per numeric column over its non-NaN values. */
   private def twoPassStats(df: DataFrame): (Long, Seq[Profiler.RawStats]) = {
     val fields = df.schema.fields.toSeq
-    val buckets = EngineConfig.default.quantileBuckets
+    val buckets = Profiler.QuantileBuckets
     def q(name: String): Column = col("`" + name.replace("`", "``") + "`")
     def numish(f: StructField): Option[Column] = f.dataType match {
       case _: NumericType => Some(q(f.name).cast(DoubleType))

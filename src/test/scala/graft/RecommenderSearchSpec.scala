@@ -14,15 +14,15 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.TStep
+import graft.operators.{CoreT, TStep}
 import graft.plans.{Lineage, Recommender}
 import graft.profiler.Profiler
 
 /** Round-5 search-pipeline guarantees: tsne/umap participate in the
   * default search at reference scale (the reference's default tlist
-  * includes both — main.py:91, T.py:16,44,180), the cost gate and the
-  * off-switch work, and tpath execution failures are reported instead
-  * of silently swallowed. */
+  * includes both — main.py:91, T.py:16,44,180), the row-bound cost
+  * gate works, and tpath execution failures are reported instead of
+  * silently swallowed. */
 class RecommenderSearchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,6 +31,10 @@ class RecommenderSearchSpec extends SparkSpec {
   private def fixture = (1 to 60).map { i =>
     (s"id$i", i * 1.0, math.sin(i * 0.5) * 20 + 30, 120.0 - 2.0 * i)
   }.toDF("name", "a v", "b v", "c v")
+
+  /** Every core T but tsne and umap, the slow driver-side fits: for
+    * searches whose assertions are not about embeddings. */
+  private val noEmbeds = Some(CoreT.table.map(_.name).toSet -- Set("tsne", "umap"))
 
   private def embedChannels(rec: graft.plans.Recommendation): Seq[String] =
     rec.visList.flatMap(_.channels.values).filter(v =>
@@ -47,11 +51,8 @@ class RecommenderSearchSpec extends SparkSpec {
       v.startsWith("tsne") || v.startsWith("umap"))))
   }
 
-  test("searchEmbedTs=false restores the exclusion; row bound gates by cost") {
+  test("with the sampled fit off, the row bound excludes tsne/umap") {
     val (pdf, profile) = Profiler.profile(fixture)
-    val off = Recommender.recommend(pdf, profile, spark,
-      EngineConfig(searchEmbedTs = false), charts = Seq("scatter"))
-    assert(embedChannels(off).isEmpty)
     // shrinking the row bound below the table size excludes embeddings
     // only when the sampled-fit fallback is also off (round 7 default:
     // above the bound the search switches to the sampled fit instead)
@@ -89,7 +90,7 @@ class RecommenderSearchSpec extends SparkSpec {
     val (pdf, profile) = Profiler.profile(fixture)
     def run(slist: Option[Set[String]]) =
       Recommender.recommend(pdf, profile, spark,
-        EngineConfig(searchEmbedTs = false), charts = Seq("scatter"), slist = slist)
+        charts = Seq("scatter"), tlist = noEmbeds, slist = slist)
     val default = run(None)
     // explicitly enabling exactly the engine's default metric set must
     // reproduce the default scores bit for bit (mean-of-enabled identity)
@@ -191,7 +192,7 @@ class RecommenderSearchSpec extends SparkSpec {
   test("a search keeps the caller's cache and carries only the returned charts' channel frames") {
     val (pdf, profile) = Profiler.profile(fixture)
     def search(df: DataFrame) = Recommender.recommend(df, profile, spark,
-      EngineConfig(searchEmbedTs = false), charts = Seq("bar"))
+      charts = Seq("bar"), tlist = noEmbeds)
     val before = pdf.storageLevel
     search(pdf)
     assert(pdf.storageLevel == before, "the search changed the source's storage level")

@@ -13,8 +13,8 @@ import graft.profiler.Profiler
   * (no failure fired: a statically-doomed candidate returns None, not
   * an exception). The fix filters statically-nonviable candidates
   * before the slice; this spec pins it on a table wide enough that
-  * the singles (one per numeric column + rank twins) overflow
-  * maxCandidatesPerChannel.
+  * the singles (one per numeric column + rank twins) overflow the
+  * search's per-core-T candidate slice (12).
   */
 class WideTableSearchSpec extends SparkSpec {
   import spark.implicits._
