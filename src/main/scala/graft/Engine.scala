@@ -148,8 +148,11 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
     *                 expected channels per chart type follow V.py:
     *                 scatter: xy+color, lines: x?/y, bars: x(+y)
     * @param frames   a search's executed channel frames, reused per
-    *                 channel exactly as in [[addVisualization]]; the key
-    *                 join between channels always runs
+    *                 channel exactly as in [[addVisualization]]. The key
+    *                 join between channels is planned on every call; when
+    *                 both sides are driver-local (the `/vis/csv` sheet's
+    *                 channels) [[graft.plans.FoldLocalAggregate]] folds
+    *                 it on the driver, so the rebuild runs no Spark job
     */
   def buildChart(source: DataFrame, chartType: String,
                  channels: Map[String, (String, String)],
@@ -169,9 +172,7 @@ final class Engine(spark: SparkSession, cfg: EngineConfig = EngineConfig.default
     // user-chosen lineages can produce overlapping column names; the
     // collision-renaming key join is the search pipeline's spelling
     // (Recommender.joinOnKey) so the two paths cannot diverge
-    def joinOn(left: DataFrame, right: DataFrame,
-               rightCols: Seq[String]): (DataFrame, Seq[String]) =
-      graft.plans.Recommender.joinOnKey(key)(left, right, rightCols)
+    val joinOn = Recommender.joinOnKey(key) _
 
     chartType match {
       case "sum_bar" =>

@@ -52,9 +52,15 @@ import scala.jdk.CollectionConverters._
   * The sheet is a local relation: the rows are already on the driver,
   * so Catalyst gets the sheet's true size, converts the rows to its
   * internal form once, and folds plans that only project, filter or
-  * limit the sheet on the driver — a refine of such a lineage runs
-  * almost no Spark job. An RDD of external rows would be stat-less and
-  * re-converted by every job.
+  * limit the sheet on the driver; [[graft.plans.FoldLocalAggregate]]
+  * folds the order-free aggregates over it and the key join of two
+  * channel frames built from it. A refine that stays on that route (an
+  * /vis/addT or /vis/addV preview, a `vtype` + `channels` rebuild of a
+  * scatter) runs no Spark job; a lineage through a fit that emits an
+  * RDD or a rank window, and a rebuild that sorts (`rel_line`) or sums
+  * doubles (`sum_bar`), still run jobs.
+  * An RDD of external rows would be stat-less and re-converted by every
+  * job.
   */
 final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.default,
                       port: Int = 0) {

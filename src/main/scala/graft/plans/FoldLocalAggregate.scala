@@ -6,8 +6,11 @@ import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences, CollectionGenerator, Expression, ExpressionSet, GenericInternalRow, InterpretedMutableProjection, InterpretedProjection, InterpretedUnsafeProjection, JoinedRow, Literal, Predicate, SubqueryExpression, Unevaluable, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, ApproximatePercentile, Count, DeclarativeAggregate, ImperativeAggregate, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, Join, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Folds an aggregate over a driver-local relation into the local
@@ -39,6 +42,21 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
   * else (`first`/`last`, a double `sum`, `avg`, a sketch, a `FILTER`
   * clause, several distinct groups) and every plan over a file scan stay
   * with Spark unchanged, so a folded result is the one Spark computes.
+  *
+  * It also folds an inner equi-join whose two sides are both such
+  * driver-local inputs (the key join of two `/vis/csv` channel frames).
+  * The keys are `ExtractEquiJoinKeys`' and are hashed after the same
+  * normalisation, so NaN matches NaN, -0.0 matches 0.0 and a null key
+  * matches nothing (a `<=>` key arrives null-free, as Spark rewrites
+  * it); a residual condition is evaluated, interpreted, on each
+  * key-matched pair. Rows come out in left order, each left row's
+  * matches in right order: Spark leaves a join's order unspecified, so
+  * its rows are the same multiset. Outer, semi, anti and keyless joins,
+  * a side over a file scan or an RDD, a key of a collated string type,
+  * and a join with more key-matched pairs than its two sides hold rows
+  * together (a fixed bound that keeps the driver's work linear in its
+  * input) stay with Spark unchanged. An aggregate above a folded join
+  * folds in the same pass.
   *
   * Every session carries the rule from its first query: `graft.functions.
   * GraftExtensions` injects it into the "Pre CBO Rules" batch, which runs
@@ -92,6 +110,11 @@ object FoldLocalAggregate extends Rule[LogicalPlan] {
 
   def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case a: Aggregate if folds(a) => rowsOf(a.child).flatMap(fold(a, _)).getOrElse(a)
+    case j @ ExtractEquiJoinKeys(Inner, leftKeys, rightKeys, residual, _, left, right, _)
+        if (leftKeys ++ rightKeys ++ residual).forall(evaluable) &&
+          leftKeys.forall(k => UnsafeRowUtils.isBinaryStable(k.dataType)) =>
+      (for (l <- rowsOf(left); r <- rowsOf(right); folded <- foldJoin(j, leftKeys, rightKeys, residual, l, r))
+        yield folded).getOrElse(j)
   }
 
   /** The rows `plan` evaluates to, one input row at a time, when it is a
@@ -116,6 +139,43 @@ object FoldLocalAggregate extends Rule[LogicalPlan] {
         }
       }
     case _ => None
+  }
+
+  /** `es` over rows of `in` as one unsafe row, floating-point values
+    * normalised (NaN one value, -0.0 as 0.0) as Spark's planner
+    * normalises grouping, distinct and join keys. */
+  private def normalized(es: Seq[Expression], in: Seq[Attribute]) = InterpretedUnsafeProjection.createProjection(
+    es.map(e => BindReferences.bindReference(GraftSqlBridge.normalizeFloats(e), in)))
+
+  /** The inner equi-join `j` evaluated over the rows of its two sides:
+    * left rows in order, each with its matches in right order, keys
+    * normalised and a null key matching nothing, as Spark's hash join
+    * does; None when the key-matched pairs outnumber the rows of both
+    * sides together. */
+  private def foldJoin(j: Join, leftKeys: Seq[Expression], rightKeys: Seq[Expression],
+                       residual: Option[Expression], left: Iterator[InternalRow],
+                       right: Iterator[InternalRow]): Option[LocalRelation] = {
+    val rightKey = normalized(rightKeys, j.right.output)
+    val matches = mutable.HashMap[UnsafeRow, mutable.ArrayBuffer[InternalRow]]()
+    var rightRows = 0L
+    right.foreach { r =>
+      rightRows += 1
+      val k = rightKey(r)
+      if (!k.anyNull) matches.getOrElseUpdate(k.copy(), mutable.ArrayBuffer()) += r.copy()
+    }
+    val leftKey = normalized(leftKeys, j.left.output)
+    val lefts = left.map { l =>
+      val k = leftKey(l)
+      (l.copy(), if (k.anyNull) None else matches.get(k))
+    }.toIndexedSeq
+    if (lefts.iterator.map(_._2.fold(0)(_.size).toLong).sum > lefts.size + rightRows) return None
+    val joinedAttrs = j.left.output ++ j.right.output
+    val keep = residual.map(c => Predicate.createInterpreted(BindReferences.bindReference(c, joinedAttrs)))
+    val project = new InterpretedProjection(j.output, joinedAttrs)
+    val joined = new JoinedRow
+    Some(LocalRelation(j.output, lefts.flatMap { case (l, ms) =>
+      ms.iterator.flatten.map(joined(l, _)).filter(r => keep.forall(_.eval(r))).map(project(_))
+    }))
   }
 
   /** One aggregate function fed from rows of its input, over a buffer
@@ -174,10 +234,8 @@ object FoldLocalAggregate extends Rule[LogicalPlan] {
         .asInstanceOf[AggregateFunction], distinctAttrs)
     }
     val (plain, distinct) = fns.indices.partition(k => !aggs(k).isDistinct)
-    def normalized(es: Seq[Expression]) = InterpretedUnsafeProjection.createProjection(
-      es.map(e => BindReferences.bindReference(GraftSqlBridge.normalizeFloats(e), in)))
-    val keyOf = normalized(a.groupingExpressions)
-    val distinctOf = normalized(distinctCols)
+    val keyOf = normalized(a.groupingExpressions, in)
+    val distinctOf = normalized(distinctCols, in)
     val limit = aggs.map(_.aggregateFunction).collect { case p: ApproximatePercentile => accuracy(p).get }
       .minOption.getOrElse(Long.MaxValue)
 

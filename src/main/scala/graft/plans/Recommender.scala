@@ -186,10 +186,14 @@ object Recommender {
   private val SearchTimeout = scala.concurrent.duration.Duration(30, "min")
 
   /** Collision-renaming key join of two channel frames — the ONE
-    * spelling shared by the search pipeline and Engine.buildChart's
-    * interactive rebuild, so the two paths cannot diverge: right-side
-    * columns that collide with the left get a `__y` suffix, and the
-    * returned column list reflects the renames. */
+    * spelling of every key join in the search (`rel_line`,
+    * `rel_cat_line`, `sum_bar`, an incomplete read's `render`) and in
+    * Engine.buildChart's interactive rebuild, so the paths cannot
+    * diverge: right-side columns that collide with the left get a `__y`
+    * suffix, and the returned column list reflects the renames. An
+    * inner join on the key: over two driver-local frames
+    * [[FoldLocalAggregate]] evaluates it on the driver, otherwise Spark
+    * joins. */
   private[graft] def joinOnKey(key: Seq[String])(
       left: DataFrame, right: DataFrame,
       rightCols: Seq[String]): (DataFrame, Seq[String]) = {
@@ -312,13 +316,6 @@ object Recommender {
           }
         })
       }
-    /** Key-join two channel frames, renaming colliding non-key columns
-      * on the right so downstream references stay unambiguous. Returns
-      * the joined frame + the (possibly renamed) right column names. */
-    def joinChannels(left: DataFrame, right: DataFrame,
-                     rightCols: Seq[String]): (DataFrame, Seq[String]) =
-      joinOnKey(key)(left, right, rightCols)
-
     // static output-dimension prediction, so only dimension-compatible
     // tpaths are ever executed (channel dim == T output dim,
     // search.py:131)
@@ -531,7 +528,7 @@ object Recommender {
         val xs = candidates(Some(1), "num")
         for (x <- xs.take(3); y <- ys.take(3) if aligned(x, y) &&
              x.tpath.fingerprint != y.tpath.fingerprint) {
-          val (jf, yCols) = joinChannels(x.df, y.df, y.outColsDerivedFirst)
+          val (jf, yCols) = joinOnKey(key)(x.df, y.df, y.outColsDerivedFirst)
           val joined = jf.na.drop()
             .orderBy(col(x.outCols.head))
             .select(((x.outCols.head +: yCols.take(MaxLineNumInChart))
@@ -567,9 +564,10 @@ object Recommender {
         }
         if (enabledTypes.contains("rel_cat_line")) {
           for (x <- candidates(Some(1), "num").take(2) if aligned(x, y)) {
-            val joined = x.df.join(y.df, key).na.drop()
+            val (jf, yCols) = joinOnKey(key)(x.df, y.df, y.outCols)
+            val joined = jf.na.drop()
               .orderBy(col(x.outCols.head))
-              .select(col(y.outCols.head).cast("string"))
+              .select(col(yCols.head).cast("string"))
               .limit(maxChartRows).collect().map(_.getString(0))
             if (joined.length >= 3) {
               scored += Scored("rel_cat_line", Map("x" -> x, "y" -> y),
@@ -595,8 +593,8 @@ object Recommender {
           // fill the head of the list) crowd out the null passthroughs
           // that score highest at the gate fixture
           for (y <- ys.take(6) if aligned(x, y)) {
-            val joined = x.df.join(y.df, key)
-            val series = y.outColsDerivedFirst.take(MaxBarNumInChart)
+            val (joined, yCols) = joinOnKey(key)(x.df, y.df, y.outColsDerivedFirst)
+            val series = yCols.take(MaxBarNumInChart)
             val agg = ChartAssembly.sumBar(joined, xCol, series)
               .orderBy(col(xCol)).limit(maxChartRows).collect()
             if (agg.length >= 2) {

@@ -3,8 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,7 +18,8 @@ import graft.profiler.Profiler
 /** `FoldLocalAggregate`: a folded aggregate over a local relation (or
   * a project, filter or explode chain over one) equals Spark's aggregate
   * over the same rows, and every aggregate whose result could depend on
-  * row order stays with Spark. */
+  * row order stays with Spark; a folded inner equi-join of two local
+  * sides equals Spark's join, and every other join stays with Spark. */
 class FoldLocalAggregateSpec extends SparkSpec {
 
   /** The rows as a driver-local frame (a `LocalRelation` the rule folds)
@@ -263,6 +265,124 @@ class FoldLocalAggregateSpec extends SparkSpec {
         s"$what: ${holding.map(_._1)}")
       assert(s.experimental.extraOptimizations.isEmpty, s"$what: ${s.experimental.extraOptimizations}")
       assert(s.sql("SELECT graft_tokens('a b') AS t").head().getSeq[String](0) == Seq("a", "b"), what)
+    }
+  }
+
+  /** The Spark jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body finally {
+      SpecBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  private def hasJoin(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Join])
+
+  private val keyed = StructType(Seq(StructField("k", StringType), StructField("x", DoubleType)))
+  private val keyedY = StructType(Seq(StructField("k", StringType), StructField("y", DoubleType)))
+
+  /** `q` over the two sides as local frames plans no join and runs no
+    * job, and its rows, as a multiset, equal Spark's over RDD-backed
+    * copies of both sides. Returns the folded rows in their order. */
+  private def assertJoinFolds(left: (StructType, Seq[Row]), right: (StructType, Seq[Row]))(
+      q: (DataFrame, DataFrame) => DataFrame): Seq[Row] = {
+    val (l, lDistributed) = frames(left._1, left._2)
+    val (r, rDistributed) = frames(right._1, right._2)
+    val local = q(l, r)
+    assert(!hasJoin(local), s"join not folded:\n${local.queryExecution.optimizedPlan}")
+    var got = Seq.empty[Row]
+    val jobs = jobsOf { got = local.collect().toSeq }
+    assert(jobs == 0, s"the folded join ran $jobs jobs")
+    val distributed = q(lDistributed, rDistributed)
+    assert(hasJoin(distributed))
+    // strings tell -0.0 from 0.0: each output value is its input row's
+    assert(got.map(_.toString).sorted == distributed.collect().toSeq.map(_.toString).sorted)
+    got
+  }
+
+  test("a USING join of two local frames folds, and an aggregate above it") {
+    val left = (0 until 30).map(i => Row(s"n$i", i * 1.5))
+    val right = (0 until 40 by 2).reverse.map(i => Row(s"n$i", i * -0.5))
+    val got = assertJoinFolds((keyed, left), (keyedY, right))(_.join(_, "k"))
+    // left order, each left row's matches in right order
+    assert(got == (0 until 30 by 2).map(i => Row(s"n$i", i * 1.5, i * -0.5)))
+    assertJoinFolds((keyed, left), (keyedY, right))(_.join(_, "k").agg(count(lit(1)), max("x"), min("y")))
+  }
+
+  test("a string-key join with unmatched keys on both sides folds") {
+    val right = StructType(Seq(StructField("id", StringType), StructField("y", DoubleType)))
+    val got = assertJoinFolds((keyed, (0 until 25).map(i => Row(s"s${i % 11}", i * 1.0))),
+      (right, (0 until 9).map(i => Row(s"s${i * 2}", i * 0.25))))((l, r) => l.join(r, l("k") === r("id")))
+    // s0 and s2 three times each, s4 to s10 twice
+    assert(got.size == 14)
+  }
+
+  test("a double-key join matches NaN with NaN and -0.0 with 0.0, as Spark's") {
+    val schema = StructType(Seq(StructField("d", DoubleType), StructField("x", DoubleType)))
+    val schemaY = StructType(Seq(StructField("d", DoubleType), StructField("y", DoubleType)))
+    val left = Seq[java.lang.Double](Double.NaN, -0.0, 0.0, 1.5, null).zipWithIndex.map { case (d, i) => Row(d, i * 1.0) }
+    val right = Seq[java.lang.Double](0.0, Double.NaN, -0.0, 2.5, Double.NaN, null).zipWithIndex
+      .map { case (d, i) => Row(d, i * 10.0) }
+    val got = assertJoinFolds((schema, left), (schemaY, right))((l, r) => l.join(r, l("d") === r("d")))
+    // NaN twice, -0.0 and 0.0 with both zeros each
+    assert(got.size == 6)
+  }
+
+  test("null keys match nothing; under <=> they match each other") {
+    val schema = StructType(Seq(StructField("a", IntegerType), StructField("b", StringType), StructField("x", DoubleType)))
+    def rows(n: Int, salt: Int) = (0 until n).map(i => Row(
+      if (i % 4 == 1) null else java.lang.Integer.valueOf(i % 5),
+      if (i % 3 == 2) null else s"b${i % 2}", i * 1.0 + salt))
+    val (left, right) = ((schema, rows(20, 0)), (schema, rows(14, 100)))
+    val got = assertJoinFolds(left, right)((l, r) => l.join(r, l("a") === r("a") && l("b") === r("b")))
+    assert(got.nonEmpty && got.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    val safe = assertJoinFolds(left, right)((l, r) => l.join(r, l("a") <=> r("a") && l("b") === r("b")))
+    assert(safe.exists(_.isNullAt(0)))
+  }
+
+  test("a many-to-many join within its inputs' row count folds") {
+    // a×2 ⋈ a×2, b ⋈ b, c×2 ⋈ c: 7 pairs from 10 rows
+    val got = assertJoinFolds((keyed, Seq("a", "a", "b", "c", "c", "d").zipWithIndex.map { case (k, i) => Row(k, i * 1.0) }),
+      (keyedY, Seq("c", "a", "b", "a").zipWithIndex.map { case (k, i) => Row(k, i * 1.0) }))(_.join(_, "k"))
+    assert(got.map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))) ==
+      Seq(("a", 0.0, 1.0), ("a", 0.0, 3.0), ("a", 1.0, 1.0), ("a", 1.0, 3.0), ("b", 2.0, 2.0),
+        ("c", 3.0, 0.0), ("c", 4.0, 0.0)))
+  }
+
+  test("a residual non-equi condition is evaluated per key-matched pair") {
+    // 24 key-matched pairs from 24 rows, 17 of them kept
+    val got = assertJoinFolds((keyed, (0 until 12).map(i => Row(s"g${i % 6}", i * 1.0))),
+      (keyedY, (0 until 12).map(i => Row(s"g${i % 6}", i * 1.5))))((l, r) =>
+      l.join(r, l("k") === r("k") && (l("x") < r("y") || r("y").isNull)))
+    assert(got.size == 17 && got.forall(r => r.getDouble(1) < r.getDouble(3)))
+  }
+
+  test("outer, semi, anti, cross, RDD-side and row-multiplying joins stay") {
+    val left = (0 until 12).map(i => Row(s"k${i % 4}", i * 1.0))
+    val (l, lDistributed) = frames(keyed, left)
+    val (r, rDistributed) = frames(keyedY, (0 until 6).map(i => Row(s"k${i % 3}", i * 2.0)))
+    val (wide, _) = frames(keyedY, (0 until 4).map(i => Row("k0", i * 1.0)))
+    val (narrow, _) = frames(keyed, (0 until 4).map(i => Row("k0", i * 3.0)))
+    val kept = Seq(
+      "left outer" -> l.join(r, Seq("k"), "left_outer"),
+      "left semi" -> l.join(r, Seq("k"), "left_semi"),
+      "left anti" -> l.join(r, Seq("k"), "left_anti"),
+      "cross" -> l.crossJoin(r),
+      "RDD-backed right side" -> l.join(rDistributed, "k"),
+      "RDD-backed left side" -> lDistributed.join(r, "k"),
+      // 16 pairs from 8 rows
+      "many-to-many past its inputs" -> narrow.join(wide, "k"))
+    kept.foreach { case (what, q) =>
+      assert(hasJoin(q), s"$what folded:\n${q.queryExecution.optimizedPlan}")
+      q.collect()
     }
   }
 }

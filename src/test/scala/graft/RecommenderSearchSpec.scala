@@ -189,6 +189,15 @@ class RecommenderSearchSpec extends SparkSpec {
       profiled = Some((pdf, profile))).getOrElse(fail(s"$desc did not replay"))
   }
 
+  test("joinOnKey renames a colliding right column to <name>__y") {
+    val left = Seq(("a", 1.0, 10.0), ("b", 2.0, 20.0), ("d", 4.0, 40.0)).toDF("name", "v", "w")
+    val right = Seq(("b", 5.0), ("a", 6.0), ("c", 7.0)).toDF("name", "v")
+    val (joined, cols) = Recommender.joinOnKey(Seq("name"))(left, right, Seq("v"))
+    assert(cols == Seq("v__y"))
+    assert(joined.columns.toSeq == Seq("name", "v", "w", "v__y"))
+    assert(joined.select("name", "v", "v__y").collect().toSet == Set(Row("a", 1.0, 6.0), Row("b", 2.0, 5.0)))
+  }
+
   test("a search keeps the caller's cache and carries only the returned charts' channel frames") {
     val (pdf, profile) = Profiler.profile(fixture)
     def search(df: DataFrame) = Recommender.recommend(df, profile, spark,

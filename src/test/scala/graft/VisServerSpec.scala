@@ -356,12 +356,17 @@ class VisServerSpec extends SparkSpec {
     }
   }
 
-  test("a scatter + PCA /vis/search on a 400-row sheet runs no join") {
+  /** A 400-row sheet: a key, a nominal tier and four doubles. */
+  private lazy val sheet400 = {
     val body = (1 to 400).map { i =>
       s"""["item$i", "${Seq("gold", "silver", "bronze")(i % 3)}", ${i * 1.5},
          | ${math.sin(i * 0.1) * 40 + 50}, ${(i % 9) * 2.0}, ${math.sqrt(i)}]""".stripMargin
     }.mkString("[", ",", "]")
-    postOk("/vis/csv", s"""{"headers": ["name","tier","price","cost","size","weight"], "body": $body}""")
+    s"""{"headers": ["name","tier","price","cost","size","weight"], "body": $body}"""
+  }
+
+  test("a scatter + PCA /vis/search on a 400-row sheet runs no join") {
+    postOk("/vis/csv", sheet400)
     var search: JsonNode = null
     var plans = Seq.empty[LogicalPlan]
     val jobs = jobsOf {
@@ -380,6 +385,26 @@ class VisServerSpec extends SparkSpec {
     // T's row_number window over the sheet
     assert(jobs.unranked.isEmpty, s"${jobs.unranked.size} of ${jobs.all.size} jobs outside a rank window:\n" +
       plans.filter(p => p.exists(_.isInstanceOf[Aggregate]) && !p.exists(_.isInstanceOf[Window])).mkString("\n"))
+  }
+
+  test("xy + color rebuilds on the 400-row sheet run no job outside a rank window") {
+    postOk("/vis/csv", sheet400)
+    val search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""")
+    val scatters = search.get("vislist").elements().asScalaAll
+      .filter(_.get("channels").fieldNames().asScala.toSet == Set("xy", "color"))
+    // a channel that ranks a column reads the rank T's window over the
+    // sheet, which runs as Spark jobs; every other one is driver-local
+    def ranks(chart: JsonNode): Boolean = chart.get("lineages").elements().asScalaAll
+      .exists(l => Lineage.fromJson(l.asText()).exists(_.op == "rank"))
+    assert(scatters.exists(!ranks(_)), "the search returned no rank-free xy + color scatter")
+    scatters.foreach { chart =>
+      var rebuilt: JsonNode = null
+      val jobs = jobsOf { rebuilt = postOk("/vis/addV", rebuildBody(chart)) }
+      // the key join of the two channel frames folds on the driver
+      val ran = if (ranks(chart)) jobs.unranked else jobs.all
+      assert(ran.isEmpty, s"the rebuild of ${chart.get("signature").asText()} ran ${ran.size} Spark jobs")
+      assert(rowSet(rebuilt.get("data")) == rowSet(chart.get("data")))
+    }
   }
 
   /** Every Spark job `body` runs, by the SQL execution that submitted
