@@ -41,84 +41,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 8–13 each had one).
   */
 object Bench {
-  private[graft] val headline: Seq[String] = Seq(
-    "q1_pricing_summary", "q_select_numeric", "q_rowwise_sum",
-    "q_minmax_normalize", "q_histogram2d", "q_rank_first", "q_nominalize",
-    "q_sum_bar", "q_count_bar", "q_topk_per_group", "q_dedup_distinct",
-    "q_join_enrich", "q_profile_stats",
-    "q_coret_pca", "q_coret_kmeans",
-    "q_text_tokens", "q_text_quality", "q_text_fingerprint", "q_text_langid",
-    "q_text_simhash", "q_dedup_exact_docs", "q_dedup_minhash_lsh",
-    "q_dedup_simhash", "q_embed_norm", "q_sim_bruteforce_topk",
-    "q_multimodal_meta", "q_events_window",
-    // curation family (round 6): repetition profiling, vocab top-k,
-    // contamination screening, as-of enrichment
-    "q_text_repetition", "q_vocab_topk", "q_contamination", "q_events_asof",
-    "q_text_chunks",
-    // round 7: shard packing (distributed prefix sum), boilerplate
-    // strip, corpus semantic clustering, binned range join, Bloom
-    // incremental dedup, corpus-LM rare-token scoring
-    "q_shard_pack", "q_strip_boilerplate", "q_embed_cluster",
-    "q_events_range_join", "q_dedup_incremental", "q_text_rare_tokens",
-    "q_dedup_semantic",
-    // real JDK codecs: PNG render+decode round-trip, WAV decode,
-    // AVI container walk + raw-DIB frame sampling
-    "q_image_histogram", "q_audio_decode", "q_video_frames",
-    // product-quantization ANN: 4 subspace codebooks, ADC scan, re-rank
-    "q_sim_pq_topk",
-    // distilled quality model: pinned normal equations + literal-weight scan
-    "q_quality_model",
-    // BPE induction: sample-fit merges + literal-table encode scan
-    "q_bpe_tokenize",
-    // corpus-LM scoring: broadcast bigram tables, pinned per-doc mean
-    "q_lm_score",
-    // CCNet perplexity tertiles: min-rank cut, no global window
-    "q_lm_buckets",
-    // IVF-PQ: residual codes + probed-list ADC, broadcast everything
-    "q_sim_ivfpq_topk",
-    // temperature mixing: one range shuffle + broadcast offsets
-    "q_sample_temperature",
-    // ExactSubstr span dedup: hash-keyed span agg, no raw-text shuffle
-    "q_dedup_spans",
-    // UniMax waterfill: driver alloc + one range shuffle
-    "q_sample_unimax",
-    // DSIR: broadcast bucket tables, pinned per-doc ratio mean
-    "q_dsir_weights",
-    // BM25: broadcast query terms cut the corpus scan, pinned term sum
-    "q_bm25_topk",
-    // exact percentiles: distinct-value prefix sums, no global sort
-    "q_profile_quantiles",
-    // distributed Lloyd: expression scan + (cluster,dim) pinned agg
-    "q_kmeans_refine",
-    // split labeling: one hash + literal CASE, shuffle-free
-    "q_split_assign",
-    // round 8: Gopher/C4 rule scans (shuffle-free projections),
-    // per-domain cap (map-side WindowGroupLimit), int8 quantization
-    // (one-pass min/max fit + literal-scale encode scan)
-    "q_gopher_quality", "q_c4_clean", "q_domain_cap", "q_embed_int8",
-    // exact-length training windows via the distributed prefix sum
-    "q_pack_sequences",
-    // perceptual image dedup: real-codec dHash + hash-equality groupBy
-    "q_image_dhash",
-    // composed curation flow: clean → gate → dedup → cap → split
-    "q_corpus_curate",
-    // z-order layout: morton key + range shuffle + local sort
-    "q_zorder_key",
-    // global first-occurrence line dedup: hash-keyed winner agg +
-    // full-triple equi-join (no hot-line reducer)
-    "q_dedup_lines",
-    // crawl-vs-corpus near-dedup: cross-side band join, no self-join
-    "q_dedup_minhash_incr",
-    // sketch profiling: HLL + GK quantiles, one pass, fixed memory
-    "q_profile_sketch",
-    // priority sampling: one hash projection + map-side group limit
-    "q_sample_priority",
-    // span decontamination: broadcast probe grams, hit-only rebuild
-    "q_decontaminate")
-  // round-13 additions q_drift_tv / q_oov_rate stay OUT of the pinned
-  // headline (the contract line is a byte-budgeted driver artifact —
-  // BenchContractSpec; precedent: no round-12 op joined either); their
-  // medians are recorded in BASELINE.md.
+  /** The [[Query.Headline]] entries' names, in declaration order. The
+    * contract line is a byte-budgeted driver artifact: BenchContractSpec
+    * fails when the headline outgrows it. */
+  private[graft] val headline: Seq[String] =
+    SparkEntry.registry.filter(_.roles(Query.Headline)).map(_.name)
 
   def main(args: Array[String]): Unit = {
     // FIRST thing in main: the external-load sample must precede
@@ -195,7 +122,7 @@ object Bench {
     val priorMedians = loadPriorMedians(sfDir)
     if (priorMedians.nonEmpty) System.err.println(
       s"[bench-diag] prior medians loaded (${priorMedians.size} queries) — 3x re-run adjudication armed")
-    val results = headline.filter(all.contains).map { name =>
+    val results = headline.map { name =>
       // min of 2 runs (3 when the first two are both >1s — the slow
       // queries dominate the total, so they get the extra sample):
       // the first run pays whole-stage-codegen compilation, which a

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query._
 import graft.operators.CoreT
 import graft.sources.Tables
 
@@ -10,7 +11,7 @@ import graft.sources.Tables
   *
   * ALL seven core fits — DBSCAN, KMeans, PCA, MDS, t-SNE, UMAP, LDA —
   * are DuckDB-value-exact: deterministic fits replayed bit-for-bit
-  * (see [[oracles]], [[TsneOracle]], [[UmapOracle]], [[LdaOracle]] —
+  * (see [[entries]], [[TsneOracle]], [[UmapOracle]], [[LdaOracle]] —
   * exp/ln/pow/digamma go through [[graft.functions.MirrorMath]],
   * which both engines evaluate identically).
   *
@@ -18,74 +19,6 @@ import graft.sources.Tables
   * sanitized to snake_case where parquet forbids spaces.
   */
 object MLQueries {
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_coret_pca" -> ((s, dir) => {
-      CoreT.pca(Tables.lineitem(s, dir),
-        features = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-        carry = Seq("l_orderkey", "l_linenumber")).get
-    }),
-    "q_coret_kmeans" -> ((s, dir) => {
-      // fitCap pinned to 2000 so the oracle's fixed-iteration Lloyd
-      // replay (ordered folds over the sample lists) stays cheap at
-      // gate scale; the operator default stays 50000
-      CoreT.kmeans(Tables.lineitem(s, dir),
-        features = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-        carry = Seq("l_orderkey", "l_linenumber"), fitCap = 2000).get
-        .withColumnRenamed("Category by KMeans", "category_kmeans")
-    }),
-    "q_coret_lda" -> ((s, dir) => {
-      // key-bounded input (dbscan's gate bounds the same way, and the
-      // reference itself caps sources at 400 rows): the oracle replays
-      // all 10 VB iterations × 30 E-step sweeps PER DOC, so the gate
-      // runs at chart scale while the operator stays unbounded
-      CoreT.lda(Tables.part(s, dir).where(col("p_partkey") <= LdaOracle.GateKeyBound),
-        features = LdaOracle.GateFeatures,
-        carry = Seq("p_partkey")).get
-        .withColumnRenamed("Category by LDA", "category_lda")
-    }),
-    "q_coret_dbscan" -> ((s, dir) => {
-      // key-bounded input (chart-feeder scale, like the reference's
-      // 400-row cap): keeps the oracle's transitive closure O(bound²)
-      // at every scale factor; the operator itself is unbounded
-      CoreT.dbscan(Tables.part(s, dir).where(col("p_partkey") <= 2000),
-        features = Seq("p_size", "p_retailprice"),
-        carry = Seq("p_partkey")).get
-        .withColumnRenamed("Category by DBSCAN", "category_dbscan")
-    }),
-    "q_coret_tsne" -> ((s, dir) => {
-      // key-bounded input (TsneOracle.GateKeyBound, round 8): the
-      // oracle's GD fold is O(n²) per phase × 2000 phases, so the
-      // bound is what keeps its replay (~18 s at 64 rows vs 45 s at
-      // sf0.01's full 100) inside the gate's DuckDB budget — and
-      // makes it sf-independent; the operator itself is unbounded
-      // (up to its documented 2000-row driver cap)
-      CoreT.tsne(Tables.supplier(s, dir).where(col("s_suppkey") <= TsneOracle.GateKeyBound),
-        features = Seq("s_nationkey", "s_acctbal"),
-        carry = Seq("s_suppkey")).get
-        .withColumnRenamed("tSNE-1", "tsne_1").withColumnRenamed("tSNE-2", "tsne_2")
-    }),
-    "q_coret_mds" -> ((s, dir) => {
-      CoreT.mds(Tables.supplier(s, dir),
-        features = Seq("s_nationkey", "s_acctbal"),
-        carry = Seq("s_suppkey")).get
-        .withColumnRenamed("MDS-1", "mds_1").withColumnRenamed("MDS-2", "mds_2")
-    }),
-    "q_coret_umap" -> ((s, dir) => {
-      // epochs pinned to UmapOracle.GateEpochs (30 since round 8 —
-      // the 150-epoch replay alone cost 321s of DuckDB time and the
-      // driver's correctness window expired two rounds running; see
-      // the GateEpochs scaladoc for the budget math) so the oracle's
-      // per-event replay fold stays affordable (like kmeans pins
-      // fitCap=2000); the operator default stays 300. The gate checks
-      // replay EXACTNESS; UmapQualitySpec pins neighborhood
-      // preservation at the 300-epoch default.
-      CoreT.umap(Tables.supplier(s, dir).where(col("s_suppkey") <= UmapOracle.GateKeyBound),
-        features = Seq("s_nationkey", "s_acctbal"),
-        carry = Seq("s_suppkey"), epochs = UmapOracle.GateEpochs).get
-        .withColumnRenamed("UMAP-1", "umap_1").withColumnRenamed("UMAP-2", "umap_2")
-    })
-  )
 
   /** q_coret_kmeans oracle: a bit-exact DuckDB replay of the
     * deterministic Lloyd fit. The fit sample is the 2000 rows with
@@ -324,7 +257,7 @@ object MLQueries {
        |FROM lm2""".stripMargin
   }
 
-  /** SQL-expressible core transforms: DBSCAN with canonical
+  /** The core transforms' oracles: DBSCAN with canonical
     * min-core-key labels is pure ε-graph set logic — neighbor counts,
     * connected components (recursive CTE), min-label border assignment
     * — over the same minmax normalization and fixed-order squared
@@ -336,25 +269,43 @@ object MLQueries {
     * draws, closed-form schedule, MirrorMath kernel — at the gate's
     * pinned 50 epochs ([[UmapOracle]]); LDA replays the deterministic
     * VB fit — ranks, all EM iterations, labels — ([[LdaOracle]]). */
-  val oracles: Map[String, String] = Map(
-    "q_coret_kmeans" -> kmeansOracle,
-    "q_coret_pca" -> pcaOracle,
-    "q_coret_mds" -> mdsOracle,
-    "q_coret_tsne" -> TsneOracle.sql,
-    "q_coret_umap" -> UmapOracle.sql,
-    "q_coret_lda" -> LdaOracle.sql,
-    // Core-point components run over grid-CELL representatives, not the
-    // raw ε-graph: cells of side 0.17 have diagonal ≤ 0.2404 < ε = 0.25,
-    // so core points sharing a cell are pairwise ε-reachable (a clique),
-    // and the ε-components of core points equal the components of the
-    // cell graph (cells linked iff some cross-cell core pair is
-    // ε-close). Labels are unchanged — min core key per component is
-    // min over the component's cells of each cell's min key. This cut
-    // the recursive closure from ~10^6 core-pair rows (125-290 s — it
-    // blew the driver's round-7 correctness window) to ~dozens of cell
-    // rows (3.6 s), bit-identical on the gate input and on 12
-    // randomized multi-cluster/border/noise property trials.
-    "q_coret_dbscan" ->
+  val entries: Seq[Query] = Seq(
+    Query("q_coret_pca", Headline)(pcaOracle) { (s, dir) =>
+      CoreT.pca(Tables.lineitem(s, dir),
+        features = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
+        carry = Seq("l_orderkey", "l_linenumber")).get
+    },
+    Query("q_coret_kmeans", Headline)(kmeansOracle) { (s, dir) =>
+      // fitCap pinned to 2000 so the oracle's fixed-iteration Lloyd
+      // replay (ordered folds over the sample lists) stays cheap at
+      // gate scale; the operator default stays 50000
+      CoreT.kmeans(Tables.lineitem(s, dir),
+        features = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
+        carry = Seq("l_orderkey", "l_linenumber"), fitCap = 2000).get
+        .withColumnRenamed("Category by KMeans", "category_kmeans")
+    },
+    Query("q_coret_lda", DumpFirst)(LdaOracle.sql) { (s, dir) =>
+      // key-bounded input (dbscan's gate bounds the same way, and the
+      // reference itself caps sources at 400 rows): the oracle replays
+      // all 10 VB iterations × 30 E-step sweeps PER DOC, so the gate
+      // runs at chart scale while the operator stays unbounded
+      CoreT.lda(Tables.part(s, dir).where(col("p_partkey") <= LdaOracle.GateKeyBound),
+        features = LdaOracle.GateFeatures,
+        carry = Seq("p_partkey")).get
+        .withColumnRenamed("Category by LDA", "category_lda")
+    },
+    Query("q_coret_dbscan", DumpFirst)(
+      // Core-point components run over grid-CELL representatives, not the
+      // raw ε-graph: cells of side 0.17 have diagonal ≤ 0.2404 < ε = 0.25,
+      // so core points sharing a cell are pairwise ε-reachable (a clique),
+      // and the ε-components of core points equal the components of the
+      // cell graph (cells linked iff some cross-cell core pair is
+      // ε-close). Labels are unchanged — min core key per component is
+      // min over the component's cells of each cell's min key. This cut
+      // the recursive closure from ~10^6 core-pair rows (125-290 s — it
+      // blew the driver's round-7 correctness window) to ~dozens of cell
+      // rows (3.6 s), bit-identical on the gate input and on 12
+      // randomized multi-cluster/border/noise property trials.
       """WITH RECURSIVE
         |pts AS (SELECT p_partkey AS k, CAST(p_size AS DOUBLE) AS f1,
         |               CAST(p_retailprice AS DOUBLE) AS f2 FROM part
@@ -391,6 +342,46 @@ object MLQueries {
         |           GROUP BY e.ka)
         |SELECT n.k AS p_partkey,
         |  COALESCE(comp.lbl, border.lbl, -1) AS category_dbscan
-        |FROM n LEFT JOIN comp ON comp.id = n.k LEFT JOIN border ON border.k = n.k""".stripMargin
+        |FROM n LEFT JOIN comp ON comp.id = n.k LEFT JOIN border ON border.k = n.k""".stripMargin) { (s, dir) =>
+      // key-bounded input (chart-feeder scale, like the reference's
+      // 400-row cap): keeps the oracle's transitive closure O(bound²)
+      // at every scale factor; the operator itself is unbounded
+      CoreT.dbscan(Tables.part(s, dir).where(col("p_partkey") <= 2000),
+        features = Seq("p_size", "p_retailprice"),
+        carry = Seq("p_partkey")).get
+        .withColumnRenamed("Category by DBSCAN", "category_dbscan")
+    },
+    Query("q_coret_tsne", DumpFirst)(TsneOracle.sql) { (s, dir) =>
+      // key-bounded input (TsneOracle.GateKeyBound, round 8): the
+      // oracle's GD fold is O(n²) per phase × 2000 phases, so the
+      // bound is what keeps its replay (~18 s at 64 rows vs 45 s at
+      // sf0.01's full 100) inside the gate's DuckDB budget — and
+      // makes it sf-independent; the operator itself is unbounded
+      // (up to its documented 2000-row driver cap)
+      CoreT.tsne(Tables.supplier(s, dir).where(col("s_suppkey") <= TsneOracle.GateKeyBound),
+        features = Seq("s_nationkey", "s_acctbal"),
+        carry = Seq("s_suppkey")).get
+        .withColumnRenamed("tSNE-1", "tsne_1").withColumnRenamed("tSNE-2", "tsne_2")
+    },
+    Query("q_coret_mds")(mdsOracle) { (s, dir) =>
+      CoreT.mds(Tables.supplier(s, dir),
+        features = Seq("s_nationkey", "s_acctbal"),
+        carry = Seq("s_suppkey")).get
+        .withColumnRenamed("MDS-1", "mds_1").withColumnRenamed("MDS-2", "mds_2")
+    },
+    Query("q_coret_umap", DumpFirst)(UmapOracle.sql) { (s, dir) =>
+      // epochs pinned to UmapOracle.GateEpochs (30 since round 8 —
+      // the 150-epoch replay alone cost 321s of DuckDB time and the
+      // driver's correctness window expired two rounds running; see
+      // the GateEpochs scaladoc for the budget math) so the oracle's
+      // per-event replay fold stays affordable (like kmeans pins
+      // fitCap=2000); the operator default stays 300. The gate checks
+      // replay EXACTNESS; UmapQualitySpec pins neighborhood
+      // preservation at the 300-epoch default.
+      CoreT.umap(Tables.supplier(s, dir).where(col("s_suppkey") <= UmapOracle.GateKeyBound),
+        features = Seq("s_nationkey", "s_acctbal"),
+        carry = Seq("s_suppkey"), epochs = UmapOracle.GateEpochs).get
+        .withColumnRenamed("UMAP-1", "umap_1").withColumnRenamed("UMAP-2", "umap_2")
+    }
   )
 }

@@ -88,7 +88,7 @@ object Measure {
     val all = SparkEntry.queries
     val headline = what == "headline"
     val names =
-      if (headline) Bench.headline.filter(all.contains)
+      if (headline) Bench.headline
       else what.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     names.foreach(q => require(all.contains(q), s"unknown query '$q'"))
     val report: String => Unit = if (headline) System.err.println else println

@@ -25,14 +25,22 @@ class GateSchemaSpec extends SparkSpec {
     case _ => false
   }
 
-  test("every declared query has an oracle, and no oracle is orphaned") {
-    // a query without an oracle silently degrades to the driver's
-    // rows-only check; an oracle without a query is dead SQL — both
-    // are drift, so the two key sets must match exactly
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries with no oracle: ${(q -- o).toSeq.sorted}")
-    assert((o -- q).isEmpty, s"orphaned oracles: ${(o -- q).toSeq.sorted}")
+  test("registry names are unique, and no oracle is blank") {
+    // each Query pairs its builder with its oracle, so neither can be
+    // orphaned; a repeated name would silently drop an entry from the
+    // name-keyed maps, and a blank oracle gates nothing
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"names declared twice: ${dups.toSeq.sorted}")
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracles: $blank")
+  }
+
+  test("Verify dumps the six costliest first, then the rest in declaration order") {
+    val order = Verify.dumpOrder(SparkEntry.registry).map(_.name)
+    val first = Set("q_recommend_charts", "q_coret_umap", "q_coret_tsne",
+      "q_coret_lda", "q_scagnostics", "q_coret_dbscan")
+    assert(order.take(first.size).toSet == first)
+    assert(order.drop(first.size) == SparkEntry.registry.map(_.name).filterNot(first))
   }
 
   test("every SparkEntry query emits flat primitive columns only") {

@@ -290,7 +290,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("BPE encode is a single shuffle-free projection over the scan") {
-    val df = ExtQueries.queries("q_bpe_tokenize")(spark, sfDir)
+    val df = SparkEntry.queries("q_bpe_tokenize")(spark, sfDir)
     df.collect()
     val plans = dedupByIdentity(flatten(df.queryExecution.executedPlan))
     // train happened driver-side before the plan was built; the encode
@@ -346,7 +346,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("quality-model scoring is literal weights over the cached feature frame — no refit") {
-    val df = ExtQueries.queries("q_quality_model")(spark, sfDir)
+    val df = SparkEntry.queries("q_quality_model")(spark, sfDir)
     df.collect()
     val plans = dedupByIdentity(flatten(df.queryExecution.executedPlan))
     // the scoring plan reads the persisted feature frame; the Gram

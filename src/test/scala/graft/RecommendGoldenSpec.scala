@@ -24,7 +24,7 @@ package graft
 class RecommendGoldenSpec extends SparkSpec {
 
   test("golden: q_recommend_charts gate fixture — exact 4-column row set") {
-    val df = AssemblyQueries.queries("q_recommend_charts")(spark, "/root/testdata/sf0.01")
+    val df = SparkEntry.queries("q_recommend_charts")(spark, "/root/testdata/sf0.01")
     val got = df.collect().map(r =>
       (r.getString(0), r.getDouble(1), r.getString(2), r.getString(3))).toSet
     val expected = RecommendGolden.rows.toSet

@@ -72,7 +72,7 @@ class SketchProfileSpec extends SparkSpec {
 
   test("gate pin: sf0.01 fixture HLL estimates match the DuckDB oracle's VALUES") {
     // The q_profile_sketch oracle pins these three HLL++ estimates as
-    // fixture constants (RelationalQueries.oracles). This spec is the
+    // fixture constants (its RelationalQueries entry). This spec is the
     // in-repo twin: it recomputes them from the real gate fixture at
     // TWO partition counts and asserts both runs land on the pinned
     // values — so an approx_count_distinct behavior change, a fixture

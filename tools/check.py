@@ -12,12 +12,6 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-# Oracles that pin fixture-specific constants (VALUES literals measured
-# on the sf0.01 gate fixture — the driver's correctness sf). Running the
-# gate at any other scale would report a spurious value mismatch, so off
-# the sf0.01 fixture these are skipped with a loud banner instead.
-PINNED_SF001 = {"q_recommend_charts", "q_profile_sketch"}
-
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -82,6 +76,12 @@ def main(sf_dir, out_dir):
               f"failed={mf['failed']} {mf.get('failed_queries', [])}")
         if mf["attempted"] == 0:
             print("FATAL: manifest says 0 queries attempted"); return 1
+        # oracles that pin values measured on the sf0.01 gate fixture:
+        # at any other scale they would report a spurious mismatch
+        if "pinned_sf001" not in mf:
+            print("FATAL: manifest.json has no pinned_sf001 — a dump older "
+                  "than the registry's roles; re-run Verify"); return 1
+        pinned = set(mf["pinned_sf001"])
     except FileNotFoundError:
         print("FATAL: no manifest.json — Verify did not complete"); return 1
     con = duckdb.connect()
@@ -96,7 +96,7 @@ def main(sf_dir, out_dir):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"{name:28s} MISSING spark output"); n_bad += 1; continue
-        if name in PINNED_SF001 and not on_gate_fixture:
+        if name in pinned and not on_gate_fixture:
             # counted as SKIPPED, not ok: an off-fixture sweep must not
             # report pinned-oracle queries as verified when they never ran
             print(f"{name:28s} SKIP — oracle pins sf0.01 fixture values; "
