@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 
 import graft.{Engine, EngineConfig}
 import graft.operators.TStep
+import graft.plans.Recommender
 import graft.plans.Recommendation.ChannelFrames
 import scala.jdk.CollectionConverters._
 
@@ -56,9 +57,11 @@ import scala.jdk.CollectionConverters._
   * folds the order-free aggregates over it and the key join of two
   * channel frames built from it. A refine that stays on that route (an
   * /vis/addT or /vis/addV preview, a `vtype` + `channels` rebuild of a
-  * scatter) runs no Spark job; a lineage through a fit that emits an
-  * RDD or a rank window, and a rebuild that sorts (`rel_line`) or sums
-  * doubles (`sum_bar`), still run jobs.
+  * scatter) runs no Spark action: its frame folds to a local relation,
+  * and the preview reads that relation's rows ([[Recommender.take]])
+  * with no SQL execution. A lineage through a fit that emits an RDD or
+  * a rank window, and a rebuild that sorts (`rel_line`) or sums doubles
+  * (`sum_bar`), still run jobs.
   * An RDD of external rows would be stat-less and re-converted by every
   * job.
   */
@@ -74,6 +77,14 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
   private def current(): Session =
     session.get().getOrElse(throw new IllegalStateException("POST /vis/csv first"))
 
+  // The JDK server writes a response's headers and its body as two
+  // segments. Without TCP_NODELAY, Nagle's algorithm holds the body
+  // until the client ACKs the headers, and a client that delays its ACK
+  // (40 ms on Linux loopback) adds that to every response. The server
+  // reads this property once, when its ServerConfig class loads, so it
+  // is set before the first HttpServer.create; an explicit
+  // -Dsun.net.httpserver.nodelay wins.
+  sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true")
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/vis/csv", handler(csv))
   server.createContext("/vis/search", handler(search))
@@ -259,7 +270,7 @@ final class VisServer(spark: SparkSession, cfg: EngineConfig = EngineConfig.defa
   private def putPreview(out: ObjectNode, frame: DataFrame, limit: Int = 400): Unit = {
     val cols = frame.columns
     val arr = out.putArray("data")
-    frame.limit(limit).collect().foreach { r =>
+    Recommender.take(frame, limit).foreach { r =>
       val o = arr.addObject()
       cols.zipWithIndex.foreach { case (c, i) => putAny(o, c, r.get(i)) }
     }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -76,6 +77,11 @@ object Recommendation {
   *    them an in-memory scan job;
   *  - scoring collects only the columns it scores, bounded by
   *    `maxChartRows`, so scoring cost is independent of table size;
+  *  - a bounded read of a driver-local frame ([[take]]: an xy sample,
+  *    a channel read, an `ord_line` or `ord_cat_line` series, an
+  *    incomplete read's chart data) runs no Spark action: it converts
+  *    the first rows of the frame's folded local relation, as
+  *    `limit(n).collect()` would return them;
   *  - each scatter xy candidate is read once (key + both columns, the
   *    first `maxChartRows` complete rows). CDM is a driver-side key
   *    lookup over the xy sample: it scores the labelled subset of the
@@ -203,10 +209,33 @@ object Recommender {
     (left.join(r2, key), rightCols.map(c => renames.getOrElse(c, c)))
   }
 
-  /** A frame whose rows already sit on the driver: a local relation, or
-    * a plan Catalyst folds into one (a project, filter or limit over it). */
-  private def driverLocal(df: DataFrame): Boolean =
-    df.isLocal || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  /** The rows of a frame that already sit on the driver: its optimized
+    * plan is a batch local relation, or folds into one (a project,
+    * filter or limit over it; what [[FoldLocalAggregate]] folds). */
+  private def localRelation(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if !l.isStreaming => Some(l)
+      case _ => None
+    }
+
+  private def driverLocal(df: DataFrame): Boolean = df.isLocal || localRelation(df).isDefined
+
+  /** `df.limit(n).collect()`, with no Spark action when `df` is
+    * driver-local: the first `n` rows of its local relation, converted
+    * as `collect` converts them (each row carries `df.schema`). Spark
+    * folds a `Limit` over a local relation into the same first `n`
+    * rows, so only the fixed cost of an action goes: planning the
+    * limit, generating its projections, the SQL execution. Any other
+    * plan (a file scan, an RDD, a `Sort`, which Spark does not fold)
+    * runs as `df.limit(n).collect()`. */
+  private[graft] def take(df: DataFrame, n: Int): Array[Row] = localRelation(df) match {
+    case Some(local) =>
+      // java.time or java.sql values as the active session's conf says,
+      // which is what `collect` reads too
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      local.data.iterator.take(n).map(toRow(_).asInstanceOf[Row]).toArray
+    case None => df.limit(n).collect()
+  }
 
   /** @param tlist restrict core transforms considered for channels —
     *        the /vis/search "tlist" parameter (main.py:91-94). The four
@@ -397,10 +426,10 @@ object Recommender {
     final case class XySample(keys: Array[Row], pts: Array[(Double, Double)])
     def keyOf(r: Row): Row = Row.fromSeq(key.indices.map(r.get))
     def sampleXy(xy: Executed): XySample = {
-      val rows = xy.df.select(key.map(col) ++ Seq(
+      val rows = take(xy.df.select(key.map(col) ++ Seq(
           col(xy.outCols(0)).cast("double").as("__x"),
           col(xy.outCols(1)).cast("double").as("__y")): _*)
-        .na.drop(Seq("__x", "__y")).limit(maxChartRows).collect()
+        .na.drop(Seq("__x", "__y")), maxChartRows)
       XySample(rows.map(keyOf),
         rows.map(r => (r.getDouble(key.size), r.getDouble(key.size + 1))))
     }
@@ -431,8 +460,8 @@ object Recommender {
     def readFrame(ex: Executed): FrameRead = reads.getOrElseUpdate(ex, {
       val label =
         if (CoreT.decl(ex.coreT).channel == "cat") Seq(col(ex.outCols.head).cast("string")) else Nil
-      val rows = ex.df.select(key.map(col) ++ ex.outCols.map(col) ++ label: _*)
-        .limit(maxChartRows + 1).collect()
+      val rows = take(ex.df.select(key.map(col) ++ ex.outCols.map(col) ++ label: _*),
+        maxChartRows + 1)
       FrameRead(rows, rows.length <= maxChartRows)
     })
 
@@ -515,8 +544,8 @@ object Recommender {
       for (y <- ys.take(6)) {
         // prefer derived columns, cap series per chart (search.py:940-947)
         val series = y.outColsDerivedFirst.take(MaxLineNumInChart)
-        val rows = y.df.select(series.map(c => col(c).cast("double")): _*)
-          .na.drop().limit(maxChartRows).collect()
+        val rows = take(y.df.select(series.map(c => col(c).cast("double")): _*).na.drop(),
+          maxChartRows)
         if (rows.length >= 3) {
           val cols = series.indices.map(i => rows.map(_.getDouble(i)).toArray).toArray
           if (enabledTypes.contains("ord_line")) {
@@ -556,8 +585,8 @@ object Recommender {
       for (y <- catYs.take(3)) {
         def catLineScore(codes: Array[Double]): Double = lineScore(Seq(codes))
         if (enabledTypes.contains("ord_cat_line")) {
-          val labels = y.df.select(col(y.outCols.head).cast("string"))
-            .na.drop().limit(maxChartRows).collect().map(_.getString(0))
+          val labels = take(y.df.select(col(y.outCols.head).cast("string")).na.drop(),
+            maxChartRows).map(_.getString(0))
           if (labels.length >= 3) {
             scored += Scored("ord_cat_line", Map("y" -> y), catLineScore(codesOf(labels)))
           }
@@ -684,10 +713,9 @@ object Recommender {
             val (j, rc) = joinOnKey(key)(l, ex.df, ex.outCols)
             (j, acc ++ rc)
         }
-        joined.select((key ++ dataCols).distinct.map(col): _*)
-          .limit(maxRows).collect().map { r =>
-            r.schema.fieldNames.zip(r.toSeq).toMap
-          }.toSeq
+        take(joined.select((key ++ dataCols).distinct.map(col): _*), maxRows).map { r =>
+          r.schema.fieldNames.zip(r.toSeq).toMap
+        }.toSeq
       }
     ChartRec(c.chartType, channels, columns, c.score, c.signature, c.dedupKey, sample, lineages)
   }

@@ -6,11 +6,11 @@ import org.apache.spark.SpecBus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, Limit, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Limit, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
@@ -366,6 +366,74 @@ class RecommenderSearchSpec extends SparkSpec {
     }
   }
 
+  // ---- Recommender.take: a driver-local frame's rows without an action ----
+
+  /** Every column type a chart frame can carry; the doubles hold NaN,
+    * -0.0 and null. */
+  private val takeSchema = StructType(Seq(
+    StructField("s", StringType), StructField("d", DoubleType), StructField("i", IntegerType),
+    StructField("l", LongType), StructField("m", DecimalType(12, 3)), StructField("b", BooleanType),
+    StructField("day", DateType), StructField("ts", TimestampType), StructField("ntz", TimestampNTZType)))
+  private val takeRows = (0 until 12).map { r =>
+    val d = Seq[java.lang.Double](1.5, Double.NaN, -0.0, null, 0.0, -2.25)(r % 6)
+    Row(if (r == 3) null else s"v$r", d, r * 7 - 30, r.toLong << 33,
+      java.math.BigDecimal.valueOf(r * 1234567L - 5000000L, 3), r % 3 == 0,
+      java.sql.Date.valueOf(java.time.LocalDate.of(2020, 2, 27).plusDays(r)),
+      java.sql.Timestamp.valueOf(java.time.LocalDateTime.of(2021, 10, 31, 1, 30).plusMinutes(r * 97)),
+      java.time.LocalDateTime.of(1969, 12, 31, 23, 59, 59).plusSeconds(r * 3601L))
+  }
+
+  /** A row as its schema and its values, doubles by their bits. */
+  private def exact(r: Row): (StructType, Seq[Any]) = (r.schema, r.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case null => null
+    case v => (v.getClass.getName, v.toString)
+  })
+
+  /** `take(df, n)` equals `df.limit(n).collect()` row for row, in
+    * order, for four `n` below, at and above the row count; returns the
+    * query executions `take` ran. */
+  private def assertTakeTwin(df: DataFrame): Seq[QueryExecution] = {
+    val total = df.count().toInt
+    Seq(1, total / 2, total, total + 5).flatMap { n =>
+      var got = Array.empty[Row]
+      val ran = queryExecutionsOf { got = Recommender.take(df, n) }
+      assert(got.map(exact).toSeq == df.limit(n).collect().map(exact).toSeq, s"n = $n")
+      assert(got.forall(_.schema == df.schema))
+      ran
+    }
+  }
+
+  test("take of a local relation equals limit + collect and runs no query") {
+    val local = spark.createDataFrame(takeRows.asJava, takeSchema)
+    assert(assertTakeTwin(local).isEmpty)
+    // java.time values while the session asks for them
+    val java8 = "spark.sql.datetime.java8API.enabled"
+    spark.conf.set(java8, "true")
+    try {
+      assert(assertTakeTwin(local).isEmpty)
+      assert(Recommender.take(local, 1).head.get(6).isInstanceOf[java.time.LocalDate])
+    } finally spark.conf.unset(java8)
+  }
+
+  test("take of a project/filter chain over a local relation runs no query") {
+    val chain = spark.createDataFrame(takeRows.asJava, takeSchema)
+      .filter(col("i") > -20 && !col("b"))
+      .select(col("s"), (col("d") * 2).as("d2"), col("m"), col("ntz"), col("day"),
+        col("d").cast("string").as("ds"))
+    assert(chain.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(assertTakeTwin(chain).isEmpty)
+  }
+
+  test("take of an RDD frame or a local sort runs Spark's limit") {
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(takeRows, 3), takeSchema)
+    val sorted = spark.createDataFrame(takeRows.asJava, takeSchema).orderBy(col("l").desc)
+    Seq("an RDD" -> rdd, "a sort" -> sorted).foreach { case (what, df) =>
+      assert(!df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], what)
+      assert(assertTakeTwin(df).size == 4, what)
+    }
+  }
+
   /** The query executions `body` runs, once the listener bus drained. */
   private def queryExecutionsOf(body: => Unit): Seq[QueryExecution] = {
     val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
@@ -373,6 +441,7 @@ class RecommenderSearchSpec extends SparkSpec {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = qes.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    SpecBus.drain(spark.sparkContext) // an earlier action's event is not body's
     spark.listenerManager.register(listener)
     try body finally {
       SpecBus.drain(spark.sparkContext)

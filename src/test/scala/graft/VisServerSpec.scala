@@ -340,13 +340,13 @@ class VisServerSpec extends SparkSpec {
       .getOrElse(fail("the search returned no PCA channel"))
     // analyzed plans: a fit over the local sheet folds out of the
     // optimized plan (FoldLocalAggregate), but its query still
-    // aggregates, and a reused frame's preview does not
+    // aggregates. A reused frame is driver-local, so its preview runs
+    // no query at all
     var rows = Seq.empty[String]
     val reused = plansOf({ rows = rowSet(postOk("/vis/addV", addVBody(lineage, coreT)).get("data")) },
       _.analyzed)
     assert(rows.size == 40)
-    assert(reused.nonEmpty, "the preview ran no query")
-    assert(!reused.exists(hasAggregate), s"a reused frame ran a fit:\n${reused.mkString("\n")}")
+    assert(reused.isEmpty, s"a reused frame's preview ran ${reused.size} queries:\n${reused.mkString("\n")}")
     withReplayServer(csvBody) { replay =>
       var replayed = Seq.empty[String]
       val fitted = plansOf({ replayed = rowSet(replay("/vis/addV", addVBody(lineage, coreT)).get("data")) },
@@ -405,6 +405,48 @@ class VisServerSpec extends SparkSpec {
       assert(ran.isEmpty, s"the rebuild of ${chart.get("signature").asText()} ran ${ran.size} Spark jobs")
       assert(rowSet(rebuilt.get("data")) == rowSet(chart.get("data")))
     }
+  }
+
+  test("refines on the /vis/csv sheet run no query: returned addV, addT, rebuild") {
+    postOk("/vis/csv", sheet400)
+    val search = postOk("/vis/search", """{"charts": ["scatter"], "tlist": ["pca"]}""")
+    // a lineage that ranks a column reads the rank T's window, which
+    // Spark runs; every other one folds to a local relation
+    def rankFree(lineage: String) = !Lineage.fromJson(lineage).exists(_.op == "rank")
+    val chart = search.get("vislist").elements().asScalaAll.find { c =>
+      c.get("channels").fieldNames().asScala.toSet == Set("xy", "color") &&
+        c.get("lineages").elements().asScalaAll.forall(l => rankFree(l.asText()))
+    }.getOrElse(fail("the search returned no rank-free xy + color scatter"))
+    val (_, _, coreT, lineage) = returnedChannels(search).find(c => c._3 == "pca" && rankFree(c._4))
+      .getOrElse(fail("the search returned no rank-free PCA channel"))
+    val sel = Lineage.fromJson(lineage).lastOption.filter(_.op == "select").map(_.inCols.take(2))
+      .filter(_.size == 2).getOrElse(fail(s"$lineage closes in no select of two columns"))
+    val refines = Seq(
+      "addV" -> (() => postOk("/vis/addV", addVBody(lineage, coreT))),
+      "addT" -> (() => postOk("/vis/addT", s"""{"lineage": ${mapper.writeValueAsString(lineage)},
+        | "t": {"op": "sum", "incols": ${mapper.writeValueAsString(sel.asJava)}}}""".stripMargin)),
+      "rebuild" -> (() => postOk("/vis/addV", rebuildBody(chart))))
+    refines.foreach { case (what, refine) =>
+      var resp: JsonNode = null
+      val ran = plansOf { resp = refine() }
+      assert(ran.isEmpty, s"$what ran ${ran.size} queries:\n${ran.mkString("\n")}")
+      assert(resp.get("data").size() > 0, what)
+    }
+  }
+
+  test("small /vis/addT responses take no delayed-ACK wait (TCP_NODELAY)") {
+    postOk("/vis/csv", csvBody)
+    val body = """{"lineage": "[]", "t": {"op": "sum", "incols": ["price", "cost"]}}"""
+    (1 to 5).foreach(_ => postOk("/vis/addT", body))
+    val walls = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      postOk("/vis/addT", body)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    // Nagle holding the body behind the headers until the client's
+    // delayed ACK puts every response at 40 ms or more
+    val median = (walls(9) + walls(10)) / 2
+    assert(median < 30, f"median $median%.1f ms over ${walls.map(w => f"$w%.0f").mkString(" ")}")
   }
 
   /** Every Spark job `body` runs, by the SQL execution that submitted
